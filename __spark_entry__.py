@@ -21,16 +21,25 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship on /root/testdata/sf0.001 (driver checks rows>0): the full
-    AutoML spine — joined+aggregated reader -> transmogrify -> sanity check
-    -> CV model selection -> scores (the reference's README flow)."""
+    """Flagship on the sf0.001 testdata (the contract checks rows>0): the
+    full AutoML spine — joined+aggregated reader -> transmogrify -> sanity
+    check -> CV model selection -> scores (the reference's README flow).
+    The caller's session first gets the engine session confs."""
     from transmogrifai_spark.flagship import entry_frame
-    return entry_frame(spark)
+    from transmogrifai_spark.session import apply_engine_confs
+    return entry_frame(apply_engine_confs(spark))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query; each applies the engine session confs to the
+    session it is handed before building its frame."""
     from transmogrifai_spark.driver_queries import SPARK_QUERIES
-    return dict(SPARK_QUERIES)
+    from transmogrifai_spark.session import apply_engine_confs
+
+    def engine_step(fn):
+        return lambda spark, sf_dir: fn(apply_engine_confs(spark), sf_dir)
+
+    return {name: engine_step(fn) for name, fn in SPARK_QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

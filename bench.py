@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the machine's core count). Prints ONE
+JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is executed with a count()/collect() action after a warm-up of the
@@ -16,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 # headline set: relational rollups, joins, event aggregation, LLM-pipeline
 # ops, streaming, and the full ML spine

@@ -234,6 +234,22 @@ def test_select_binary_model(spark, trainable):
     assert sel.fitted_model is not None
 
 
+def test_train_validation_split_select(spark, trainable):
+    """OpTrainValidationSplit: one key-hashed split instead of k folds;
+    the leaderboard ranks every candidate by holdout AuROC and the winner
+    is refit on the full frame."""
+    from transmogrifai_spark.ml.selectors import train_validation_split_select
+    cands = [("LogisticRegression", {"regParam": 0.01, "maxIter": 20}),
+             ("LogisticRegression", {"regParam": 10.0, "maxIter": 20})]
+    sel = train_validation_split_select(trainable, "fv", "y", "k",
+                                        candidates=cands)
+    metrics = [c.metric for c in sel.leaderboard]
+    assert len(metrics) == 2 and metrics == sorted(metrics, reverse=True)
+    assert sel.best_params == sel.leaderboard[0].params
+    assert sel.best_metric == metrics[0] > 0.8
+    assert sel.fitted_model.transform(trainable).count() == trainable.count()
+
+
 def test_model_insights_and_loco(spark, trainable):
     from pyspark.ml.classification import LogisticRegression
     from transmogrifai_spark.ml.insights import loco_linear, model_insights

@@ -64,6 +64,16 @@ def test_jaccard(spark):
         == pytest.approx(1 / 3)
 
 
+def test_ngram_set_similarity(spark):
+    df = spark.createDataFrame([("abcd", "bcde"), ("abc", ""), ("Abc", "abc")],
+                               "a string, b string")
+    got = [r["r"] for r in df.select(
+        TX.ngram_set_similarity(F.col("a"), F.col("b"), 2).alias("r")).collect()]
+    # {ab,bc,cd} vs {bc,cd,de}: 2 shared of 4; an empty side is 0.0;
+    # char n-grams are lowercased first
+    assert got == [pytest.approx(0.5), 0.0, 1.0]
+
+
 def test_email_parsing(spark):
     good = _one(spark, TX.email_domain(F.col("x")), "x string", ("bob@corp.io",))
     bad = _one(spark, TX.is_valid_email(F.col("x")), "x string", ("not-an-email",))
@@ -86,6 +96,18 @@ def test_time_periods(spark):
     assert (row["dom"], row["hod"], row["moy"]) == (15, 13, 3)
 
 
+def test_time_period_list_and_map(spark):
+    # 2024-03-15 13:45 UTC and 2024-12-01 00:00 UTC as epoch millis
+    ms = [1710510300000, 1733011200000]
+    df = spark.createDataFrame([(ms, {"a": ms[0], "b": ms[1]})],
+                               "l array<long>, m map<string,long>")
+    row = df.select(D.time_period_list(F.col("l"), "MonthOfYear").alias("l"),
+                    D.time_period_map(F.col("m"), "HourOfDay").alias("m")
+                    ).first()
+    assert row["l"] == [3, 12]
+    assert row["m"] == {"a": 13, "b": 0}
+
+
 def test_unit_circle_inverse(spark):
     df = spark.createDataFrame([("2024-03-15 06:00:00",)], "s string") \
         .select(F.col("s").cast("timestamp").alias("ts"))
@@ -93,6 +115,33 @@ def test_unit_circle_inverse(spark):
     row = df.select(s.alias("s"), c.alias("c")).first()
     # hour 6 of 24 -> quarter circle -> sin=1, cos~0
     assert row["s"] == pytest.approx(1.0) and row["c"] == pytest.approx(0.0, abs=1e-12)
+
+
+def test_filter_stages(spark):
+    """operators/filters.py stages: Filter / Exists / ToOccur / Replace /
+    Substring / Alias / FilterMap, each evaluated through its stage."""
+    from transmogrifai_spark.feature import from_dataframe
+    from transmogrifai_spark.operators import filters as FL
+    df = spark.createDataFrame(
+        [(5.0, "Spark", "I like spark", {"a": "1", "b": "2"}),
+         (None, "x", None, {"b": "3"}),
+         (-1.0, None, "text", {})],
+        "v double, needle string, hay string, m map<string,string>")
+    fs = from_dataframe(df, overrides={"needle": "Text", "hay": "Text",
+                                       "m": "TextMap"})
+    outs = [FL.filter_value(fs["v"], lambda c: c > 0, default=0.0),
+            FL.exists(fs["v"], lambda c: c > 0),
+            FL.to_occur(fs["v"]),
+            FL.replace(fs["needle"], "x", "y"),
+            FL.substring_of(fs["needle"], fs["hay"]),
+            FL.alias(fs["v"], "v2"),
+            FL.filter_map(fs["m"], block=["b"])]
+    got = df.select(*[o.origin_stage.expr() for o in outs]).collect()
+    cols = [o.name for o in outs]
+    assert [tuple(r[c] for c in cols) for r in got] == [
+        (5.0, True, 1.0, "Spark", True, 5.0, {"a": "1"}),
+        (0.0, False, 0.0, "y", False, None, {}),
+        (0.0, False, 1.0, None, False, -1.0, {})]
 
 
 def test_filter_map_keys(spark):

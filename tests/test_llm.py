@@ -208,37 +208,48 @@ def test_duplicate_clusters(spark):
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 8: 8, 9: 8, 10: 8, 11: 8}
 
 
-def test_duplicate_clusters_loop_conf_scoped_and_restored(spark):
+def test_duplicate_clusters_loop_conf_scoped_and_restored(spark, monkeypatch):
     """The r13 scale-adaptive loop machinery: on a provably small edge
     frame the iteration runs at derived (1-partition) shuffles with AQE
-    paused, and BOTH confs are restored afterwards — including when the
-    derivation is forced to the session value (conf then never touched).
-    A long chain makes the loop take several rounds, so a restore bug
-    inside the loop would be visible."""
-    import os
+    paused, and BOTH confs are restored afterwards — and when the session
+    is already at the derived count the conf is never touched. A long
+    chain makes the loop take several rounds, so a restore bug inside the
+    loop would be visible."""
+    from transmogrifai_spark.util import scoped_conf
 
+    def confs():
+        return (spark.conf.get("spark.sql.shuffle.partitions"),
+                spark.conf.get("spark.sql.adaptive.enabled"))
+
+    seen = []
+    real_snapshot = dedup.snapshot
+
+    def spy(df):
+        seen.append(confs())
+        return real_snapshot(df)
+
+    monkeypatch.setattr(dedup, "snapshot", spy)
     chain = [(i, i + 1) for i in range(1, 14)]
     pairs = spark.createDataFrame(chain, "id1 long, id2 long")
-    before = (spark.conf.get("spark.sql.shuffle.partitions"),
-              spark.conf.get("spark.sql.adaptive.enabled"))
+    before = confs()
+    assert before[0] != "1"
     out = {r["doc"]: r["cluster_id"] for r in
            dedup.duplicate_clusters(pairs).collect()}
     assert out == {i: 1 for i in range(1, 15)}
-    after = (spark.conf.get("spark.sql.shuffle.partitions"),
-             spark.conf.get("spark.sql.adaptive.enabled"))
-    assert after == before
-    # force the large-graph regime (1 edge per partition -> clamp to the
-    # session partition count): the conf must stay untouched mid-loop,
-    # and the labels are the same fixpoint
-    os.environ["SPARK_GRAFT_CC_EDGES_PER_PARTITION"] = "1"
-    try:
+    # the edge snapshot runs at the caller's confs, every round's at the
+    # scoped ones
+    assert seen[0] == before and len(seen) > 2
+    assert set(seen[1:]) == {("1", "false")}
+    assert confs() == before
+    # a 1-partition session is already at the derived count: no conf is
+    # scoped (AQE stays on mid-loop), and the labels are the same fixpoint
+    seen.clear()
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         out2 = {r["doc"]: r["cluster_id"] for r in
                 dedup.duplicate_clusters(pairs).collect()}
-    finally:
-        del os.environ["SPARK_GRAFT_CC_EDGES_PER_PARTITION"]
     assert out2 == out
-    assert (spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.conf.get("spark.sql.adaptive.enabled")) == before
+    assert len(seen) > 2 and set(seen) == {("1", before[1])}
+    assert confs() == before
 
 
 def test_simhash_near_dup_pairs(docs, spark):
@@ -394,6 +405,27 @@ def test_ivf_topk_full_probe_equals_brute_force(spark):
            similarity.ivf_topk(df, q, "vec_id", "embedding", k=3,
                                n_lists=4, n_probe=4, seed=7).collect()}
     assert ivf == exact
+
+
+@pytest.mark.parametrize("fit_sample", [None, 0.5])
+def test_ivf_assignments_layout_independent(spark, fit_sample):
+    """Law (ARCHITECTURE rule 3): the KMeans quantizer's centroids and
+    every row's cell depend only on the rows, not on how the caller
+    partitioned them — with and without a fit sample."""
+    rng = np.random.RandomState(31)
+    vecs = rng.rand(120, 8).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(120)],
+        "vec_id long, embedding array<float>")
+    runs = []
+    for n in (1, 3, 7):
+        assigned, cents = similarity.ivf_assignments(
+            df.repartition(n), "vec_id", "embedding", n_lists=4, seed=5,
+            fit_sample=fit_sample)
+        cells = {r["neighbor_id"]: r["_cell"] for r in assigned.collect()}
+        runs.append((cents, cells))
+    assert len(runs[0][1]) == 120 and len(set(runs[0][1].values())) == 4
+    assert runs[1] == runs[0] and runs[2] == runs[0]
 
 
 def test_ivf_topk_partial_probe_recall(spark):

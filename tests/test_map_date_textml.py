@@ -114,6 +114,22 @@ def test_word2vec(spark):
     assert len(rows[0]["toks_w2v"]) == 8
 
 
+def test_lda_topics(spark):
+    """OpLDA: CountVectorizer -> online LDA; every row gets a k-topic
+    distribution, and two disjoint vocabularies land on different topics."""
+    from transmogrifai_spark.operators.text_ml import lda_topics
+    rows = [(["cat", "dog", "pet", "dog"],)] * 6 + \
+        [(["stock", "bond", "market", "bond"],)] * 6
+    df = spark.createDataFrame(rows, "toks array<string>")
+    f = from_dataframe(df, overrides={"toks": "TextList"})["toks"]
+    fitted = lda_topics(f, k=2, max_iter=20).fit(df)
+    dists = [r["toks_topics"] for r in fitted.transform(df).collect()]
+    assert all(len(d) == 2 and sum(d) == pytest.approx(1.0) for d in dists)
+    top = [max(range(2), key=d.__getitem__) for d in dists]
+    assert len(set(top[:6])) == 1 and len(set(top[6:])) == 1
+    assert top[0] != top[6]
+
+
 def test_runner_train_score_roundtrip(spark, tmp_path, monkeypatch):
     import sys
     import types

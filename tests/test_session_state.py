@@ -1,0 +1,199 @@
+"""Session state has one owner: library calls leave the caller's session
+confs as they found them, scoped conf changes are thread-safe, and no
+module outside session.py / util.scoped_conf writes a conf or reads the
+environment."""
+import ast
+import os
+import threading
+import time
+
+import pytest
+
+from transmogrifai_spark.util import scoped_conf
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "transmogrifai_spark")
+KEY = "spark.sql.shuffle.partitions"
+
+
+def test_scoped_conf_threads_take_turns(spark):
+    original = spark.conf.get(KEY)
+    first_inside = threading.Event()
+    reads, order = {}, []
+
+    def work(val, hold):
+        with scoped_conf(spark, {KEY: val}):
+            order.append(("enter", val))
+            first_inside.set()
+            time.sleep(hold)  # the other thread must wait, not overwrite
+            reads[val] = spark.conf.get(KEY)
+            order.append(("exit", val))
+
+    a = threading.Thread(target=work, args=("3", 0.5))
+    a.start()
+    assert first_inside.wait(30)
+    b = threading.Thread(target=work, args=("5", 0.0))
+    b.start()
+    a.join(30)
+    b.join(30)
+    assert not a.is_alive() and not b.is_alive()
+    assert reads == {"3": "3", "5": "5"}
+    assert order == [("enter", "3"), ("exit", "3"),
+                     ("enter", "5"), ("exit", "5")]
+    assert spark.conf.get(KEY) == original
+
+
+def test_scoped_conf_stress_no_lost_value(spark):
+    """More threads than cores hammer one key with short switch intervals:
+    every read inside a scope sees that scope's own value, and the
+    session value is back at the end."""
+    import sys
+    original = spark.conf.get(KEY)
+    bad = []
+
+    def work(tid):
+        for i in range(10):
+            val = str(100 + tid * 10 + i)
+            with scoped_conf(spark, {KEY: val}):
+                if spark.conf.get(KEY) != val:
+                    bad.append((tid, i))
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert spark.conf.get(KEY) == original
+
+
+def test_scoped_conf_restores_unset_nested_and_on_error(spark):
+    unset_key = "spark.sql.maxMetadataStringLength"
+    assert spark.conf.get(unset_key, None) is None
+    original = spark.conf.get(KEY)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {unset_key: "500", KEY: "2"}):
+            # re-entrant on the same thread; the inner scope restores the
+            # outer scope's value, not the session's
+            with scoped_conf(spark, {KEY: "9"}):
+                assert spark.conf.get(KEY) == "9"
+            assert spark.conf.get(KEY) == "2"
+            assert spark.conf.get(unset_key) == "500"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(KEY) == original
+
+
+@pytest.fixture
+def caller(spark):
+    """A caller's own session on the shared context, with a non-UTC zone
+    and a non-default partition count the engine must not touch."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    s.conf.set(KEY, "7")
+    return s
+
+
+def _caller_confs(s):
+    return (s.conf.get("spark.sql.session.timeZone"), s.conf.get(KEY),
+            s.conf.get("spark.sql.adaptive.enabled"),
+            s.conf.get("spark.sql.maxMetadataStringLength", None))
+
+
+def test_library_calls_leave_caller_session_confs(caller, sf_dir, tmp_path):
+    from transmogrifai_spark.llm.dedup import duplicate_clusters
+    from transmogrifai_spark.sources.tables import load_table
+    from transmogrifai_spark.streaming.windows import file_stream, run_to_memory
+    from transmogrifai_spark.util import plan_audit
+
+    before = _caller_confs(caller)
+    assert before[:2] == ("America/Los_Angeles", "7")
+
+    load_table(caller, sf_dir, "events")
+    load_table(caller, sf_dir, "orders")
+    assert _caller_confs(caller) == before
+
+    src = str(tmp_path / "src")
+    caller.createDataFrame([(i % 3, i) for i in range(12)],
+                           "k long, v long").write.parquet(src)
+    stream = file_stream(caller, src)
+    assert _caller_confs(caller) == before
+    out = run_to_memory(stream.groupBy("k").count(), "complete",
+                        state_partitions=2)
+    assert sorted((r["k"], r["count"]) for r in out.collect()) == \
+        [(0, 4), (1, 4), (2, 4)]
+    assert _caller_confs(caller) == before
+
+    plan_audit(caller.range(10))
+    assert _caller_confs(caller) == before
+
+    pairs = caller.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                   "id1 long, id2 long")
+    got = {r["doc"]: r["cluster_id"]
+           for r in duplicate_clusters(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert _caller_confs(caller) == before
+
+
+def _conf_write_and_env_read_sites(pkg):
+    """(file, line, what) for every ``<x>.conf.set/unset`` call and every
+    ``environ``/``getenv`` read under ``pkg``, minus the allowed owners:
+    session.py, and util.scoped_conf."""
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            tree = ast.parse(open(path).read(), path)
+            allowed = set()
+            if rel == "util.py":
+                for fn in tree.body:
+                    if isinstance(fn, ast.FunctionDef) and fn.name == "scoped_conf":
+                        allowed = {id(n) for n in ast.walk(fn)}
+            for node in ast.walk(tree):
+                if id(node) in allowed:
+                    continue
+                if (isinstance(node, ast.Attribute)
+                        and node.attr in ("set", "unset")
+                        and isinstance(node.value, ast.Attribute)
+                        and node.value.attr == "conf"
+                        and rel != "session.py"):
+                    hits.append((rel, node.lineno, f"conf.{node.attr}"))
+                if (isinstance(node, ast.Attribute)
+                        and node.attr in ("environ", "getenv")
+                        or isinstance(node, ast.alias)
+                        and node.name in ("environ", "getenv")) \
+                        and rel != "session.py":
+                    hits.append((rel, getattr(node, "lineno", 0), "environ"))
+    return hits
+
+
+def test_only_session_and_scoped_conf_own_session_state():
+    assert _conf_write_and_env_read_sites(PKG) == []
+
+
+def test_session_state_lint_catches_violations(tmp_path):
+    (tmp_path / "util.py").write_text(
+        "def scoped_conf(spark, confs):\n"
+        "    spark.conf.set('a', 'b')\n"
+        "def other(spark):\n"
+        "    spark.conf.unset('a')\n")
+    (tmp_path / "mod.py").write_text(
+        "import os\nfrom os import getenv\n"
+        "def f(df):\n"
+        "    df.sparkSession.conf.set('a', 'b')\n"
+        "    return os.environ.get('X')\n")
+    (tmp_path / "session.py").write_text(
+        "import os\nX = os.environ.get('X')\n"
+        "def f(spark):\n    spark.conf.set('a', 'b')\n")
+    assert sorted(_conf_write_and_env_read_sites(str(tmp_path))) == [
+        ("mod.py", 2, "environ"), ("mod.py", 4, "conf.set"),
+        ("mod.py", 5, "environ"), ("util.py", 4, "conf.unset")]

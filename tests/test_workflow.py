@@ -3,7 +3,8 @@ computeDAG layering, stage dedup, one-select layer fusion)."""
 from pyspark.sql import functions as F
 
 from transmogrifai_spark.feature import raw_feature
-from transmogrifai_spark.stages.base import Estimator, binary, unary
+from transmogrifai_spark.stages.base import (Estimator, binary, sequence,
+                                             ternary, unary)
 from transmogrifai_spark.workflow import Workflow, compute_dag
 
 
@@ -41,6 +42,17 @@ def test_fit_score_chain(spark):
     rows = {r["a"]: r["d"] for r in out.collect()}
     # b = a+1, c = 2b, d = b+c = 3(a+1)
     assert rows[1.0] == 6.0 and rows[2.0] == 9.0 and rows[None] is None
+
+
+def test_ternary_and_sequence_arity(spark):
+    a, b, c = (raw_feature(n, "Real") for n in "abc")
+    t = ternary("fma", a, b, c, "t", "Real", lambda x, y, z: x * y + z)
+    s = sequence("total", [a, b, c, t], "s", "Real",
+                 lambda *cols: sum(cols[1:], cols[0]))
+    assert [len(f.origin_stage.inputs) for f in (t, s)] == [3, 4]
+    df = spark.createDataFrame([(2.0, 3.0, 4.0)], "a double, b double, c double")
+    row = Workflow([s]).fit(df).score(df, keep_intermediate=True).first()
+    assert (row["t"], row["s"]) == (10.0, 19.0)
 
 
 def test_estimator_layer_fit(spark):

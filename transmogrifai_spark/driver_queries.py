@@ -35,6 +35,7 @@ from .sources.readers import (AggSpec, AggregateDataReader, ConditionalDataReade
                               CutOffTime, DataReader, InlineReader,
                               aggregate_events, conditional_aggregate_events)
 from .sources.tables import load_table
+from .util import scoped_conf
 
 CUTOFF = "2024-01-15 00:00:00"
 
@@ -948,15 +949,9 @@ def q_stopwords_ngrams(spark, sf_dir):
     # stemmer classes RETAINED in the codegen cache are what pushed a
     # stock 1g driver over the edge mid-sweep (driver_sim r10); both
     # confs are restored whatever happens
-    _factory_key = "spark.sql.codegen.factoryMode"
-    _wscg_key = "spark.sql.codegen.wholeStage"
-    _old_factory = spark.conf.get(_factory_key, "FALLBACK")
-    _old_wscg = spark.conf.get(_wscg_key, "true")
     sb_joined = None
-    try:
-        spark.conf.set(_factory_key, "NO_CODEGEN")
-        spark.conf.set(_wscg_key, "false")
-
+    with scoped_conf(spark, {"spark.sql.codegen.factoryMode": "NO_CODEGEN",
+                             "spark.sql.codegen.wholeStage": "false"}):
         # the 13 per-language sub-jobs are independent tiny collects —
         # each builds its stemmer as a chain of SMALL parsed step
         # expressions (snowball_spark_steps, r12: replaced the 1-10 s
@@ -983,9 +978,6 @@ def q_stopwords_ngrams(spark, sf_dir):
             for snap in ex.map(snap_one, langs):
                 sb_joined = snap if sb_joined is None \
                     else sb_joined.join(snap, "doc_id")
-    finally:
-        spark.conf.set(_factory_key, _old_factory)
-        spark.conf.set(_wscg_key, _old_wscg)
     base = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),

@@ -9,7 +9,8 @@ Re-expression of SURVEY.md §2.8:
     time-of-period projected onto the unit circle (sin θ, cos θ).
   * TimePeriodListTransformer / TimePeriodMapTransformer — same over
     ArrayType / MapType via F.transform / F.transform_values.
-  * DateListVectorizer pivots (SinceFirst/SinceLast)  DateListVectorizer.scala:103.
+
+DateListVectorizer pivots (SinceFirst/SinceLast) live in operators/date_ops.py.
 
 The reference's "ago" computations default to now() (Transmogrifier.scala:58
 ``ReferenceDate``); the rebuild makes the reference date an explicit parameter
@@ -27,18 +28,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_timestamp_col(c: Column) -> Column:
-    """Accept TimestampType or epoch-millis LongType (reference Date physical
-    form, FeatureSparkTypes.scala: Date -> LongType epoch ms)."""
-    return c  # callers pass timestamps; epoch-ms path via millis_to_ts
-
-
 def millis_to_ts(c: Column) -> Column:
     return F.timestamp_millis(c.cast("long"))
-
-
-def ts_to_millis(c: Column) -> Column:
-    return F.unix_millis(c)
 
 
 _PERIODS = {
@@ -96,9 +87,3 @@ def unit_circle(ts: Column, period: str = "HourOfDay") -> tuple[Column, Column]:
     size = _PERIOD_SIZE[period]
     theta = unit * (2.0 * math.pi / size)
     return F.sin(theta), F.cos(theta)
-
-
-def days_since(ts: Column, reference_date: str) -> Column:
-    """SinceLast/SinceFirst pivot arithmetic (DateListVectorizer.scala:103):
-    whole days between ts and the explicit reference date."""
-    return F.datediff(F.lit(reference_date).cast("timestamp"), ts).cast("long")

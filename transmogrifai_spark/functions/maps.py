@@ -51,7 +51,3 @@ def map_get(m: Column, key: str) -> Column:
 def map_to_multipicklist(m: Column) -> Column:
     """PickListMap -> MultiPickList of values (RichMapFeature DSL)."""
     return F.array_distinct(F.map_values(m))
-
-
-def map_size(m: Column) -> Column:
-    return F.coalesce(F.size(m), F.lit(0)).cast("long")

@@ -98,10 +98,6 @@ def power(c: Column, p: float) -> Column:  # PowerTransformer:361
     return nan_inf_to_null(F.pow(c, F.lit(p)))
 
 
-def fill_missing(c: Column, value) -> Column:  # FillMissingWithValue
-    return F.coalesce(c, F.lit(value))
-
-
 def z_normalize(c: Column, mean: float, std: float) -> Column:
     """Fitted form of OpScalarStandardScaler (OpScalarStandardScaler.scala:49)."""
     return (c - F.lit(mean)) / F.lit(std if std != 0 else 1.0)

@@ -40,11 +40,6 @@ def tokenize(c: Column, min_token_length: int = 1, to_lowercase: bool = True,
     return F.coalesce(toks, F.array().cast("array<string>"))
 
 
-def token_lengths(c: Column) -> Column:
-    """TextLenTransformer.scala:45 — per-token lengths."""
-    return F.transform(tokenize(c), lambda t: F.length(t))
-
-
 def text_len(c: Column) -> Column:
     """Total text length with the reference's null->0 convention."""
     return F.coalesce(F.length(c), F.lit(0)).cast("long")
@@ -146,10 +141,6 @@ def is_valid_url(c: Column) -> Column:
 
 def url_domain(c: Column) -> Column:
     return F.when(is_valid_url(c), F.parse_url(c, F.lit("HOST")))
-
-
-def url_protocol(c: Column) -> Column:
-    return F.when(is_valid_url(c), F.parse_url(c, F.lit("PROTOCOL")))
 
 
 # -- phone: multi-region parse/validate (PhoneNumberParser.scala:143-241

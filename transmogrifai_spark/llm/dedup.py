@@ -36,7 +36,7 @@ from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..util import ensure_parallelism
+from ..util import ensure_parallelism, scoped_conf, snapshot
 
 
 def text_digest(c: Column) -> Column:
@@ -372,48 +372,35 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
         max_hamming=max_hamming)
 
 
+# CC loop partitioning: one shuffle partition per this many edges, clamped
+# to the session value (see duplicate_clusters)
+_CC_EDGES_PER_PARTITION = 1_000_000
+
+
 def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
                        max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate pairs: every document gets
     the minimum reachable id as its ``cluster_id`` (the canonical
     representative), so pair-level dedup becomes group-level dedup.
 
-    Plan: iterative label propagation — each round joins current labels to
-    the (symmetrized) edge list and takes the min neighbor label; stops when
-    a round changes nothing. Rounds needed = graph diameter (near-dup
-    clusters are shallow; the cap is a safety bound). Each round is one
-    shuffle join + one aggregation. Edges and labels are CHECKPOINTED, not
-    just persisted: persist caches execution but the logical plan still
-    nests round k-1's plan inside round k's, so on deeper graphs (diameter
-    ~10+) the analyzed plan grows exponentially and the DRIVER dies in
-    plan analysis long before any executor works — classic iterative-Spark
-    failure, found when the SemDeDup gate OOMed an 8 GB driver on a
-    171-edge graph whose leaf plan carried 64-dim fold expressions.
-    ``localCheckpoint(eager=True)`` truncates lineage each round (on a
-    cluster, executor-local storage; the standard GraphX/connected-
-    components recipe). When the session has a RELIABLE checkpoint dir
-    configured (``sc.setCheckpointDir``), ``checkpoint()`` is used
-    instead — replicated to the FS, survives executor loss; the right
-    default on preemptible clusters. Storage release: a checkpointed
-    DataFrame has no cache-manager entry, so ``DataFrame.unpersist`` is a
-    no-op for these snapshots (r8 advice — an earlier version of this
-    docstring over-claimed explicit release); the loop instead keeps AT
-    MOST TWO rounds of snapshots referenced at any moment (``labels`` is
-    rebound each round, dropping the only handle on round k-1), so the
-    JVM ContextCleaner reclaims each orphaned round's blocks promptly
-    rather than accumulating the whole history."""
+    Plan: iterative label propagation with pointer jumping — each round
+    joins current labels to the (symmetrized) edge list, takes the min
+    neighbor label, then hops each label to its own label; stops when a
+    round changes nothing. Rounds needed = O(log diameter) (near-dup
+    clusters are shallow; the cap is a safety bound). Edges and each
+    round's labels are lineage-truncating ``util.snapshot``s, not just
+    persisted: persist still nests round k-1's plan inside round k's, so
+    on deeper graphs (diameter ~10+) the analyzed plan grows exponentially
+    and the DRIVER dies in plan analysis long before any executor works —
+    found when the SemDeDup gate OOMed an 8 GB driver on a 171-edge graph
+    whose leaf plan carried 64-dim fold expressions. ``labels`` is rebound
+    each round, so at most two rounds of snapshots are alive at a time
+    (the storage contract is ``util.snapshot``'s)."""
     spark = pairs.sparkSession
-    sc = spark.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-
-    def chk(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable \
-            else df.localCheckpoint(eager=True)
-
     edges = (pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
              .union(pairs.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
              .distinct())
-    edges = chk(edges)
+    edges = snapshot(edges)
     # Scale-adaptive loop machinery (guide §2/§6, the streaming
     # state-partition pattern): the edge frame is materialized, so its
     # size is KNOWN before the loop runs. Each round is join + groupBy +
@@ -423,27 +410,22 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
     # on the driver (measured at sf0.1: 5,242 edges, 13 rounds, ~4.4 s
     # of pure machinery -> ~1.8 s with 1-partition shuffles and AQE
     # paused). Partitions derive from EDGE COUNT, not core count — the
-    # same inputs give the same plan at any $SPARK_GRAFT_CPUS — and
-    # clamp to the session value, so a genuinely large graph keeps the
-    # session partitioning AND its AQE (the conf is only touched in the
-    # provably small regime, where there is nothing to coalesce or
-    # skew-split). Partitioning cannot change a min() fixpoint.
+    # same inputs give the same plan at any core count — and clamp to
+    # the session value, so a genuinely large graph keeps the session
+    # partitioning AND its AQE (the conf is only scoped in the provably
+    # small regime, where there is nothing to coalesce or skew-split).
+    # Partitioning cannot change a min() fixpoint.
     n_edges = edges.count()
-    per_part = int(os.environ.get(
-        "SPARK_GRAFT_CC_EDGES_PER_PARTITION", "1000000"))
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_parts = max(1, min((n_edges + per_part - 1) // per_part, sess_parts))
-    saved: dict = {}
+    n_parts = max(1, min(-(-n_edges // _CC_EDGES_PER_PARTITION), sess_parts))
+    pin: dict = {}
     if n_parts < sess_parts:
-        saved["spark.sql.shuffle.partitions"] = str(sess_parts)
-        saved["spark.sql.adaptive.enabled"] = \
-            spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        pin = {"spark.sql.shuffle.partitions": str(n_parts),
+               "spark.sql.adaptive.enabled": "false"}
         edges = edges.coalesce(n_parts)
-    try:
-        labels = chk(edges.select(F.col("src").alias("node")).distinct()
-                     .withColumn("lbl", F.col("node")))
+    with scoped_conf(spark, pin):
+        labels = snapshot(edges.select(F.col("src").alias("node")).distinct()
+                          .withColumn("lbl", F.col("node")))
         for _ in range(max_iter):
             neighbor_min = (edges.join(labels, edges.dst == labels.node)
                             .groupBy("src").agg(F.min("lbl").alias("nlbl")))
@@ -465,14 +447,14 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
             # so the hop stays inside the component and is monotone
             # non-increasing — the loop converges to the SAME unique
             # min-id fixpoint in O(log diameter) rounds instead of
-            # O(diameter) (measured: 13 -> 5 rounds on the sf0.1 graphs,
+            # O(diameter) (measured: 13 -> 8 rounds on the sf0.1 graphs,
             # and each round is fixed-cost machinery). One extra tiny
             # self-join per round; the per-round small subtree computing
             # `stepped` is evaluated twice, both sides reading only the
-            # checkpointed edges/labels snapshots.
+            # snapshotted edges/labels.
             parent = stepped.select(F.col("node").alias("_pn"),
                                     F.col("lbl").alias("_pl"))
-            new_labels = chk(
+            new_labels = snapshot(
                 stepped.join(parent, stepped.lbl == parent._pn, "left")
                 .select(F.col("node"),
                         F.least(F.col("lbl"),
@@ -482,17 +464,10 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
                          | (F.coalesce(F.col("_pl"), F.col("lbl"))
                             < F.col("lbl"))).alias("_chg")))
             changed = new_labels.where(F.col("_chg")).limit(1).count()
-            # new_labels is materialized (eager) and carries no lineage
-            # into the old round; rebinding drops the last handle on the
-            # old snapshot so ContextCleaner can reclaim its blocks
-            # (unpersist() would be a no-op here — checkpointed frames
-            # have no cache entry)
+            # rebinding drops the last handle on the old round's snapshot
             labels = new_labels
             if changed == 0:
                 break
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("cluster_id"))
 
 

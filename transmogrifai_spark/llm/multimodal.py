@@ -41,14 +41,6 @@ MEDIA_SCHEMA = T.StructType([
 IMAGE_FEATURE_DIM = 16
 
 
-def repartition_media(df: DataFrame, target_blobs_per_partition: int = 64) -> DataFrame:
-    """Spread large blobs evenly by id hash; partition count derived from the
-    row count so each task holds a bounded number of blobs."""
-    n = df.count()
-    parts = max(1, n // target_blobs_per_partition)
-    return df.repartition(parts, F.col("media_id"))
-
-
 def _fake_features_from_bytes(data: bytes, dim: int) -> np.ndarray:
     """DETERMINISTIC FAKE decode — stands in for a real image/audio decoder.
     Derives `dim` floats in [0,1) from the sha256 of the bytes."""

@@ -242,6 +242,10 @@ def explicit_assignments(df: DataFrame, id_col: str, vec_col: str,
         .alias("_cell"))
 
 
+# partition count of the KMeans fit input (see ivf_assignments)
+_FIT_PARTITIONS = 8
+
+
 def ivf_assignments(corpus: DataFrame, id_col: str, vec_col: str,
                     n_lists: int = 16, seed: int = 42,
                     max_iter: int = 10,
@@ -252,7 +256,9 @@ def ivf_assignments(corpus: DataFrame, id_col: str, vec_col: str,
     Returns (assigned_corpus, centroids): the corpus with a ``_cell`` column
     and the centroid list (plain python floats). At 100 TB the KMeans fit
     runs on ``fit_sample`` (centroid positions converge on a tiny fraction
-    of the data) while assignment stays a full single pass.
+    of the data; the sample is a per-id hash draw) while assignment stays
+    a full single pass. The same rows give the same centroids and cells
+    whatever the input's partitioning.
 
     Pass ``centroids`` to SKIP the fit entirely (the pq/opq
     explicit-model injection contract extended to the coarse tier):
@@ -274,7 +280,19 @@ def ivf_assignments(corpus: DataFrame, id_col: str, vec_col: str,
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    fit_on = c.sample(fit_sample, seed=seed) if fit_sample else c
+    # KMeans' k-means|| init seeds per partition and walks rows in order,
+    # so the fit input gets a canonical layout: a per-id hash sample (no
+    # layout-dependent Bernoulli draw, no shuffle of the unsampled rows),
+    # hash-partitioned on the id into a fixed count, sorted within
+    # partitions. The centroids then depend only on the rows, never on
+    # the caller's partitioning or the core count (ARCHITECTURE rule 3).
+    fit_on = c
+    if fit_sample:
+        fit_on = fit_on.where(
+            F.pmod(F.xxhash64(F.lit(seed), F.col("neighbor_id")),
+                   F.lit(1 << 30)) < F.lit(int(fit_sample * (1 << 30))))
+    fit_on = (fit_on.repartition(_FIT_PARTITIONS, "neighbor_id")
+              .sortWithinPartitions("neighbor_id"))
     km = KMeans(k=n_lists, seed=seed, maxIter=max_iter, featuresCol="_fv",
                 predictionCol="_cell")
     model = km.fit(fit_on.withColumn("_fv", array_to_vector(F.col("_cv"))))
@@ -288,10 +306,6 @@ def _sq_dist_cols(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
         F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _sq_dist_to(vec: Column, centroid: list[float]) -> Column:
-    return _sq_dist_cols(vec, _lit_vec(centroid))
 
 
 def _probe_cells(vec: Column, centroids: list[list[float]], n_probe: int) -> Column:
@@ -568,7 +582,11 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     # referenced twice (zero test + divisor), so an inline l2_norm would
     # fold the query vector twice per candidate pair — and the ADC
     # LUT/centroid dots depend only on the query, so they ride the
-    # broadcast side (pq_adc_tables) instead of re-deriving per candidate
+    # broadcast side (pq_adc_tables) instead of re-deriving per candidate.
+    # Built below the probe explode, each query's tables are computed once
+    # but the broadcast carries n_probe copies of them (n_probe x (n_lists
+    # + m*k_codes) doubles per query), which is small for query batches and
+    # cheaper than a second join to attach them above the explode.
     denom = F.col("_qn") * F.col("_rnorm")
     cos = F.when(denom == 0, F.lit(0.0)) \
         .otherwise(pq_adc_score_from_tables(F.col("_cdots"), F.col("_luts"),

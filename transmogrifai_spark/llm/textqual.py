@@ -40,10 +40,6 @@ def token_count(c: Column) -> Column:
     return F.coalesce(F.regexp_count(c, F.lit(TOKEN_PATTERN)), F.lit(0)).cast("long")
 
 
-def whitespace_token_count(c: Column) -> Column:
-    return F.size(tokenize(c)).cast("long")
-
-
 def stopword_ratio_tokens(toks: Column, stopwords: list[str]) -> Column:
     """``stopword_ratio`` over a pre-tokenized array — pass an attribute
     (e.g. a materialized token column) so the token array is not
@@ -76,11 +72,6 @@ def mean_token_length_tokens(toks: Column) -> Column:
     n = F.size(toks)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     return F.when(n == 0, F.lit(0.0)).otherwise(total.cast("double") / n.cast("double"))
-
-
-def mean_token_length(c: Column) -> Column:
-    from ..util import bind_once
-    return bind_once(tokenize(c), mean_token_length_tokens)
 
 
 def quality_score(c: Column, stopwords: list[str] | None = None) -> Column:
@@ -268,21 +259,6 @@ _SCRIPT_LANG = {"kana": "ja", "han": "zh", "hangul": "ko", "cyrillic": "ru",
                 "gujarati": "gu", "gurmukhi": "pa", "sinhala": "si",
                 "myanmar": "my", "khmer": "km", "lao": "lo", "georgian": "ka",
                 "armenian": "hy", "ethiopic": "am"}
-
-
-def script_ratios(c: Column) -> Column:
-    """map<script, fraction-of-letters> for the known script blocks (letters
-    counted via \\p{L}; zero-letter text -> empty map)."""
-    letters = F.regexp_count(c, F.lit(r"\p{L}"))
-    keys, vals = [], []
-    for name, rng in _SCRIPT_RANGES:
-        keys.append(F.lit(name))
-        vals.append(F.when(letters > 0,
-                           F.regexp_count(c, F.lit(rng)).cast("double")
-                           / letters.cast("double")).otherwise(F.lit(0.0)))
-    return F.when(letters > 0, F.map_from_arrays(F.array(*keys), F.array(*vals))) \
-        .otherwise(F.map_from_arrays(F.array().cast("array<string>"),
-                                     F.array().cast("array<double>")))
 
 
 def language_id_extended(c: Column, min_script_ratio: float = 0.3) -> Column:

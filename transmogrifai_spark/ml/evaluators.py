@@ -94,19 +94,6 @@ def binary_metrics(df: DataFrame, score_col: str, label_col: str,
     }
 
 
-def bin_score_metrics(df: DataFrame, score_col: str, label_col: str,
-                      bins: int = 10) -> DataFrame:
-    """OpBinScoreEvaluator.scala:53 — calibration table: per score-decile
-    average score vs empirical rate + counts."""
-    s = F.col(score_col).cast("double")
-    b = F.least(F.floor(s * bins).cast("long"), F.lit(bins - 1))
-    return (df.groupBy(b.alias("bin"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.avg(s).alias("avg_score"),
-                 F.avg(F.col(label_col).cast("double")).alias("rate"))
-            .orderBy("bin"))
-
-
 def multiclass_metrics(df: DataFrame, pred_col: str, label_col: str,
                        prob_col: str | None = None, top_ns: tuple[int, ...] = (1, 3)) -> dict:
     """OpMultiClassificationEvaluator.scala:59 — accuracy, macro P/R/F1,

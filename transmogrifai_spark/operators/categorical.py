@@ -306,9 +306,3 @@ def detect_charset(c: Column) -> Column:
         .when(utf8_valid, F.lit("utf-8"))
         .otherwise(F.lit("windows-1252")))
     return F.when(raw.isNull(), F.lit(None).cast("string")).otherwise(out)
-
-
-def mime_type_detector(feat: Feature, output_name: str | None = None) -> ColumnTransformer:
-    out = output_name or f"{feat.name}_mime"
-    return ColumnTransformer("mimeType", [feat], out, "PickList",
-                             lambda c: detect_mime_type(c))

@@ -16,9 +16,8 @@ Design (100 TB):
   iteration is then one join (ranks × edges, both hash-partitioned on the
   same key across iterations) + one groupBy — map-side combined, AQE
   sized. No adjacency lists are collected anywhere.
-* Ranks are snapshotted with ``localCheckpoint(eager=True)`` every round
-  (``checkpoint()`` when the session has a reliable checkpoint dir), so
-  LINEAGE stays one-iteration deep: with the scalar aggregates riding
+* Ranks are snapshotted every round (``util.snapshot``), so LINEAGE
+  stays one-iteration deep: with the scalar aggregates riding
   in-plan, each iteration's plan references the previous ranks several
   times, and persist alone (which caches execution but still nests the
   logical plan) would grow the analyzed plan exponentially over 10+
@@ -45,16 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import snapshot
+
 __all__ = ["pagerank", "hits", "connected_components"]
-
-
-def _chk(df: DataFrame) -> DataFrame:
-    """Materialize + truncate lineage (reliable checkpoint when a dir is
-    configured, executor-local otherwise) — the per-iteration snapshot
-    both algorithms rebind each round."""
-    sc = df.sparkSession.sparkContext
-    return df.checkpoint(eager=True) if sc.getCheckpointDir() is not None \
-        else df.localCheckpoint(eager=True)
 
 
 def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
@@ -65,13 +57,11 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     from a uniform start. Follows rank_{i+1}(v) = (1-d)/N +
     d * (sum_{u->v} rank_i(u) * w(u,v)/outw(u) + dangling_i / N).
 
-    The returned frame is a CHECKPOINTED snapshot (r9 — one small row
-    per node, lineage already truncated, so re-use never recomputes the
-    iteration chain); calling ``.unpersist()`` on it is a harmless no-op
-    (checkpointed frames have no cache-manager entry — block release is
-    reference-drop + ContextCleaner, the llm/dedup contract), kept
+    The returned frame is a ``util.snapshot`` (r9 — one small row per
+    node, lineage already truncated, so re-use never recomputes the
+    iteration chain); ``.unpersist()`` on it is a harmless no-op, kept
     acceptable for callers written against the old persisted-handle
-    contract."""
+    contract (release is ``util.snapshot``'s reference-drop contract)."""
     w = (F.col(weight_col) if weight_col else F.lit(1.0)).cast("double")
     # persist the aggregated edge table FIRST: nodes/outw/frac/dangling all
     # derive from it — without the cache each one re-runs the (possibly
@@ -115,7 +105,7 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                            .cast("double").alias("s")))
         else:
             summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        new = _chk(
+        new = snapshot(
             nodes.join(summed.withColumnRenamed("dst", "node"),
                        "node", "left")
             .crossJoin(F.broadcast(dang_df))
@@ -194,7 +184,7 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                     .select("node", "h",
                             (F.col("a") / F.col("_na")).alias("authority")))
         nh_df = _norm_df(hub_full, "h", "_nh")
-        new = _chk(
+        new = snapshot(
             hub_full.crossJoin(F.broadcast(nh_df))
             .select("node", (F.col("h") / F.col("_nh")).alias("hub"),
                     "authority"))
@@ -213,10 +203,11 @@ def connected_components(edges: DataFrame, src_col: str = "src",
     """Weakly connected components over an arbitrary edge list:
     ``(node, component)`` where component = the minimum reachable node id
     (orderable type — longs, strings/hosts). Delegates to
-    llm/dedup.duplicate_clusters (iterative min-label propagation, one
-    join + one aggregation per round, rounds = component diameter) — the
-    same machinery that clusters near-duplicate pairs, exposed here for
-    host/domain graphs (mirror clusters, site families)."""
+    llm/dedup.duplicate_clusters (iterative min-label propagation with
+    pointer jumping, a few joins + one aggregation per round, rounds =
+    O(log component diameter)) — the same machinery that clusters
+    near-duplicate pairs, exposed here for host/domain graphs (mirror
+    clusters, site families)."""
     from ..llm.dedup import duplicate_clusters
     out = duplicate_clusters(
         edges.select(F.col(src_col).alias("id1"),

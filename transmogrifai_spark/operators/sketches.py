@@ -89,18 +89,6 @@ def hll_estimate(sketch_col: str | Column) -> Column:
     return F.hll_sketch_estimate(sketch_col).cast("long")
 
 
-def approx_distinct_over_time(events: DataFrame, time_col: str,
-                              resolutions_ms: list[int],
-                              group_cols: list[str], value_col: str,
-                              lg_k: int = 12) -> dict[int, DataFrame]:
-    """Distinct-count rollup at every resolution from ONE events pass —
-    convenience wrapper over hierarchical_rollup's approx_distinct kind."""
-    from .rollup import hierarchical_rollup
-    return hierarchical_rollup(
-        events, time_col, resolutions_ms, group_cols,
-        {"approx_distinct": (f"approx_distinct:{lg_k}", value_col)})
-
-
 # ---------------------------------------------------------------------------
 # Theta — distinct-count sketches with set algebra (union/intersect/diff)
 # ---------------------------------------------------------------------------

@@ -55,16 +55,11 @@ def normalize_events(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # calendar functions must not depend on the caller session's locale —
-    # force UTC (the oracle gate's DuckDB timestamps are naive/UTC; also makes
-    # the TIMESTAMP_NTZ -> TIMESTAMP cast an identity on the wall clock)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """One testdata table; ``events`` comes back with normalized
+    ``ts``/``ts_ms``. Assumes the engine session confs
+    (``session.ENGINE_CONFS``: a UTC session, and nanosAsLong so an
+    int64-nanos ``ts`` can be read at all) and does not set them on the
+    caller's session."""
     if name == "events":
-        # harmless for micros/NTZ files; required to even read nanos files
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

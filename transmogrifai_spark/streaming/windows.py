@@ -17,14 +17,13 @@ against the equivalent batch SQL.
 """
 from __future__ import annotations
 
-import contextlib
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..aggregators import agg_sum_exact
+from ..util import scoped_conf
 
 # scale-AWARE state-partition sizing (r13; guide §2/§5). Every stateful
 # streaming operator creates ONE state store per shuffle partition and pays
@@ -37,8 +36,7 @@ from ..aggregators import agg_sum_exact
 # the core count, and not a local[N] constant) keeps the bench comparable
 # across core counts and still hands a 100 TB backfill the session's full
 # partition count: ceil(bytes / target) clamps to the session value.
-_STATE_PARTITION_TARGET_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_STATE_PARTITION_BYTES", str(32 * 1024 * 1024)))
+_STATE_PARTITION_TARGET_BYTES = 32 * 1024 * 1024
 
 
 def scaled_state_partitions(spark: SparkSession, *paths: str) -> int | None:
@@ -59,22 +57,6 @@ def scaled_state_partitions(spark: SparkSession, *paths: str) -> int | None:
         return None
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(cur, -(-nbytes // _STATE_PARTITION_TARGET_BYTES)))
-
-
-@contextlib.contextmanager
-def _shuffle_partitions(spark: SparkSession, n: int | None):
-    """Set spark.sql.shuffle.partitions around a streaming run (the state
-    partition count is pinned from this conf when the query starts) and
-    restore it after — batch queries in the session are untouched."""
-    if n is None:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def windowed_event_aggregate(events: DataFrame, time_col: str = "ts",
@@ -129,12 +111,14 @@ def file_stream(spark: SparkSession, src_path: str, schema=None,
 
     ``max_files_per_trigger`` bounds each micro-batch (backfill over a
     100 TB directory must not load everything into one batch);
-    ``latest_first`` processes newest files first (catch-up mode)."""
+    ``latest_first`` processes newest files first (catch-up mode).
+
+    Like ``sources.tables.load_table`` this assumes the engine session
+    confs (``session.ENGINE_CONFS``: UTC, and nanosAsLong to read
+    int64-nanos files at all); it does not set them on the caller's
+    session."""
     from ..sources.tables import ts_to_timestamp
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # harmless for micros/NTZ files; required to even read nanos files
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
         schema = spark.read.parquet(src_path).schema
     reader = spark.readStream.schema(schema)
@@ -183,7 +167,11 @@ def run_to_memory(out: DataFrame, output_mode: str = "complete",
     the session's full state-store count (restored afterwards)."""
     sink = f"mem_{uuid.uuid4().hex[:12]}"
     spark = out.sparkSession
-    with _shuffle_partitions(spark, state_partitions):
+    # the state partition count is pinned from this conf when the query
+    # starts; the session's own value is back once the run ends
+    pin = ({} if state_partitions is None
+           else {"spark.sql.shuffle.partitions": str(state_partitions)})
+    with scoped_conf(spark, pin):
         q = (out.writeStream.format("memory").queryName(sink)
              .outputMode(output_mode).trigger(availableNow=True).start())
         q.awaitTermination()

@@ -91,18 +91,6 @@ def random_email(prob_empty=0.0, seed=42) -> RandomData:
     return RandomData("Email", gen, prob_empty, seed)
 
 
-def random_datetime(start_ms=1704067200000, span_days=30, prob_empty=0.0, seed=42) -> RandomData:
-    span = span_days * 86400000
-    return RandomData("DateTime", lambda r: start_ms + r.randint(0, span), prob_empty, seed)
-
-
-def random_list(element: RandomData, min_len=0, max_len=5, seed=42) -> RandomData:
-    rng_len = random.Random(seed + 1)
-    return RandomData("TextList" if element.type_name in ("Text", "PickList") else "OPVector",
-                      lambda r: element.take(rng_len.randint(min_len, max_len)),
-                      element.prob_empty, seed)
-
-
 def random_multipicklist(domain=("x", "y", "z"), max_len=3, prob_empty=0.0, seed=42) -> RandomData:
     def gen(r):
         k = r.randint(0, max_len)

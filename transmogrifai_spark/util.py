@@ -1,8 +1,65 @@
 """Small planning utilities shared by operators."""
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import contextlib
+import threading
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# held by every scoped_conf block: session confs are session-global, so two
+# threads scoping the same key must take turns (re-entrant for nesting)
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the body of a ``with`` block, then put
+    every key back — its previous value, or ``unset`` when it had none —
+    however the body exits. This is the one way library code changes a
+    session conf; ``session()`` and ``session.apply_engine_confs`` own the
+    engine's permanent ones.
+
+    One module-level ``threading.RLock`` is held for the whole block, so
+    threads that share a session never see or restore over each other's
+    values, and a nested scope on the same thread re-enters. Work the body
+    hands to OTHER threads must not open a scope of its own (it would wait
+    on the lock its parent holds). Setting a conf runs no Spark job."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield spark
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def snapshot(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and truncate its lineage: an eager
+    ``checkpoint()`` when the SparkContext has a reliable checkpoint dir
+    (``sc.setCheckpointDir`` — replicated to the FS, survives executor
+    loss, the right choice on preemptible clusters), an eager
+    ``localCheckpoint()`` (executor-local blocks, the GraphX recipe)
+    otherwise.
+
+    Iterative loops rebind one snapshot per round (ARCHITECTURE rule 4):
+    ``persist()`` caches execution but round k's logical plan still nests
+    round k-1's, so a deep loop's analyzed plan grows until the driver
+    dies in plan analysis; a snapshot's plan is a scan of its blocks.
+
+    Storage release: a snapshot has no cache-manager entry, so
+    ``unpersist()`` on it is a no-op. Its blocks go when the last
+    reference to it is dropped (the JVM ContextCleaner reclaims them), so
+    a loop that rebinds its snapshot each round keeps at most two rounds
+    alive instead of the whole history."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _finite_repr(x) -> str:
@@ -309,19 +366,12 @@ def plan_audit(df: DataFrame, max_scan_cols: int = 24) -> list[dict]:
                             pushed (threshold is advisory; raise it for
                             genuinely wide outputs).
     """
-    spark = df.sparkSession
     # ReadSchema/field lists are truncated at spark.sql.maxMetadataStringLength
     # (default 100 chars) — raise it for the audit so column counts are real
-    prev = spark.conf.get("spark.sql.maxMetadataStringLength", None)
-    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
-    try:
+    with scoped_conf(df.sparkSession,
+                     {"spark.sql.maxMetadataStringLength": "100000"}):
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.maxMetadataStringLength")
-        else:
-            spark.conf.set("spark.sql.maxMetadataStringLength", prev)
     findings: list[dict] = []
 
     def hit(rule, severity, evidence):
