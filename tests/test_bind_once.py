@@ -88,3 +88,41 @@ def test_cosine_prenormed_hoisted_norm_matches_inline(spark):
         cosine_prenormed(F.col("v1"), F.col("v2"),
                          F.col("n1"), F.col("n2")).alias("pre")).collect()
     assert all(r["direct"] == r["pre"] for r in got)
+
+
+def test_bind_sql_value_equality_nested_lambdas_and_null(spark):
+    """``util.bind_sql`` evaluates a parsed SQL body over any bound Column:
+    equal to the Column-API form, with nested SQL lambdas inside the body
+    and a NULL bound value."""
+    from transmogrifai_spark.util import bind_sql
+
+    df = spark.createDataFrame(
+        [("the quick brown fox", 3), (None, 0), ("", 7), ("a b a", 2)],
+        "t string, k int")
+    bound = df.select(
+        bind_sql(F.split(F.coalesce(F.col("t"), F.lit("")), " "), "ws",
+                 "size(ws) * 10 + size(filter(ws, w -> length(w) > 1))")
+        .alias("n"),
+        # nested lambdas: each word's letters folded inside a transform
+        bind_sql(F.col("t"), "s",
+                 "transform(split(s, ' '), w -> aggregate(split(w, ''), 0, "
+                 "(acc, c) -> acc + CASE WHEN c = 'a' THEN 1 ELSE 0 END))")
+        .alias("a_per_word"),
+        bind_sql(F.col("k") * 2, "v", "v + v + 1").alias("i"))
+    direct = df.select(
+        (F.size(F.split(F.coalesce(F.col("t"), F.lit("")), " ")) * 10
+         + F.size(F.filter(F.split(F.coalesce(F.col("t"), F.lit("")), " "),
+                           lambda w: F.length(w) > 1))).alias("n"),
+        F.transform(F.split(F.col("t"), " "), lambda w: F.aggregate(
+            F.split(w, ""), F.lit(0),
+            lambda acc, c: acc + F.when(c == "a", 1).otherwise(0)))
+        .alias("a_per_word"),
+        (F.col("k") * 4 + 1).alias("i"))
+    assert bound.collect() == direct.collect()
+    # a NULL bound value reaches the body as NULL, not as a missing row
+    assert [r["a_per_word"] for r in bound.collect()][1] is None
+    nulls = spark.range(2).select(
+        bind_sql(F.lit(None).cast("int"), "v",
+                 "coalesce(v, -1) + CASE WHEN v IS NULL THEN 10 ELSE 0 END")
+        .alias("x")).collect()
+    assert [r["x"] for r in nulls] == [9, 9]

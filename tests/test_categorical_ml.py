@@ -234,6 +234,25 @@ def test_select_binary_model(spark, trainable):
     assert sel.fitted_model is not None
 
 
+def test_model_selection_and_metrics_release_their_caches(spark, trainable):
+    """``auroc`` unpersists the ranked table ``util.counts_below`` persists
+    once its terms are read: model selection (one AuROC per candidate x
+    fold) and the holdout metrics leave the session's CacheManager
+    empty, instead of one leaked cache entry per call."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    sel = select_binary_model(trainable, "fv", "y", "k",
+                              candidates=default_binary_candidates(small=True),
+                              k=2)
+    assert cache.isEmpty()
+    scored = spark.createDataFrame(
+        [(0.9, 1.0), (0.8, 0.0), (0.3, 1.0), (0.1, 0.0), (0.3, 0.0)],
+        "p double, y double")
+    assert binary_metrics(scored, "p", "y")["auroc"] == auroc(scored, "p", "y")
+    assert cache.isEmpty()
+    assert sel.best_metric > 0.8
+
+
 def test_train_validation_split_select(spark, trainable):
     """OpTrainValidationSplit: one key-hashed split instead of k folds;
     the leaderboard ranks every candidate by holdout AuROC and the winner

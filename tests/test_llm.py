@@ -252,6 +252,60 @@ def test_duplicate_clusters_loop_conf_scoped_and_restored(spark, monkeypatch):
     assert confs() == before
 
 
+def test_duplicate_clusters_one_job_per_round_any_checkpoint_kind(
+        spark, monkeypatch, tmp_path):
+    """Each connected-components round is ONE Spark job: its changed flag
+    (and the edge count, on the edge snapshot) is an Observation on the
+    snapshot job, not a separate count. Same clusters and the same round
+    count under local checkpoints and under a reliable checkpoint dir
+    (where the snapshot's plan may run twice — the metrics are
+    idempotent)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    chain = [(i, i + 1) for i in range(1, 14)] + [(20, 21), (21, 22)]
+    pairs = spark.createDataFrame(chain, "id1 long, id2 long")
+    real_snapshot = dedup.snapshot
+
+    def run(group):
+        per_snapshot = []
+
+        def spy(df):
+            before = set(tracker.getJobIdsForGroup(group))
+            out = real_snapshot(df)
+            per_snapshot.append(
+                len(set(tracker.getJobIdsForGroup(group)) - before))
+            return out
+
+        monkeypatch.setattr(dedup, "snapshot", spy)
+        sc.setJobGroup(group, group)
+        try:
+            clusters = dedup.duplicate_clusters(pairs)
+            jobs = len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out = {r["doc"]: r["cluster_id"] for r in clusters.collect()}
+        return out, per_snapshot, jobs
+
+    local, snaps, jobs = run("test/cc_local")
+    assert local == {**{i: 1 for i in range(1, 15)}, 20: 20, 21: 20, 22: 20}
+    # edges, initial labels, then one snapshot per round; nothing else
+    # starts a job, and every round (AQE paused: small regime) is one job
+    rounds = len(snaps) - 2
+    assert rounds >= 3
+    assert snaps[2:] == [1] * rounds
+    assert jobs == sum(snaps)
+    jsc = sc._jsc.sc()
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        reliable, snaps2, _ = run("test/cc_reliable")
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert reliable == local
+    assert len(snaps2) - 2 == rounds
+
+
 def test_simhash_near_dup_pairs(docs, spark):
     pairs = dedup.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=10)
     found = {(r["id1"], r["id2"]): r["hamming"] for r in pairs.collect()}

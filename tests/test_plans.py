@@ -203,3 +203,73 @@ def test_minhash_prefilter_equals_signature_nullness(spark):
         expected = {r["doc_id"] for r in unfiltered.collect()
                     if r["_sig"][0] is not None}
         assert kept == expected, (n, kept, expected)
+
+
+def test_bind_sql_input_appears_once_in_optimized_plan(spark):
+    """``util.bind_sql`` binds ANY input Column once: an input subtree
+    referenced three times in the parsed body appears exactly once in the
+    optimized plan (the ``bind_once`` shape, see
+    test_bind_once_shape_survives_optimizer)."""
+    from pyspark.sql import functions as F
+
+    from transmogrifai_spark.util import bind_sql
+    df = spark.createDataFrame([("a b c",)], "text string")
+    col = F.concat(F.upper(F.col("text")), F.lit("#bound-marker#"))
+    out = df.select(bind_sql(col, "v",
+                             "concat(v, lower(v), reverse(v))").alias("x"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("#bound-marker#") == 1, plan
+    assert out.first()["x"] == ("A B C#bound-marker#a b c#bound-marker#"
+                                "#rekram-dnuob#C B A")
+
+
+def test_ensure_parallelism_probe_runs_no_job_on_broadcast_join(spark,
+                                                                 tmp_path):
+    """``ensure_parallelism`` decides without running anything. On
+    ``docs ⋉ filter(docs)`` planned as a broadcast join, the old
+    ``df.rdd.getNumPartitions()`` probe ran the whole filter side as a job
+    (AQE materializes every query stage to learn the final partitioning);
+    the decision is now read from the plan: the broadcast join keeps its
+    streamed side's partitions, so a one-file scan is still spread."""
+    from pyspark.sql import functions as F
+
+    from transmogrifai_spark.util import ensure_parallelism
+    sc = spark.sparkContext
+    path = str(tmp_path / "docs")
+    spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("the"), F.col("id").cast("string"))
+        .alias("text")).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    kept = docs.where(F.length("text") > 5).select("doc_id")
+    q = docs.join(F.broadcast(kept), "doc_id", "left_semi")
+    group = "test/ensure_parallelism_probe"
+    sc.setJobGroup(group, group)
+    try:
+        out = ensure_parallelism(q)
+        started = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert started == [], started
+    assert "BroadcastHashJoin" in \
+        q._jdf.queryExecution().executedPlan().toString()
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
+    assert sorted(r["doc_id"] for r in out.collect()) == list(range(10, 200))
+
+
+def test_ensure_parallelism_shuffled_input_keeps_the_probe(spark):
+    """A plan with a shuffle is still decided by ``df.rdd.getNumPartitions()``,
+    the count after AQE's coalescing: a small aggregate that AQE merges into
+    fewer partitions than cores is spread, though the planner chose one
+    partition per core."""
+    from pyspark.sql import functions as F
+
+    from transmogrifai_spark.util import ensure_parallelism
+    sc = spark.sparkContext
+
+    def agg():   # a fresh frame each time: a run frame's plan is final
+        return spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    assert agg().rdd.getNumPartitions() < sc.defaultParallelism
+    out = ensure_parallelism(agg())
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
+    assert sorted(r["count"] for r in out.collect()) == [33, 33, 34]

@@ -36,7 +36,8 @@ from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..util import ensure_parallelism, scoped_conf, snapshot
+from ..util import (bind_sql, ensure_parallelism, observed_metrics,
+                    scoped_conf, snapshot)
 
 
 def text_digest(c: Column) -> Column:
@@ -400,7 +401,12 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
     edges = (pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
              .union(pairs.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
              .distinct())
-    edges = snapshot(edges)
+    # the edge count rides the snapshot's own job (observed metrics, not a
+    # second count job): a distinct-count sketch, idempotent if the plan
+    # runs twice, where a count would double (util.observed_metrics)
+    sized = edges.observe("cc_edges", F.approx_count_distinct(
+        F.struct("src", "dst"), 0.01).alias("n"))
+    edges = snapshot(sized)
     # Scale-adaptive loop machinery (guide §2/§6, the streaming
     # state-partition pattern): the edge frame is materialized, so its
     # size is KNOWN before the loop runs. Each round is join + groupBy +
@@ -415,7 +421,7 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
     # partitioning AND its AQE (the conf is only scoped in the provably
     # small regime, where there is nothing to coalesce or skew-split).
     # Partitioning cannot change a min() fixpoint.
-    n_edges = edges.count()
+    n_edges = observed_metrics(sized, "cc_edges")["n"]
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(-(-n_edges // _CC_EDGES_PER_PARTITION), sess_parts))
     pin: dict = {}
@@ -454,7 +460,9 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
             # snapshotted edges/labels.
             parent = stepped.select(F.col("node").alias("_pn"),
                                     F.col("lbl").alias("_pl"))
-            new_labels = snapshot(
+            # the round's changed flag is observed on its snapshot job: one
+            # job per round
+            hopped = (
                 stepped.join(parent, stepped.lbl == parent._pn, "left")
                 .select(F.col("node"),
                         F.least(F.col("lbl"),
@@ -462,11 +470,11 @@ def duplicate_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
                         .alias("lbl"),
                         (F.col("_chg")
                          | (F.coalesce(F.col("_pl"), F.col("lbl"))
-                            < F.col("lbl"))).alias("_chg")))
-            changed = new_labels.where(F.col("_chg")).limit(1).count()
+                            < F.col("lbl"))).alias("_chg"))
+                .observe("cc_round", F.bool_or("_chg").alias("changed")))
             # rebinding drops the last handle on the old round's snapshot
-            labels = new_labels
-            if changed == 0:
+            labels = snapshot(hopped)
+            if not observed_metrics(hopped, "cc_round")["changed"]:
                 break
     return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("cluster_id"))
 
@@ -702,21 +710,22 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
     exploded row per doc. True near-duplicates (theta ~ 0) are found with
     near-certainty. Planes are the md5-derived ±1 "signs" family with
     fixed-point dots, so the whole plan is SQL-oracle-replicable."""
-    from .similarity import cosine_prenormed, l2_norm, plane_bits
-    bits = plane_bits(F.col(vec_col), dim, bands * planes_per_band, seed)
-    band_buckets = []
-    for b in range(bands):
-        bucket = F.lit(0).cast("long")
-        for k in range(planes_per_band):
-            bucket = bucket + bits[b * planes_per_band + k].cast("long") * F.lit(1 << k)
-        band_buckets.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
+    from .similarity import cosine_prenormed, l2_norm, sign_buckets_sql
+    # every band's (band, bucket) struct from ONE parsed text bound to the
+    # vector (util.bind_sql): built node by node, the bands x planes x dim
+    # fixed-point folds cost ~1 s of py4j round-trips per call
+    ppb = planes_per_band
+    band_buckets = bind_sql(F.col(vec_col), "v", "array(" + ", ".join(
+        f"named_struct('band', {b}, 'bucket', "
+        f"{sign_buckets_sql('v', dim, range(b * ppb, (b + 1) * ppb), seed)})"
+        for b in range(bands)) + ")")
     # the row norm rides the banded projection (computed once per doc,
     # below the explode Generate) so candidate scoring is one dot fold
     # per pair; _n is norm-of-_v, so adding it to the candidate distinct
     # key cannot split any (id1, id2, v1, v2) group
     bk = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
                    l2_norm(F.col(vec_col)).alias("_n"),
-                   F.explode(F.array(*band_buckets)).alias("_bb"))
+                   F.explode(band_buckets).alias("_bb"))
     # persist: the banded projection feeds both sides of the self-join and
     # bucket computation is ~bands*planes_per_band*dim fused multiplies/row
     bk = ensure_parallelism(bk).persist()

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import bind_sql, sql_str_lit
+
 # words = whitespace tokens, per both papers
 _WS = r"\s+"
 
@@ -29,36 +31,35 @@ def _words(c: Column) -> Column:
     return F.filter(F.split(c, _WS), lambda w: F.length(w) > 0)
 
 
-def _lines(c: Column) -> Column:
-    return F.filter(F.split(c, r"\n"), lambda l: F.length(F.trim(l)) > 0)
+def _nonblank_sql(arr: str) -> str:
+    """SQL text keeping the elements of ``arr`` that are not blank."""
+    return f"filter({arr}, x -> length(trim(x)) > 0)"
 
 
-def _dup_fraction(arr: Column) -> Column:
-    """1 - distinct/total over a non-empty array (0.0 for empty)."""
-    n = F.size(arr)
-    return F.when(n > 0,
-                  1.0 - F.size(F.array_distinct(arr)) / n.cast("double")
-                  ).otherwise(F.lit(0.0))
+def _dup_fraction_sql(arr: str) -> str:
+    """SQL text of 1 - distinct/total over a non-empty array (0.0 for
+    empty)."""
+    return (f"CASE WHEN size({arr}) > 0 THEN 1.0D - size(array_distinct({arr}))"
+            f" / CAST(size({arr}) AS DOUBLE) ELSE 0.0D END")
 
 
-def _dup_char_fraction(arr: Column) -> Column:
-    """Fraction of characters inside elements that are repeats of an
-    earlier-seen element (the Gopher 'duplicate line/paragraph character
-    fraction'). Expression-only: total chars minus chars of the distinct
-    set, over total. The two length folds are bound once (util.bind_once):
-    ``total`` is referenced three times below, and HOF folds re-evaluate
-    per reference."""
-    from ..util import bind_once
-    return bind_once(
-        F.struct(
-            F.aggregate(F.transform(arr, lambda x: F.length(x)),
-                        F.lit(0), lambda a, x: a + x).alias("total"),
-            F.aggregate(F.transform(F.array_distinct(arr),
-                                    lambda x: F.length(x)),
-                        F.lit(0), lambda a, x: a + x).alias("uniq")),
-        lambda s: F.when(s["total"] > 0,
-                         (s["total"] - s["uniq"]) / s["total"].cast("double")
-                         ).otherwise(F.lit(0.0)))
+def _dup_char_fraction_sql(arr: str) -> str:
+    """SQL text of the fraction of characters inside elements that are
+    repeats of an earlier-seen element (the Gopher 'duplicate
+    line/paragraph character fraction'): total chars minus chars of the
+    distinct set, over total. The two length folds are bound once:
+    ``total`` is referenced three times, and HOF folds re-evaluate per
+    reference."""
+    def chars(a: str) -> str:
+        return f"aggregate(transform({a}, x -> length(x)), 0, (n, x) -> n + x)"
+    return (f"transform(array(named_struct('total', {chars(arr)}, 'uniq', "
+            f"{chars(f'array_distinct({arr})')})), c -> CASE WHEN c.total > 0 "
+            "THEN (c.total - c.uniq) / CAST(c.total AS DOUBLE) ELSE 0.0D END)[0]")
+
+
+def _num_sql(x) -> str:
+    """A threshold as a SQL literal of the type ``F.lit`` would give it."""
+    return repr(float(x)) + "D" if isinstance(x, float) else str(int(x))
 
 
 GOPHER_DEFAULTS = {
@@ -84,90 +85,86 @@ def gopher_rules(text: Column, **overrides) -> Column:
     measured values + per-rule booleans + ``keep`` conjunction, one
     expression tree. Repetition here covers the line/paragraph families;
     n-gram repetition (which needs within-doc grouping) is
-    :func:`repetition_metrics`."""
-    from ..util import bind_once
+    :func:`repetition_metrics`.
 
+    The tree is one parsed SQL text bound to ``text`` (util.bind_sql; built
+    node by node it cost ~0.5 s of py4j round-trips per call), with two
+    bind levels inside (HOFs are CodegenFallback — an expression
+    referenced N times evaluates N times): first the three split+filter
+    arrays (words/lines/paras — an unbound body re-split the text ~10x per
+    row), then every measured metric (each is referenced twice: its rule
+    boolean + its output field). Identical values, each computed exactly
+    once."""
     p = {**GOPHER_DEFAULTS, **overrides}
-    t = F.coalesce(text, F.lit(""))
+    t = "coalesce(gt, '')"
+    lines = sql_str_lit(r"\n")
+    paras = sql_str_lit(r"\n\n+")
+    arrays = (f"named_struct('w', filter(split({t}, {sql_str_lit(_WS)}), "
+              "x -> length(x) > 0), "
+              f"'l', {_nonblank_sql(f'split({t}, {lines})')}, "
+              f"'p', {_nonblank_sql(f'split({t}, {paras})')})")
+    nw = "CASE WHEN size(s.w) > 0 THEN CAST(size(s.w) AS DOUBLE) ELSE 1.0D END"
+    n_lines = ("CASE WHEN size(s.l) > 0 THEN CAST(size(s.l) AS DOUBLE) "
+               "ELSE 1.0D END")
+    bullet = sql_str_lit(r"^([-*•‣▪◦])")
+    ellipsis = sql_str_lit(r"(\.\.\.|…)$")
+    alpha = sql_str_lit(r"\p{L}")
+    stops = ", ".join(sql_str_lit(w) for w in GOPHER_STOP_WORDS)
+    metrics = {
+        "n_words": "size(s.w)",
+        "mean_wl": "aggregate(transform(s.w, x -> length(x)), 0, "
+                   f"(n, x) -> n + x) / {nw}",
+        "symbol_ratio": "(size(filter(s.w, x -> contains(x, '#'))) + "
+                        "size(filter(s.w, x -> contains(x, '...')))) / " + nw,
+        "bullet_frac": f"size(filter(s.l, x -> trim(x) RLIKE {bullet})) "
+                       f"/ {n_lines}",
+        "ellipsis_frac": f"size(filter(s.l, x -> trim(x) RLIKE {ellipsis})) "
+                         f"/ {n_lines}",
+        "alpha_frac": f"size(filter(s.w, x -> x RLIKE {alpha})) / {nw}",
+        "stops": "size(array_intersect(array_distinct(transform(s.w, "
+                 f"x -> lower(x))), array({stops})))",
+        "dup_line": _dup_fraction_sql("s.l"),
+        "dup_para": _dup_fraction_sql("s.p"),
+        "dup_line_chars": _dup_char_fraction_sql("s.l"),
+        "dup_para_chars": _dup_char_fraction_sql("s.p"),
+    }
 
-    # two bind_once levels (HOFs are CodegenFallback — an expression
-    # referenced N times evaluates N times): first the three split+filter
-    # arrays (words/lines/paras — the old body re-split the text ~10x per
-    # row), then every measured metric (each is referenced twice below:
-    # its rule boolean + its output field). Identical values, each
-    # computed exactly once.
-    def metrics(words: Column, lines: Column, paras: Column) -> Column:
-        lower_words = F.transform(words, lambda w: F.lower(w))
-        n_words = F.size(words)
-        nw = F.when(n_words > 0, n_words.cast("double")).otherwise(F.lit(1.0))
-        mean_wl = F.aggregate(F.transform(words, lambda w: F.length(w)),
-                              F.lit(0), lambda a, x: a + x) / nw
-        n_symbols = (F.size(F.filter(words, lambda w: w.contains("#")))
-                     + F.size(F.filter(words, lambda w: w.contains("..."))))
-        symbol_ratio = n_symbols / nw
-        alpha_frac = F.size(F.filter(words, lambda w: w.rlike(r"\p{L}"))) / nw
-        stops = F.size(F.array_intersect(
-            F.array_distinct(lower_words),
-            F.array(*[F.lit(s) for s in GOPHER_STOP_WORDS])))
-        n_lines = F.when(F.size(lines) > 0,
-                         F.size(lines).cast("double")).otherwise(F.lit(1.0))
-        bullet_frac = F.size(F.filter(
-            lines, lambda l: F.trim(l).rlike(r"^([-*•‣▪◦])"))
-        ) / n_lines
-        ellipsis_frac = F.size(F.filter(
-            lines, lambda l: F.trim(l).rlike(r"(\.\.\.|…)$"))) / n_lines
-        return F.struct(
-            n_words.alias("n_words"), mean_wl.alias("mean_wl"),
-            symbol_ratio.alias("symbol_ratio"),
-            bullet_frac.alias("bullet_frac"),
-            ellipsis_frac.alias("ellipsis_frac"),
-            alpha_frac.alias("alpha_frac"), stops.alias("stops"),
-            _dup_fraction(lines).alias("dup_line"),
-            _dup_fraction(paras).alias("dup_para"),
-            _dup_char_fraction(lines).alias("dup_line_chars"),
-            _dup_char_fraction(paras).alias("dup_para_chars"))
+    def within(v: str, lo: str, hi: str) -> str:
+        return f"m.{v} >= {_num_sql(p[lo])} AND m.{v} <= {_num_sql(p[hi])}"
 
-    def assemble(m: Column) -> Column:
-        checks = {
-            "word_count_ok": (m["n_words"] >= p["min_words"]) &
-                             (m["n_words"] <= p["max_words"]),
-            "mean_word_len_ok": (m["mean_wl"] >= p["min_mean_word_len"]) &
-                                (m["mean_wl"] <= p["max_mean_word_len"]),
-            "symbol_ratio_ok": m["symbol_ratio"] <= p["max_symbol_word_ratio"],
-            "bullet_frac_ok": m["bullet_frac"] <= p["max_bullet_line_frac"],
-            "ellipsis_frac_ok":
-                m["ellipsis_frac"] <= p["max_ellipsis_line_frac"],
-            "alpha_frac_ok": m["alpha_frac"] >= p["min_alpha_word_frac"],
-            "stop_words_ok": m["stops"] >= p["min_stop_words"],
-            "dup_line_ok": m["dup_line"] <= p["max_dup_line_frac"],
-            "dup_para_ok": m["dup_para"] <= p["max_dup_para_frac"],
-            "dup_line_chars_ok":
-                m["dup_line_chars"] <= p["max_dup_line_char_frac"],
-            "dup_para_chars_ok":
-                m["dup_para_chars"] <= p["max_dup_para_char_frac"],
-        }
-        keep = None
-        for c in checks.values():
-            keep = c if keep is None else (keep & c)
-        return F.struct(
-            m["n_words"].alias("n_words"), m["mean_wl"].alias("mean_word_len"),
-            m["symbol_ratio"].alias("symbol_word_ratio"),
-            m["bullet_frac"].alias("bullet_line_frac"),
-            m["ellipsis_frac"].alias("ellipsis_line_frac"),
-            m["alpha_frac"].alias("alpha_word_frac"),
-            m["stops"].alias("n_stop_words"),
-            m["dup_line"].alias("dup_line_frac"),
-            m["dup_para"].alias("dup_para_frac"),
-            m["dup_line_chars"].alias("dup_line_char_frac"),
-            m["dup_para_chars"].alias("dup_para_char_frac"),
-            *[v.alias(k) for k, v in checks.items()],
-            keep.alias("keep"))
+    def at_most(v: str, key: str) -> str:
+        return f"m.{v} <= {_num_sql(p[key])}"
 
-    return bind_once(
-        F.struct(_words(t).alias("w"), _lines(t).alias("l"),
-                 F.filter(F.split(t, r"\n\n+"),
-                          lambda x: F.length(F.trim(x)) > 0).alias("p")),
-        lambda s: bind_once(metrics(s["w"], s["l"], s["p"]), assemble))
+    checks = {
+        "word_count_ok": within("n_words", "min_words", "max_words"),
+        "mean_word_len_ok": within("mean_wl", "min_mean_word_len",
+                                   "max_mean_word_len"),
+        "symbol_ratio_ok": at_most("symbol_ratio", "max_symbol_word_ratio"),
+        "bullet_frac_ok": at_most("bullet_frac", "max_bullet_line_frac"),
+        "ellipsis_frac_ok": at_most("ellipsis_frac", "max_ellipsis_line_frac"),
+        "alpha_frac_ok": f"m.alpha_frac >= {_num_sql(p['min_alpha_word_frac'])}",
+        "stop_words_ok": f"m.stops >= {_num_sql(p['min_stop_words'])}",
+        "dup_line_ok": at_most("dup_line", "max_dup_line_frac"),
+        "dup_para_ok": at_most("dup_para", "max_dup_para_frac"),
+        "dup_line_chars_ok": at_most("dup_line_chars", "max_dup_line_char_frac"),
+        "dup_para_chars_ok": at_most("dup_para_chars", "max_dup_para_char_frac"),
+    }
+    outputs = {"n_words": "n_words", "mean_word_len": "mean_wl",
+               "symbol_word_ratio": "symbol_ratio",
+               "bullet_line_frac": "bullet_frac",
+               "ellipsis_line_frac": "ellipsis_frac",
+               "alpha_word_frac": "alpha_frac", "n_stop_words": "stops",
+               "dup_line_frac": "dup_line", "dup_para_frac": "dup_para",
+               "dup_line_char_frac": "dup_line_chars",
+               "dup_para_char_frac": "dup_para_chars"}
+    fields = [f"'{k}', m.{v}" for k, v in outputs.items()]
+    fields += [f"'{k}', ({c})" for k, c in checks.items()]
+    fields.append("'keep', " + " AND ".join(f"({c})" for c in checks.values()))
+    metric_struct = "named_struct(" + ", ".join(
+        f"'{k}', {v}" for k, v in metrics.items()) + ")"
+    return bind_sql(text, "gt", (
+        f"transform(array({arrays}), s -> transform(array({metric_struct}), "
+        f"m -> named_struct({', '.join(fields)}))[0])[0]"))
 
 
 C4_BAD_SUBSTRINGS = ["lorem ipsum", "{", "javascript"]

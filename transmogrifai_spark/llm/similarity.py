@@ -24,15 +24,37 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..util import ensure_parallelism
+from ..util import bind_sql, ensure_parallelism, vec_sql
+
+
+def _pair(**cols: Column) -> Column:
+    """The named struct ``bind_sql`` binds when a body reads several
+    columns (fields ``p.<name>``)."""
+    return F.named_struct(*[x for k, c in cols.items() for x in (F.lit(k), c)])
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the double dot product of the array texts ``a``, ``b``
+    (products summed left to right)."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+            "CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)")
+
+
+def _dot_fixed_sql(a: str, b: str, scale: int = 15) -> str:
+    """SQL text of :func:`dot_fixed` over the array texts ``a``, ``b``."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(round(CAST(x AS "
+            f"DOUBLE) * CAST(y AS DOUBLE) * {float(10 ** scale)!r}D) AS "
+            "BIGINT)), 0L, (acc, x) -> acc + x)")
+
+
+def _l2_sql(a: str) -> str:
+    """SQL text of :func:`l2_norm` over the array text ``a``."""
+    return (f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
+            "CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x))")
 
 
 def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return bind_sql(_pair(a=a, b=b), "p", _dot_sql("p.a", "p.b"))
 
 
 def dot_fixed(a: Column, b: Column, scale: int = 15) -> Column:
@@ -44,39 +66,31 @@ def dot_fixed(a: Column, b: Column, scale: int = 15) -> Column:
     integer. Used for LSH plane bits (sign tests), where a last-ulp
     fold-order difference would otherwise flip a bucket. Headroom: |dot| must
     stay < 2^63 / 10^scale (~9200 at scale 15) — embedding-scale data."""
-    mult = F.lit(float(10 ** scale))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.round(x.cast("double") * y.cast("double") * mult)
-                   .cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return bind_sql(_pair(a=a, b=b), "p", _dot_fixed_sql("p.a", "p.b", scale))
 
 
 def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
+    return bind_sql(a, "v", _l2_sql("v"))
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine over two array columns. The three vector folds (both norms,
-    the dot) are bound ONCE (util.bind_once): the old ``denom`` was
-    referenced twice (zero test + divisor), so each call evaluated FIVE
-    interpreted folds per row — HOFs are CodegenFallback and an
-    expression referenced N times evaluates N times. Same doubles,
-    combined in the same order -> bit-identical results.
+    the dot) are bound ONCE: the old ``denom`` was referenced twice (zero
+    test + divisor), so each call evaluated FIVE interpreted folds per row
+    — HOFs are CodegenFallback and an expression referenced N times
+    evaluates N times. Same doubles, combined in the same order ->
+    bit-identical results.
 
     Pair-scoring joins should not even pay the three folds: hoist the
     per-row norms to each SIDE of the join (one ``l2_norm`` per input row
     instead of per pair) and score with :func:`cosine_prenormed` — the
     per-pair cost drops to the single dot fold."""
-    from ..util import bind_once
-    return bind_once(
-        F.struct(l2_norm(a).alias("na"), l2_norm(b).alias("nb"),
-                 dot(a, b).alias("d")),
-        lambda s: F.when(s["na"] * s["nb"] == 0, F.lit(0.0))
-                   .otherwise(s["d"] / (s["na"] * s["nb"])))
+    return bind_sql(
+        _pair(a=a, b=b), "p",
+        f"transform(array(named_struct('na', {_l2_sql('p.a')}, "
+        f"'nb', {_l2_sql('p.b')}, 'd', {_dot_sql('p.a', 'p.b')})), "
+        "s -> CASE WHEN s.na * s.nb = 0 THEN 0.0D "
+        "ELSE s.d / (s.na * s.nb) END)[0]")
 
 
 def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
@@ -85,8 +99,10 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     must be ``l2_norm(a)`` / ``l2_norm(b)`` — then the value is
     bit-identical to ``cosine_similarity`` (same doubles, same multiply
     order) while the join's per-pair work is one dot fold."""
-    denom = na * nb
-    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
+    return bind_sql(
+        _pair(a=a, b=b, na=na, nb=nb), "p",
+        "CASE WHEN p.na * p.nb = 0 THEN 0.0D "
+        f"ELSE {_dot_sql('p.a', 'p.b')} / (p.na * p.nb) END")
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -118,13 +134,12 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     )
 
 
-def _hyperplane(dim: int, plane: int, seed: int) -> Column:
-    """Deterministic pseudo-random hyperplane: component j of plane p =
-    xxhash64(p, j, seed) mapped to [-1, 1]."""
-    return F.array(*[
-        (F.xxhash64(F.lit(plane), F.lit(j), F.lit(seed)).cast("double") / F.lit(float(2 ** 63)))
-        for j in range(dim)
-    ])
+def _hyperplane_sql(dim: int, plane: int, seed: int) -> str:
+    """SQL text of a deterministic pseudo-random hyperplane: component j of
+    plane p = xxhash64(p, j, seed) mapped to [-1, 1]."""
+    return "array(" + ", ".join(
+        f"CAST(xxhash64({plane}, {j}, {seed}) AS DOUBLE) / {float(2 ** 63)!r}D"
+        for j in range(dim)) + ")"
 
 
 def rademacher_signs(dim: int, plane: int, seed: int = 42) -> list[float]:
@@ -143,16 +158,30 @@ def rademacher_signs(dim: int, plane: int, seed: int = 42) -> list[float]:
     ]
 
 
+def _sign_bit_sql(v: str, dim: int, plane: int, seed: int) -> str:
+    """SQL text of the sign test of :func:`plane_bits` for one plane."""
+    signs = vec_sql(rademacher_signs(dim, plane, seed))
+    return f"{_dot_fixed_sql(v, signs)} >= 0"
+
+
+def sign_buckets_sql(v: str, dim: int, planes: range, seed: int = 42) -> str:
+    """SQL text of the bucket id (BIGINT) packing the sign bits of the
+    array text ``v`` against the Rademacher planes ``planes``: bit k is
+    plane ``planes[k]`` — the packing ``hyperplane_bucket(planes="signs")``
+    and the LSH bands of ``embedding_near_dup_pairs_lsh`` share."""
+    return " + ".join(
+        [f"CASE WHEN {_sign_bit_sql(v, dim, p, seed)} THEN {1 << k}L ELSE 0L END"
+         for k, p in enumerate(planes)] or ["0L"])
+
+
 def plane_bits(vec: Column, dim: int, num_planes: int, seed: int = 42) -> list[Column]:
     """Sign bits of <v, s_p> for each Rademacher plane p (1 if dot >= 0).
     Dots accumulate in fixed-point (``dot_fixed``) so the bit does not depend
     on float fold order — a SQL oracle summing the same per-component
     products in any order lands on the identical bit."""
-    bits = []
-    for p in range(num_planes):
-        s = dot_fixed(vec, _lit_vec(rademacher_signs(dim, p, seed)))
-        bits.append(F.when(s >= 0, F.lit(1)).otherwise(F.lit(0)))
-    return bits
+    return [bind_sql(vec, "v", f"CASE WHEN {_sign_bit_sql('v', dim, p, seed)} "
+                               "THEN 1 ELSE 0 END")
+            for p in range(num_planes)]
 
 
 _PLANE_FAMILIES = ("uniform", "signs")
@@ -167,16 +196,13 @@ def hyperplane_bucket(vec: Column, dim: int, num_planes: int = 8, seed: int = 42
     components, portable to the SQL oracle (opt in at oracle-gated sites)."""
     if planes not in _PLANE_FAMILIES:
         raise ValueError(f"planes must be one of {_PLANE_FAMILIES}, got {planes!r}")
-    bucket = F.lit(0).cast("long")
     if planes == "signs":
-        for p, bit in enumerate(plane_bits(vec, dim, num_planes, seed)):
-            bucket = bucket + bit.cast("long") * F.lit(1 << p).cast("long")
-        return bucket
-    for p in range(num_planes):
-        s = dot(vec, _hyperplane(dim, p, seed))
-        bucket = bucket.bitwiseOR(
-            F.when(s >= 0, F.shiftleft(F.lit(1), p).cast("long")).otherwise(F.lit(0).cast("long")))
-    return bucket
+        return bind_sql(vec, "v", sign_buckets_sql("v", dim, range(num_planes), seed))
+    # the uniform bits keep their int shiftleft (plane 31 sets the sign bit)
+    return bind_sql(vec, "v", " | ".join(
+        [f"CASE WHEN {_dot_sql('v', _hyperplane_sql(dim, p, seed))} >= 0 "
+         f"THEN CAST(shiftleft(1, {p}) AS BIGINT) ELSE 0L END"
+         for p in range(num_planes)] or ["0L"]))
 
 
 def hyperplane_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,

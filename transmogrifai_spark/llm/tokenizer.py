@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..util import bind_sql, sql_str_lit
 from .textqual import TOKEN_PATTERN
 
 # Python-re equivalent of textqual.TOKEN_PATTERN (Java \p{L}/\p{N} classes):
@@ -554,10 +555,11 @@ def _wp_table_expr(model: dict) -> Column:
     return F.expr("map(" + ",".join(parts) + ")")
 
 
-def _wp_probe(tab: Column, cand: Column) -> Column:
-    return F.try_element_at(
-        F.try_element_at(tab, (F.crc32(F.encode(cand, "UTF-8"))
-                               % _WP_BUCKETS).cast("int")), cand)
+def _wp_probe_sql(tab: str, cand: str) -> str:
+    """SQL text probing the bucketed table ``tab`` for the piece ``cand``:
+    its id, or NULL."""
+    return (f"try_element_at(try_element_at({tab}, CAST(crc32(encode({cand}, "
+            f"'UTF-8')) % {_WP_BUCKETS} AS INT)), {cand})")
 
 
 # BasicTokenizer's split shape: CJK chars isolated, letter/digit runs
@@ -600,64 +602,46 @@ def wordpiece_tokenize(c: Column, model: dict,
     if lowercase:
         text = F.lower(text)
     words = F.regexp_extract_all(text, F.lit(_WP_PRE_RE), 1)
-
-    def with_table(tab: Column) -> Column:
-        return F.flatten(F.transform(
-            words, lambda w: _wp_scan_word(w, tab, model)))
-
-    out = F.get(F.transform(F.array(_wp_table_expr(model)), with_table), 0)
+    out = bind_sql(
+        F.named_struct(F.lit("tab"), _wp_table_expr(model),
+                       F.lit("words"), words), "wp",
+        f"flatten(transform(wp.words, w -> {_wp_scan_sql('w', 'wp.tab', model)}))")
     return F.when(F.length(text) == 0,
                   F.array().cast("array<string>")).otherwise(out)
 
 
-def _wp_scan_word(w: Column, tab: Column, model: dict) -> Column:
-    """Pieces for ONE pre-tokenized word: the published greedy
+def _wp_scan_sql(w: str, tab: str, model: dict) -> str:
+    """SQL text of the pieces of ONE pre-tokenized word ``w`` (a string
+    text) against the bound table ``tab``: the published greedy
     longest-match cursor scan as an aggregate over character positions
-    (shared by the per-row column form and the distinct-word df form)."""
-    unk = model["unk"]
+    (shared by the per-row column form and the distinct-word df form).
+    Words over ``_WP_MAX_WORD`` characters are [UNK] without a scan."""
+    unk = sql_str_lit(model["unk"])
     max_len = int(model["max_piece_len"])
-
-    def step(acc: Column, _i: Column) -> Column:
-        # longest-first probe at the cursor; ## for continuations
-        best = F.lit(None).cast("string")
-        for ln in range(1, max_len + 1):
-            raw = w.substr(acc["pos"], F.lit(ln))
-            cand = F.when(acc["pos"] > 1,
-                          F.concat(F.lit("##"), raw)) \
-                .otherwise(raw)
-            ok = (F.length(raw) == ln) & \
-                _wp_probe(tab, cand).isNotNull()
-            best = F.when(ok, cand).otherwise(best)
-        live = ~acc["bad"] & (acc["pos"] <= F.length(w))
-        return F.when(
-            live & best.isNotNull(),
-            F.struct(
-                (acc["pos"] + F.length(best) -
-                 F.when(acc["pos"] > 1, F.lit(2))
-                 .otherwise(F.lit(0))).alias("pos"),
-                F.concat(acc["pieces"],
-                         F.array(best)).alias("pieces"),
-                F.lit(False).alias("bad"))) \
-            .when(live & best.isNull(),
-                  F.struct(acc["pos"].alias("pos"),
-                           acc["pieces"].alias("pieces"),
-                           F.lit(True).alias("bad"))) \
-            .otherwise(acc)
-
-    init = F.struct(
-        F.lit(1).alias("pos"),
-        F.array().cast("array<string>").alias("pieces"),
-        F.lit(False).alias("bad"))
-    state = F.aggregate(F.sequence(F.lit(1), F.length(w)),
-                        init, step)
-    # bind the final scan state once (util.bind_once): reading its "bad"
-    # and "pieces" fields separately would re-run the whole greedy cursor
-    # aggregate twice per word
-    from ..util import bind_once
-    return bind_once(state, lambda st: F.when(
-        F.length(w) > _WP_MAX_WORD, F.array(F.lit(unk))) \
-        .when(st["bad"], F.array(F.lit(unk))) \
-        .otherwise(st["pieces"]))
+    # longest-first probe at the cursor (## for continuations): the first
+    # length whose candidate is a vocabulary piece wins
+    probes = []
+    for ln in range(max_len, 0, -1):
+        raw = f"substring({w}, acc.pos, {ln})"
+        cand = f"CASE WHEN acc.pos > 1 THEN concat('##', {raw}) ELSE {raw} END"
+        probes.append(f"WHEN length({raw}) = {ln} AND "
+                      f"{_wp_probe_sql(tab, cand)} IS NOT NULL THEN {cand}")
+    best = "CASE " + " ".join(probes) + " END"
+    # step: a dead state (bad, or past the end) stays; otherwise the best
+    # piece, bound once, advances the cursor, and no piece marks the word bad
+    step = (f"CASE WHEN acc.bad OR acc.pos > length({w}) THEN acc "
+            f"ELSE transform(array({best}), best -> CASE "
+            "WHEN best IS NOT NULL THEN named_struct("
+            "'pos', acc.pos + length(best) - "
+            "CASE WHEN acc.pos > 1 THEN 2 ELSE 0 END, "
+            "'pieces', concat(acc.pieces, array(best)), 'bad', false) "
+            "ELSE named_struct('pos', acc.pos, 'pieces', acc.pieces, "
+            "'bad', true) END)[0] END")
+    init = ("named_struct('pos', 1, 'pieces', CAST(array() AS ARRAY<STRING>), "
+            "'bad', false)")
+    return (f"CASE WHEN length({w}) > {_WP_MAX_WORD} THEN array({unk}) ELSE "
+            f"aggregate(sequence(1, length({w})), {init}, (acc, i) -> {step}, "
+            f"st -> CASE WHEN st.bad THEN array({unk}) ELSE st.pieces END) END")
 
 
 def wordpiece_tokenize_df(df: DataFrame, text_col: str, model: dict,
@@ -667,7 +651,7 @@ def wordpiece_tokenize_df(df: DataFrame, text_col: str, model: dict,
     pre-tokenized words, run the greedy cursor scan ONCE per distinct
     word, join the pieces back, and reassemble per document in word
     order. Equal to ``wordpiece_tokenize`` by construction (law-tested)
-    — the scan is the same ``_wp_scan_word`` aggregate — but under a
+    — the scan is the same ``_wp_scan_sql`` aggregate — but under a
     Zipfian corpus the heavy per-character scan runs once per TYPE
     instead of once per TOKEN instance (the same economics the BPE
     pandas-UDF path gets from its per-batch word cache).
@@ -692,13 +676,9 @@ def wordpiece_tokenize_df(df: DataFrame, text_col: str, model: dict,
         F.posexplode("_wp_words").alias("_pos", "_w"))
     distinct = ex.select("_w").distinct()
 
-    def with_table(tab: Column) -> Column:
-        return _wp_scan_word(F.col("_w"), tab, model)
-
     scanned = distinct.withColumn(
-        "_pieces",
-        F.get(F.transform(F.array(_wp_table_expr(model)), with_table),
-              0))
+        "_pieces", bind_sql(_wp_table_expr(model), "tab",
+                            _wp_scan_sql("_w", "tab", model)))
     regrouped = (
         ex.join(scanned, "_w")
         .groupBy("_wid")
@@ -739,11 +719,10 @@ def wordpiece_ids(c: Column, model: dict,
     piece against the same bound table ([UNK] included — it is in the
     vocabulary by the loader's contract)."""
     pieces = wordpiece_tokenize(c, model, lowercase=lowercase)
-
-    def with_table(tab: Column) -> Column:
-        return F.transform(pieces, lambda p: _wp_probe(tab, p))
-
-    return F.get(F.transform(F.array(_wp_table_expr(model)), with_table), 0)
+    return bind_sql(
+        F.named_struct(F.lit("tab"), _wp_table_expr(model),
+                       F.lit("pieces"), pieces), "wp",
+        f"transform(wp.pieces, p -> {_wp_probe_sql('wp.tab', 'p')})")
 
 
 def wordpiece_tokenize_py(text: str, model: dict,

@@ -30,8 +30,13 @@ def auroc(df: DataFrame, score_col: str, label_col: str) -> float:
 
     Plan: group by score (one row per distinct score with n / n_pos), order
     by score, running ranks via a window over the grouped rows, then
-    U = sum(avg_rank * n_pos) - P(P+1)/2, AUC = U / (P*N)."""
-    row = _auroc_terms(df, score_col, label_col).first()
+    U = sum(avg_rank * n_pos) - P(P+1)/2, AUC = U / (P*N). The ranked
+    table ``counts_below`` persists is released once the terms are read
+    (model selection calls this per candidate x fold)."""
+    caches: list = []
+    row = _auroc_terms(df, score_col, label_col, caches).first()
+    for c in caches:
+        c.unpersist()
     P, N = int(row["P"] or 0), int(row["N"] or 0)
     if P == 0 or N == 0:
         return 0.0
@@ -40,7 +45,8 @@ def auroc(df: DataFrame, score_col: str, label_col: str) -> float:
     return u2 / (2.0 * P * N)
 
 
-def _auroc_terms(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
+def _auroc_terms(df: DataFrame, score_col: str, label_col: str,
+                 caches: list | None = None) -> DataFrame:
     """Integer Mann-Whitney terms: rank_pos2 = sum over distinct scores of
     (2*count_below + n + 1) * n_pos  ==  2 * sum(avg_rank * n_pos).
     Keeping the numerator integral makes AUC bit-identical at any
@@ -54,7 +60,7 @@ def _auroc_terms(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     # range-partitioned parallel rank windows (no single-partition global
     # Window.orderBy) — survives continuous scores where every value is
     # distinct and the grouped table is as large as the input
-    ranked = counts_below(g, "s", "n")
+    ranked = counts_below(g, "s", "n", caches=caches)
     return ranked.agg(
         F.sum((2 * F.col("below") + F.col("n") + 1) * F.col("np")).alias("rank_pos2"),
         F.sum("np").alias("P"),

@@ -62,6 +62,23 @@ def snapshot(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def observed_metrics(df: DataFrame, name: str) -> dict:
+    """``{alias: value}`` of the metrics ``df.observe(name, ...)`` collected
+    when ``df`` itself last ran — e.g. by ``snapshot(df)``, so a loop reads
+    a per-round flag from the snapshot's own job instead of a second job.
+    Values are None over no rows. Keep the metrics idempotent (max,
+    bool_or, distinct sketches): under a reliable checkpoint dir the plan
+    can run twice, and a count would double.
+
+    Read from the query execution, not through ``pyspark.sql.Observation``:
+    in Spark 4.1 the first Observation gives the session a
+    non-serializable ``ObservationManager``, after which any task closure
+    that captures the session (a fitted ``LogisticRegressionModel``'s
+    training summary) fails with "Task not serializable"."""
+    row = df._jdf.queryExecution().observedMetrics().get(name).get()
+    return {f: row.get(i) for i, f in enumerate(row.schema().fieldNames())}
+
+
 def _finite_repr(x) -> str:
     """repr of a float for SQL-literal embedding; non-finite values would
     emit 'nan'/'inf' tokens the parser rejects with an opaque error far
@@ -74,6 +91,12 @@ def _finite_repr(x) -> str:
     return repr(v)
 
 
+def vec_sql(xs) -> str:
+    """SQL text of an array<double> literal (``lit_vec``'s text, for
+    embedding in a larger parsed body such as ``bind_sql``'s)."""
+    return "array(" + ",".join(_finite_repr(x) + "D" for x in xs) + ")"
+
+
 def lit_vec(xs) -> Column:
     """array<double> literal from ONE parsed SQL expression. Building
     numeric literal arrays element-wise through the python Column API
@@ -82,8 +105,7 @@ def lit_vec(xs) -> Column:
     emits the shortest round-trip decimal and the ``D`` suffix makes the
     parser take Double.parseDouble, so every parsed element is
     bit-identical to the python float. Raises ValueError on NaN/Inf."""
-    return F.expr(
-        "array(" + ",".join(_finite_repr(x) + "D" for x in xs) + ")")
+    return F.expr(vec_sql(xs))
 
 
 def sql_str_lit(s: str) -> str:
@@ -107,9 +129,7 @@ def sql_str_lit(s: str) -> str:
 def lit_matrix(rows) -> Column:
     """array<array<double>> literal from one parsed SQL expression (see
     lit_vec). Raises ValueError on NaN/Inf."""
-    return F.expr("array(" + ",".join(
-        "array(" + ",".join(_finite_repr(x) + "D" for x in r) + ")"
-        for r in rows) + ")")
+    return F.expr("array(" + ",".join(vec_sql(r) for r in rows) + ")")
 
 
 def bind_once(col: Column, fn) -> Column:
@@ -132,6 +152,64 @@ def bind_once(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
+def bind_sql(col: Column, var: str, body_sql: str) -> Column:
+    """``body_sql`` — SQL text in which ``var`` names the value of ``col`` —
+    evaluated once per row: ``bind_once`` with the lambda body parsed by
+    the JVM from ONE string instead of built node by node.
+
+    Every ``F.*`` call, and every Python lambda handed to a higher-order
+    function, is several py4j round-trips; a per-row expression with
+    thousands of nodes (LSH plane bits, the WordPiece cursor scan, the
+    Gopher rule struct) spent seconds of driver time on construction
+    alone. Here the whole body is one ``F.expr`` lambda (``var -> body``)
+    passed, with ``array(col)``, to the JVM ``transform`` — the
+    ``PythonSQLUtils.fn`` path PySpark's own higher-order functions use —
+    so the cost is ~20 round-trips whatever the body's size. ``col`` is
+    any Column and appears once in the plan; ``body_sql`` may nest SQL
+    lambdas of its own (their variables must not reuse ``var``'s name)
+    and embeds literals through ``sql_str_lit`` / ``repr(float) + 'D'``
+    (the ``lit_vec`` idiom)."""
+    from pyspark import SparkContext
+    from pyspark.sql.classic.column import _to_java_column, _to_seq
+
+    sc = SparkContext._active_spark_context
+    args = _to_seq(sc, [_to_java_column(F.array(col)),
+                        _to_java_column(F.expr(f"{var} -> {body_sql}"))])
+    return Column(sc._jvm.PythonSQLUtils.fn("transform", args).apply(0))
+
+
+def _exchanges(plan) -> set[str]:
+    """Node names of the exchanges anywhere in the physical ``plan``."""
+    name = plan.nodeName()
+    names = {name} if name.endswith("Exchange") else set()
+    kids = plan.children()
+    for i in range(kids.size()):
+        names |= _exchanges(kids.apply(i))
+    return names
+
+
+def _streamed_partitions(plan) -> int | None:
+    """Partitions of a plan whose only exchanges are broadcasts, read
+    without running a job. With no shuffle AQE coalesces nothing, so the
+    count is the streamed side's: skip each ``BroadcastExchange`` child and
+    follow the one remaining child to a node that states its partitioning,
+    or to a leaf, whose RDD only lists files or reads block ids. None when
+    the plan does not say (several streamed children, or a cache not yet
+    built: the ``.rdd`` probe then builds it once and the real job reuses
+    it)."""
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    kids = [k for k in kids if k.nodeName() != "BroadcastExchange"]
+    if not kids:
+        if (plan.nodeName() == "InMemoryTableScan" and not
+                plan.relation().cacheBuilder().isCachedColumnBuffersLoaded()):
+            return None
+        return plan.execute().getNumPartitions()
+    return _streamed_partitions(kids[0]) if len(kids) == 1 else None
+
+
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition iff the input has fewer partitions than the cluster has
     cores. Heavy per-row expression pipelines (tokenize + n-grams, minhash
@@ -139,12 +217,28 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     parallelism — a single small parquet file means a single task doing all
     the work. At real scale inputs arrive with adequate partitioning and this
     is a no-op; the round-robin shuffle it inserts for small inputs costs
-    milliseconds."""
+    milliseconds.
+
+    A broadcast join is decided without running anything: under AQE,
+    ``df.rdd.getNumPartitions()`` materializes every query stage below, so
+    on ``docs ⋉ filter(docs)`` it ran the whole filter pass as an extra job
+    before the real job ran it again. The count is read from the plan
+    instead (``_streamed_partitions``); with no shuffle it is exact. Plans
+    without an exchange keep the probe (it only builds the RDD), and so do
+    plans with a shuffle, where it returns the count after AQE's
+    coalescing."""
     if df.isStreaming:  # no static partition count; micro-batches are sized upstream
         return df
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()   # before it runs: the initial plan
+    n = (_streamed_partitions(plan)
+         if _exchanges(plan) == {"BroadcastExchange"} else None)
+    if n is None:
+        n = df.rdd.getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df
 
@@ -205,7 +299,8 @@ def right_size_for_iteration(df: DataFrame, rows_per_partition: int = 100_000) -
 
 def counts_below(g: DataFrame, value_col: str, count_col: str,
                  out_col: str = "below", partitions: int | None = None,
-                 group_cols: list[str] | None = None) -> DataFrame:
+                 group_cols: list[str] | None = None,
+                 caches: list | None = None) -> DataFrame:
     """Exclusive running count ("rows with value < v") per distinct value —
     the building block of average-rank statistics (Spearman, Mann-Whitney
     AuROC) — computed with RANGE-PARTITIONED parallel windows instead of a
@@ -218,7 +313,9 @@ def counts_below(g: DataFrame, value_col: str, count_col: str,
     per-partition — no stage funnels all distinct values through one task,
     so the rank computation survives continuous (all-distinct) scores at
     100 TB. The input is persisted so the sampled range boundaries are
-    computed once and shared by the totals job and the output plan.
+    computed once and shared by the totals job and the output plan; pass
+    ``caches`` to receive the handle for unpersisting after
+    materialization (as ``running_total``).
 
     ``group_cols`` computes an independent ranking per group (e.g. one AuROC
     per data split) in the SAME single pass: range partitioning becomes
@@ -237,6 +334,8 @@ def counts_below(g: DataFrame, value_col: str, count_col: str,
                                F.col(value_col))
           .withColumn("_pid", F.spark_partition_id())
           .persist())
+    if caches is not None:
+        caches.append(rp)
     totals = rp.groupBy("_pid", *groups).agg(
         F.sum(count_col).alias("_t")).collect()
     offsets, acc = {}, defaultdict(int)
