@@ -234,23 +234,200 @@ def test_select_binary_model(spark, trainable):
     assert sel.fitted_model is not None
 
 
-def test_model_selection_and_metrics_release_their_caches(spark, trainable):
-    """``auroc`` unpersists the ranked table ``util.counts_below`` persists
-    once its terms are read: model selection (one AuROC per candidate x
-    fold) and the holdout metrics leave the session's CacheManager
-    empty, instead of one leaked cache entry per call."""
+# (node, rank) / (node, hub, authority) over the test_graph edges, and the
+# kept ids of one streaming-ingest batch, as computed before cache_scope
+GRAPH_EDGES = [("a", "b", 2.0), ("a", "c", 1.0), ("b", "a", 1.0),
+               ("c", "a", 1.0), ("c", "d", 3.0), ("b", "d", 1.0),
+               ("e", "a", 1.0)]
+PAGERANK_2 = [("a", 0.23241333389999996), ("b", 0.281855), ("c", 0.17943),
+              ("d", 0.22929666695), ("e", 0.077005)]
+HITS_2 = [("a", 0.11345520596311189, 0.7810942984779033),
+          ("b", 0.6523674319275546, 0.12016835397883387),
+          ("c", 0.6523674319275546, 0.12016835397883387),
+          ("d", 0.0, 0.6008417679865559),
+          ("e", 0.3687294179639104, 0.0)]
+INGEST_DROPPED = {12, 50, 82, 114}
+
+
+def test_model_selection_and_metrics_release_their_caches(
+        spark, trainable, sf_dir, tmp_path):
+    """Every call that caches an intermediate and materializes its result
+    before returning releases what it cached (``util.cache_scope``):
+    model selection (one AuROC per candidate x fold), the holdout metrics,
+    Spearman (two ranked tables), PageRank, HITS, a workflow fit around a
+    nested model selector, and one streaming-ingest batch each leave the
+    session's CacheManager empty and return the values they returned
+    before the scope existed."""
+    from transmogrifai_spark.llm.dedup import (build_lsh_index,
+                                               stream_dedup_ingest)
+    from transmogrifai_spark.ml.selectors import model_selector_stage
+    from transmogrifai_spark.operators.graph import hits, pagerank
+    from transmogrifai_spark.operators.preparators import spearman_corr
+    from transmogrifai_spark.operators.vectorizers import transmogrify_batched
+    from transmogrifai_spark.sources.tables import load_table
+    from transmogrifai_spark.streaming.windows import file_stream
+    from transmogrifai_spark.workflow import Workflow
+
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     sel = select_binary_model(trainable, "fv", "y", "k",
                               candidates=default_binary_candidates(small=True),
                               k=2)
     assert cache.isEmpty()
+    assert sel.best_metric > 0.8
     scored = spark.createDataFrame(
         [(0.9, 1.0), (0.8, 0.0), (0.3, 1.0), (0.1, 0.0), (0.3, 0.0)],
         "p double, y double")
     assert binary_metrics(scored, "p", "y")["auroc"] == auroc(scored, "p", "y")
     assert cache.isEmpty()
-    assert sel.best_metric > 0.8
+
+    ties = spark.createDataFrame(
+        [(float(i % 7), float(i * i % 11)) for i in range(60)],
+        "a double, b double")
+    assert spearman_corr(ties, "a", "b") == 0.015548589354889635
+    assert cache.isEmpty()
+
+    edges = spark.createDataFrame(GRAPH_EDGES, "src string, dst string, w double")
+    assert sorted(map(tuple, pagerank(edges, weight_col="w", iterations=2,
+                                      portable=True).collect())) == PAGERANK_2
+    assert cache.isEmpty()
+    assert sorted(map(tuple, hits(edges, iterations=2,
+                                  portable=True).collect())) == HITS_2
+    assert cache.isEmpty()
+
+    rows = [(str(r["k"]), *r["arr"], r["y"]) for r in trainable.collect()]
+    t = spark.createDataFrame(rows, "key string, x1 double, x2 double, y double")
+    feats = from_dataframe(t, response="y")
+    stage = model_selector_stage(
+        transmogrify_batched([feats["x1"], feats["x2"]]), feats["y"],
+        feats["key"], k=2,
+        candidates=[("LogisticRegression", {"regParam": 0.01, "maxIter": 20})])
+    model = Workflow([stage.output]).fit(t)
+    assert cache.isEmpty()
+    assert [c.metric for c in stage.fitted.selected.leaderboard] == \
+        pytest.approx([0.9680289517261516], rel=1e-9)
+    assert model.score(t).agg(F.sum("score")).first()[0] == \
+        pytest.approx(216.00002162929462, rel=1e-9)
+
+    # one micro-batch: 120 docs plus exact clones of ten of them
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = str(tmp_path / "src")
+    docs.where(F.col("doc_id") < 120).unionByName(
+        docs.where(F.col("doc_id") < 10)
+        .select((F.col("doc_id") + 90000).alias("doc_id"), "text")) \
+        .coalesce(1).write.parquet(src)
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "kept")
+    build_lsh_index(docs.limit(0), "doc_id", "text", idx, num_hashes=16,
+                    bands=4, n_shards=16, batch_id=0)
+    stream_dedup_ingest(file_stream(spark, src), idx, out, "doc_id", "text",
+                        checkpoint=str(tmp_path / "ck")).awaitTermination()
+    assert cache.isEmpty()
+    assert sorted(r[0] for r in spark.read.parquet(out).collect()) == \
+        sorted(set(range(120)) - INGEST_DROPPED)
+
+
+def test_raising_fit_releases_its_cache(spark, trainable):
+    """A fit that raises after caching its frame still releases it."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(AttributeError):
+        select_binary_model(trainable, "fv", "y", "k",
+                            candidates=[("NoSuchClassifier", {})])
+    assert cache.isEmpty()
+
+
+class _Frame:
+    """Stands in for a DataFrame: logs persist/unpersist calls."""
+
+    def __init__(self, name, log):
+        self.name, self.log = name, log
+
+    def persist(self):
+        self.log.append(("persist", self.name))
+        return self
+
+    def unpersist(self):
+        self.log.append(("unpersist", self.name))
+        return self
+
+
+def test_cache_scope_nests_and_releases_newest_first_on_error():
+    from transmogrifai_spark.util import cache_scope, cached
+    log = []
+    with pytest.raises(RuntimeError):
+        with cache_scope():
+            cached(_Frame("a", log))
+            with cache_scope():
+                cached(_Frame("b", log))
+                cached(_Frame("c", log))
+            assert log[-2:] == [("unpersist", "c"), ("unpersist", "b")]
+            cached(_Frame("d", log))
+            raise RuntimeError("body failed")
+    assert log == [("persist", "a"), ("persist", "b"), ("persist", "c"),
+                   ("unpersist", "c"), ("unpersist", "b"), ("persist", "d"),
+                   ("unpersist", "d"), ("unpersist", "a")]
+    # no scope open: cached() is persist() alone
+    log.clear()
+    cached(_Frame("e", log))
+    assert log == [("persist", "e")]
+
+
+def test_cache_scope_is_per_thread_and_unscoped_frames_stay(spark):
+    import threading
+
+    from pyspark import StorageLevel
+
+    from transmogrifai_spark.util import cache_scope, cached
+    spark.catalog.clearCache()
+    mine, other, loose = (spark.range(n) for n in (3, 4, 5))
+    with cache_scope():
+        cached(mine)
+        worker = threading.Thread(target=cached, args=(other,))
+        worker.start()
+        worker.join(30)
+        assert not worker.is_alive()
+        assert mine.storageLevel != StorageLevel.NONE
+    assert mine.storageLevel == StorageLevel.NONE
+    assert other.storageLevel != StorageLevel.NONE
+    cached(loose)
+    assert loose.storageLevel != StorageLevel.NONE
+    spark.catalog.clearCache()
+
+
+def test_lazy_dedup_frames_released_by_the_callers_scope(spark, sf_dir):
+    """The MinHash signature and LSH band frames back lazy results, so the
+    functions cache them without a scope of their own: a caller's scope
+    around two rounds of both collects leaves no persistent RDD (without
+    it the session gained 3, then 8), and the pairs match the unscoped
+    ones."""
+    import random
+
+    from transmogrifai_spark.llm.dedup import (embedding_near_dup_pairs_lsh,
+                                               minhash_lsh_candidates)
+    from transmogrifai_spark.sources.tables import load_table
+    from transmogrifai_spark.util import cache_scope
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    rng = random.Random(3)
+    vecs = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(20)]
+    emb = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)]
+        + [(i + 100, v) for i, v in enumerate(vecs)], "id bigint, v array<double>")
+
+    def run():
+        return (sorted(map(tuple, minhash_lsh_candidates(
+                    docs, "doc_id", "text", num_hashes=16, bands=4).collect())),
+                sorted(map(tuple, embedding_near_dup_pairs_lsh(
+                    emb, "id", "v", dim=16, threshold=0.99).collect())))
+
+    unscoped = run()
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    before = persistent.size()
+    with cache_scope():
+        first, second = run(), run()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert first == second == unscoped
+    assert len(unscoped[1]) >= 20
 
 
 def test_train_validation_split_select(spark, trainable):

@@ -1,7 +1,8 @@
 """Session state has one owner: library calls leave the caller's session
-confs as they found them, scoped conf changes are thread-safe, and no
+confs as they found them, scoped conf changes are thread-safe, no
 module outside session.py / util.scoped_conf writes a conf or reads the
-environment."""
+environment, and no module outside util.cached / cache_scope / snapshot
+persists, unpersists or checkpoints a frame."""
 import ast
 import os
 import threading
@@ -141,10 +142,16 @@ def test_library_calls_leave_caller_session_confs(caller, sf_dir, tmp_path):
     assert _caller_confs(caller) == before
 
 
+STORAGE_CALLS = ("persist", "cache", "unpersist", "checkpoint",
+                 "localCheckpoint")
+
+
 def _conf_write_and_env_read_sites(pkg):
-    """(file, line, what) for every ``<x>.conf.set/unset`` call and every
-    ``environ``/``getenv`` read under ``pkg``, minus the allowed owners:
-    session.py, and util.scoped_conf."""
+    """(file, line, what) for every ``<x>.conf.set/unset`` call, every
+    ``environ``/``getenv`` read and every storage call (``STORAGE_CALLS``)
+    under ``pkg``, minus the allowed owners: session.py and
+    util.scoped_conf for confs and the environment; util.cached,
+    util.cache_scope and util.snapshot for cached storage."""
     hits = []
     for root, _, files in os.walk(pkg):
         for name in files:
@@ -153,13 +160,22 @@ def _conf_write_and_env_read_sites(pkg):
             path = os.path.join(root, name)
             rel = os.path.relpath(path, pkg)
             tree = ast.parse(open(path).read(), path)
-            allowed = set()
+            conf_owner, storage_owner = set(), set()
             if rel == "util.py":
                 for fn in tree.body:
-                    if isinstance(fn, ast.FunctionDef) and fn.name == "scoped_conf":
-                        allowed = {id(n) for n in ast.walk(fn)}
+                    if not isinstance(fn, ast.FunctionDef):
+                        continue
+                    if fn.name == "scoped_conf":
+                        conf_owner |= {id(n) for n in ast.walk(fn)}
+                    if fn.name in ("cached", "cache_scope", "snapshot"):
+                        storage_owner |= {id(n) for n in ast.walk(fn)}
             for node in ast.walk(tree):
-                if id(node) in allowed:
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in STORAGE_CALLS
+                        and id(node) not in storage_owner):
+                    hits.append((rel, node.lineno, f".{node.func.attr}"))
+                if id(node) in conf_owner:
                     continue
                 if (isinstance(node, ast.Attribute)
                         and node.attr in ("set", "unset")
@@ -185,15 +201,31 @@ def test_session_state_lint_catches_violations(tmp_path):
         "def scoped_conf(spark, confs):\n"
         "    spark.conf.set('a', 'b')\n"
         "def other(spark):\n"
-        "    spark.conf.unset('a')\n")
+        "    spark.conf.unset('a')\n"
+        "def cached(df):\n"
+        "    return df.persist()\n"
+        "def snapshot(df):\n"
+        "    return df.localCheckpoint(eager=True)\n"
+        "def release(df):\n"
+        "    df.unpersist()\n")
     (tmp_path / "mod.py").write_text(
         "import os\nfrom os import getenv\n"
         "def f(df):\n"
         "    df.sparkSession.conf.set('a', 'b')\n"
-        "    return os.environ.get('X')\n")
+        "    return os.environ.get('X')\n"
+        "def g(df):\n"
+        "    a = df.persist()\n"
+        "    b = df.cache().checkpoint(eager=False)\n"
+        "    a.unpersist()\n"
+        "    return df.localCheckpoint()\n")
     (tmp_path / "session.py").write_text(
         "import os\nX = os.environ.get('X')\n"
-        "def f(spark):\n    spark.conf.set('a', 'b')\n")
+        "def f(spark):\n    spark.conf.set('a', 'b')\n"
+        "def g(df):\n    return df.persist()\n")
     assert sorted(_conf_write_and_env_read_sites(str(tmp_path))) == [
         ("mod.py", 2, "environ"), ("mod.py", 4, "conf.set"),
-        ("mod.py", 5, "environ"), ("util.py", 4, "conf.unset")]
+        ("mod.py", 5, "environ"), ("mod.py", 7, ".persist"),
+        ("mod.py", 8, ".cache"), ("mod.py", 8, ".checkpoint"),
+        ("mod.py", 9, ".unpersist"), ("mod.py", 10, ".localCheckpoint"),
+        ("session.py", 6, ".persist"),
+        ("util.py", 4, "conf.unset"), ("util.py", 10, ".unpersist")]

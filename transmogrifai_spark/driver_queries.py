@@ -35,7 +35,7 @@ from .sources.readers import (AggSpec, AggregateDataReader, ConditionalDataReade
                               CutOffTime, DataReader, InlineReader,
                               aggregate_events, conditional_aggregate_events)
 from .sources.tables import load_table
-from .util import scoped_conf
+from .util import cached, scoped_conf
 
 CUTOFF = "2024-01-15 00:00:00"
 
@@ -1917,11 +1917,9 @@ def q_text_quality(spark, sf_dir):
     edges = ldf.select(_web.url_host(F.col("_u")).alias("src"),
                        _web.url_host(F.col("_l.url")).alias("dst"))
     ranks = pagerank(edges, iterations=3, portable=True)
-    # snapshot the ~26-node rank table driver-side (bounded collect, the
-    # cms_df pattern) so the cache can be released without the lazy join
-    # re-deriving the whole iteration chain at action time
+    # the ~26-node rank table goes driver-side (bounded collect, the
+    # cms_df pattern) and back as a local relation
     rank_rows = ranks.collect()
-    ranks.unpersist()
     rank_df = spark.createDataFrame(rank_rows, "node string, rank double")
     lg = (docs.select("doc_id",
                       F.size(links).cast("long").alias("n_links"),
@@ -1941,8 +1939,7 @@ def q_text_quality(spark, sf_dir):
     hh = hits(docs.select(F.col("source").alias("src"),
                           F.col("lang").alias("dst")),
               iterations=2, portable=True)
-    hh_rows = hh.collect()  # ~25 nodes — bounded snapshot, then release
-    hh.unpersist()
+    hh_rows = hh.collect()  # ~25 nodes — bounded collect
     hh_df = spark.createDataFrame(
         hh_rows, "node string, hub double, authority double")
     hx = (docs.select("doc_id", "source", "lang")
@@ -2901,8 +2898,8 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     import shutil
     import tempfile
     docs = _t(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, "doc_id", "text", n=3,
-                                    num_hashes=16, portable=True).persist()
+    sigs = cached(dedup.minhash_signatures(docs, "doc_id", "text", n=3,
+                                           num_hashes=16, portable=True))
     full = dedup.minhash_lsh_candidates(
         docs, "doc_id", "text", num_hashes=16, bands=4, portable=True,
         signatures=sigs) \
@@ -3056,7 +3053,7 @@ def q_ml_train_score(spark, sf_dir, timings=None):
     base = ja.generate(spark).withColumn(
         "label", F.coalesce(F.col("label_raw").cast("double"), F.lit(0.0)))
     if timings is not None:
-        base = base.persist()
+        base = cached(base)
         base.count()
     _mark("reader")
     feats = from_dataframe(base, response="label",
@@ -3071,9 +3068,9 @@ def q_ml_train_score(spark, sf_dir, timings=None):
     scored = to_ml_vector(model.score(base, keep_intermediate=True), "features")
     # deterministic 80/20 hash split on the key — layout-independent, the
     # same rows land in the holdout at any partitioning or scale
-    scored = scored.withColumn(
+    scored = cached(scored.withColumn(
         "split", F.when(F.pmod(F.xxhash64(F.col("key")), F.lit(5)) == 0,
-                        F.lit("holdout")).otherwise(F.lit("train"))).persist()
+                        F.lit("holdout")).otherwise(F.lit("train"))))
     scored = right_size_for_iteration(scored)
     lr = LogisticRegression(featuresCol="features_ml", labelCol="label",
                             maxIter=10, regParam=0.01)

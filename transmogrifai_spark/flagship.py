@@ -18,7 +18,7 @@ from .operators.preparators import sanity_checker
 from .operators.vectorizers import collect_slots, transmogrify_batched
 from .sources.joins import JoinedAggregateReader, JoinedReader
 from .sources.readers import AggSpec, DataReader
-from .util import right_size_for_iteration
+from .util import cached, right_size_for_iteration
 from .workflow import Workflow
 
 
@@ -68,7 +68,7 @@ def automl_flagship(spark: SparkSession, sf_dir: str,
     model = Workflow([sel_stage.output],
                      raw_feature_filter={"min_fill_rate": 0.001}).fit(
         right_size_for_iteration(base, rows_per_partition=25_000))
-    scored = model.score(base, keep_intermediate=True).persist()
+    scored = cached(model.score(base, keep_intermediate=True))
 
     # slot metadata: combined slots filtered by the sanity checker's keep set
     all_slots = collect_slots(model, "features")

@@ -36,8 +36,8 @@ from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..util import (bind_sql, ensure_parallelism, observed_metrics,
-                    scoped_conf, snapshot)
+from ..util import (bind_sql, cache_scope, cached, ensure_parallelism,
+                    observed_metrics, scoped_conf, snapshot)
 
 
 def text_digest(c: Column) -> Column:
@@ -113,7 +113,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # tokenize + n-gram expressions per branch — measured 3-4x the whole
     # query's cost. At cluster scale this is the stage you'd checkpoint or
     # write as a bucketed temp table (bucketed by _sh to pre-shuffle the join).
-    sh = sh.persist()
+    sh = cached(sh)
     if max_doc_freq is not None:
         # Broadcast the OVER-cap (hot) shingle set and anti-join it away.
         # The hot set is bounded by construction (few ultra-common shingles
@@ -236,7 +236,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
         sig = sig.select(F.col("id").alias("_id"), "_sig")
         # persist: signatures feed both sides of the bucket self-join;
         # minhash signatures are the most expensive expression here
-        sig = sig.persist()
+        sig = cached(sig)
     else:
         # caller-supplied (id, _sig) frame (minhash_signatures) — computed
         # once, shared with build_lsh_index & friends; the caller owns its
@@ -346,7 +346,7 @@ def sig_near_dup_pairs(df: DataFrame, id_col: str, sig_col,
     sig = df.select(F.col(id_col).alias("_id"),
                     (F.col(sig_col) if isinstance(sig_col, str)
                      else sig_col).alias("_sig"))
-    sig = ensure_parallelism(sig).persist()
+    sig = cached(ensure_parallelism(sig))
     banded = sig.select("_id", "_sig", F.explode(F.array(*[
         F.struct(F.lit(b).alias("band"),
                  F.shiftrightunsigned(F.col("_sig"), b * 16)
@@ -573,7 +573,7 @@ def semantic_dedup_pairs(df: DataFrame, id_col: str, vec_col: str,
                           F.element_at(ctr_mat, F.col("_cell") + 1))
         .alias("centroid_sim"),
         l2_norm(F.col("_cv")).alias("_n"))
-    assigned = assigned.persist()
+    assigned = cached(assigned)
     mined = assigned
     if max_cell is not None:
         ok = (assigned.groupBy("_cell").agg(F.count(F.lit(1)).alias("_m"))
@@ -597,7 +597,6 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                    keep: str = "edge", quality_col: str | None = None,
                    fit_sample: float | None = None,
                    max_cell: int | None = None,
-                   caches: list | None = None,
                    centroids: list[list[float]] | None = None,
                    quantize: int | None = None) -> DataFrame:
     """End-to-end semantic dedup: mine within-cluster cosine pairs, form
@@ -612,10 +611,9 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     Returns ``df``'s rows minus dropped semantic duplicates (columns
     unchanged). Docs in no duplicate group pass through untouched.
 
-    ``caches``, when given, collects the persisted assignment frame for
-    the caller to unpersist once the result is materialized (the
-    lsh_dedup_incremental contract); without it the cached frame lives
-    until session cleanup — fine for one-shot jobs, pass it in loops.
+    The assignment frame is ``cached``: run the call and materialize its
+    result inside a ``util.cache_scope`` to release it (loops should);
+    without one the session holds it.
 
     ``centroids`` passes explicit centroid vectors through to
     ``semantic_dedup_pairs`` (skips the KMeans fit). ``quantize`` rounds
@@ -626,8 +624,6 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     pairs, assigned = semantic_dedup_pairs(
         df, id_col, vec_col, n_clusters=n_clusters, eps=eps, seed=seed,
         fit_sample=fit_sample, max_cell=max_cell, centroids=centroids)
-    if caches is not None:
-        caches.append(assigned)  # the PERSISTED frame, pre-quantize
     clusters = duplicate_clusters(pairs)
     return semantic_dedup_keep(df, id_col, clusters, assigned, keep=keep,
                                quality_col=quality_col, quantize=quantize)
@@ -728,7 +724,7 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
                    F.explode(band_buckets).alias("_bb"))
     # persist: the banded projection feeds both sides of the self-join and
     # bucket computation is ~bands*planes_per_band*dim fused multiplies/row
-    bk = ensure_parallelism(bk).persist()
+    bk = cached(ensure_parallelism(bk))
     a, c = bk.alias("a"), bk.alias("b")
     cand = (a.join(c, (F.col("a._bb") == F.col("b._bb")) &
                    (F.col("a._id") < F.col("b._id")))
@@ -968,7 +964,6 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
                           within_batch: bool = True,
                           max_bucket: int | None = None,
                           exclude_batches: list[int] | None = None,
-                          caches: list | None = None,
                           signatures: DataFrame | None = None,
                           signature_params: dict | None = None) -> DataFrame:
     """Near-duplicate candidates of a NEW batch: (new) x (indexed corpus)
@@ -980,10 +975,9 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
     ``exclude_batches`` removes index subdirectories (``batch=<id>``
     partition values, a directory-pruning predicate) from the cross
     probe — a replaying micro-batch excludes its OWN registered subdir so
-    its docs never collide with their prior selves. ``caches``, when
-    given, collects the persisted frames for the caller to unpersist once
-    the result is materialized (long-lived streaming sessions would
-    otherwise leak one cached frame per batch).
+    its docs never collide with their prior selves. The batch's banded
+    frame is ``cached``; a long-lived streaming session materializes the
+    result inside a ``util.cache_scope`` so it is released per batch.
 
     Scale shape: the new batch's banded rows are computed once and are
     small; the index side is filtered to the batch's DISTINCT shards (a
@@ -1030,9 +1024,7 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
                      num_hashes=meta["num_hashes"], bands=meta["bands"],
                      portable=meta["portable"], n_shards=meta["n_shards"],
                      signatures=signatures)
-    nb = nb.persist()
-    if caches is not None:
-        caches.append(nb)
+    nb = cached(nb)
     shards = sorted(r["_shard"] for r in nb.select("_shard").distinct().collect())
     try:
         idx = spark.read.parquet(os.path.join(path, "bands")) \
@@ -1108,8 +1100,7 @@ def stream_lsh_index(stream: DataFrame, path: str, id_col: str,
 def exact_dedup_incremental(spark, registry_path: str, new_docs: DataFrame,
                             id_col: str, text_col: str,
                             batch_id: int | None = None,
-                            n_buckets: int = 64,
-                            caches: list | None = None) -> DataFrame:
+                            n_buckets: int = 64) -> DataFrame:
     """Incremental EXACT dedup: drop new documents whose content digest is
     already registered, keep one representative per digest within the
     batch, and register the survivors — all without ever scanning prior
@@ -1118,9 +1109,9 @@ def exact_dedup_incremental(spark, registry_path: str, new_docs: DataFrame,
     with the batch, not the corpus) and replays of the same ``batch_id``
     are skipped exactly-once.
 
-    Returns the deduplicated batch (the rows that were registered).
-    ``caches`` (optional list) collects the internally persisted frame for
-    the caller to unpersist once the result is materialized."""
+    Returns the deduplicated batch (the rows that were registered). The
+    batch's representative frame is ``cached`` (released by the caller's
+    ``util.cache_scope``)."""
     from ..sources.cow_snapshot import CowSnapshot, bucket_of
 
     snap = CowSnapshot(registry_path, ["digest"], "first_id",
@@ -1128,11 +1119,9 @@ def exact_dedup_incremental(spark, registry_path: str, new_docs: DataFrame,
     with_digest = new_docs.withColumn("digest", text_digest(F.col(text_col)))
     # one representative per digest within the batch (min id, deterministic)
     w = Window.partitionBy("digest").orderBy(F.col(id_col).asc())
-    batch_rep = (with_digest
-                 .withColumn("_rn", F.row_number().over(w))
-                 .where(F.col("_rn") == 1).drop("_rn")).persist()
-    if caches is not None:
-        caches.append(batch_rep)
+    batch_rep = cached(with_digest
+                       .withColumn("_rn", F.row_number().over(w))
+                       .where(F.col("_rn") == 1).drop("_rn"))
     # probe ONLY the buckets this batch's digests hash to
     buckets = sorted({r["b"] for r in batch_rep.select(
         bucket_of(["digest"], n_buckets).alias("b")).distinct().collect()})
@@ -1195,7 +1184,6 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
                               max_hamming: int = 3,
                               within_batch: bool = True,
                               append_batch_id: int | None = None,
-                              caches: list | None = None,
                               max_bucket: int | None = None,
                               exclude_batches: list[int] | None = None
                               ) -> DataFrame:
@@ -1231,9 +1219,7 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
         .select("nid", "nsig", F.col("bb.band").alias("band"),
                 F.col("bb.bits").alias("bits"),
                 F.pmod("bb.bits", F.lit(meta["n_shards"])).alias("_shard"))
-    nb = nb.persist()
-    if caches is not None:
-        caches.append(nb)
+    nb = cached(nb)
     shards = sorted(r["_shard"] for r in nb.select("_shard").distinct().collect())
     idx = spark.read.parquet(os.path.join(path, "bands")) \
         .where(F.col("_shard").isin(shards))
@@ -1293,30 +1279,24 @@ def stream_dedup_ingest(stream: DataFrame, index_path: str, out_path: str,
 
     def do_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        caches: list = []
-        # exclude THIS batch's own registered subdir (batch_id + 1 — see
-        # append below) from the cross probe: on an at-least-once replay
-        # the batch's kept docs are already in the index, and probing them
-        # would pair batch docs against their prior selves
-        pairs = lsh_dedup_incremental(spark, index_path, batch, id_col,
-                                      text_col, within_batch=True,
-                                      max_bucket=max_bucket,
-                                      exclude_batches=[batch_id + 1],
-                                      caches=caches).persist()
-        # id2 is ALWAYS the doc to drop: cross pairs are (corpus_id,
-        # new_id) — the new doc loses to the already-ingested corpus doc
-        # regardless of id ordering — and within pairs are canonicalized
-        # (id1 < id2), so keep-the-min == drop id2
-        drop = pairs.select(F.col("id2").alias(id_col)).distinct()
-        kept = batch.join(drop, id_col, "left_anti").persist()
-        append_lsh_index(spark, index_path, kept, id_col, text_col,
-                         batch_id=batch_id + 1)  # batch=0 is the build
-        kept.write.mode("overwrite") \
-            .parquet(f"{out_path}/batch={batch_id}")
-        kept.unpersist()
-        pairs.unpersist()
-        for c in caches:
-            c.unpersist()
+        with cache_scope():
+            # exclude THIS batch's own registered subdir (batch_id + 1 —
+            # see append below) from the cross probe: on an at-least-once
+            # replay the batch's kept docs are already in the index, and
+            # probing them would pair batch docs against their prior selves
+            pairs = cached(lsh_dedup_incremental(
+                spark, index_path, batch, id_col, text_col, within_batch=True,
+                max_bucket=max_bucket, exclude_batches=[batch_id + 1]))
+            # id2 is ALWAYS the doc to drop: cross pairs are (corpus_id,
+            # new_id) — the new doc loses to the already-ingested corpus
+            # doc regardless of id ordering — and within pairs are
+            # canonicalized (id1 < id2), so keep-the-min == drop id2
+            drop = pairs.select(F.col("id2").alias(id_col)).distinct()
+            kept = cached(batch.join(drop, id_col, "left_anti"))
+            append_lsh_index(spark, index_path, kept, id_col, text_col,
+                             batch_id=batch_id + 1)  # batch=0 is the build
+            kept.write.mode("overwrite") \
+                .parquet(f"{out_path}/batch={batch_id}")
 
     writer = stream.writeStream.foreachBatch(do_batch).outputMode("append")
     if checkpoint:

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import bind_sql, sql_str_lit
+from ..util import bind_sql, cached, sql_str_lit
 
 # words = whitespace tokens, per both papers
 _WS = r"\s+"
@@ -230,7 +230,7 @@ def repetition_metrics(df: DataFrame, id_col: str, text_col: str,
         _words(F.lower(F.coalesce(F.col(text_col), F.lit("")))).alias("ws"))
     base = base.withColumn("n_words", F.size("ws")) \
         .withColumn("n_chars", F.length(F.array_join("ws", " ")))
-    base = base.persist()
+    base = cached(base)
     out = base.select("doc", "n_words", "n_chars")
     for n, kind in [(n, "top") for n in top_ngram] + \
                    [(n, "dup") for n in dup_ngram]:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokenize
-from ..util import ensure_parallelism
+from ..util import cached, ensure_parallelism
 
 
 def bm25_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -110,7 +110,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, id_col: str,
     # without it the tokenize/explode/count pipeline runs twice (the
     # ngram_jaccard_pairs lesson). The indexed path has no such issue —
     # its two reads are directory-pruned parquet scans.
-    post = bm25_postings(docs, id_col, text_col).persist()
+    post = cached(bm25_postings(docs, id_col, text_col))
     dfreq = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if max_df is not None:
         dfreq = dfreq.where(F.col("df") <= max_df)

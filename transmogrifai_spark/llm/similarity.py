@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..util import bind_sql, ensure_parallelism, vec_sql
+from ..util import bind_sql, cache_scope, cached, ensure_parallelism, vec_sql
 
 
 def _pair(**cols: Column) -> Column:
@@ -461,16 +461,17 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
         # it (the injection path has no fits — a persist there is pure
         # overhead, r7 review finding); released after the fits, since the
         # returned encode plan recomputes residuals in its own single pass
-        assigned = assigned.persist()
         codebooks = []
-        for i in range(m):
-            sl = assigned.select(
-                array_to_vector(F.slice(F.col("_res"), i * sub_d + 1, sub_d)).alias("_fv"))
-            fit_on = sl.sample(fit_sample, seed=seed + i) if fit_sample else sl
-            km = KMeans(k=k_codes, seed=seed + i, maxIter=max_iter,
-                        featuresCol="_fv", predictionCol="_code")
-            codebooks.append([[float(x) for x in c]
-                              for c in km.fit(fit_on).clusterCenters()])
+        with cache_scope():
+            assigned = cached(assigned)
+            for i in range(m):
+                sl = assigned.select(array_to_vector(
+                    F.slice(F.col("_res"), i * sub_d + 1, sub_d)).alias("_fv"))
+                fit_on = sl.sample(fit_sample, seed=seed + i) if fit_sample else sl
+                km = KMeans(k=k_codes, seed=seed + i, maxIter=max_iter,
+                            featuresCol="_fv", predictionCol="_code")
+                codebooks.append([[float(x) for x in c]
+                                  for c in km.fit(fit_on).clusterCenters()])
 
     def argmin_code(res_slice: Column, book: list[list[float]]) -> Column:
         # two-param transform lambda intentional: the index IS the code.
@@ -499,8 +500,6 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
                .withColumn("_codes", codes)
                .withColumn("_rnorm", l2_norm(recon))
                .select("neighbor_id", "_cell", "_codes", "_rnorm"))
-    if model is None:
-        assigned.unpersist()
     return encoded, {"centroids": centroids, "codebooks": codebooks}
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from ..util import ensure_parallelism
+from ..util import cached, ensure_parallelism
 
 # Compact stopword profiles (top function words) — deterministic language-ID
 # heuristic: score(text, lang) = fraction of tokens in the profile.
@@ -402,7 +402,7 @@ def winnow_overlap_pairs(df: DataFrame, id_col: str, text_col: str,
            .select(F.col(id_col).alias("doc"),
                    F.explode(winnow_fingerprints(F.col(text_col), k, w))
                    .alias("fp")))
-    fps = fps.persist()
+    fps = cached(fps)
     hot = (fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
            .where(F.col("df") > max_fingerprint_freq))
     idx = fps.join(F.broadcast(hot), "fp", "left_anti")

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import cache_scope
+
 
 def auroc(df: DataFrame, score_col: str, label_col: str) -> float:
     """Exact AuROC via Mann-Whitney U with average ranks for ties.
@@ -31,12 +33,10 @@ def auroc(df: DataFrame, score_col: str, label_col: str) -> float:
     Plan: group by score (one row per distinct score with n / n_pos), order
     by score, running ranks via a window over the grouped rows, then
     U = sum(avg_rank * n_pos) - P(P+1)/2, AUC = U / (P*N). The ranked
-    table ``counts_below`` persists is released once the terms are read
+    table cached by ``counts_below`` is released once the terms are read
     (model selection calls this per candidate x fold)."""
-    caches: list = []
-    row = _auroc_terms(df, score_col, label_col, caches).first()
-    for c in caches:
-        c.unpersist()
+    with cache_scope():
+        row = _auroc_terms(df, score_col, label_col).first()
     P, N = int(row["P"] or 0), int(row["N"] or 0)
     if P == 0 or N == 0:
         return 0.0
@@ -45,8 +45,7 @@ def auroc(df: DataFrame, score_col: str, label_col: str) -> float:
     return u2 / (2.0 * P * N)
 
 
-def _auroc_terms(df: DataFrame, score_col: str, label_col: str,
-                 caches: list | None = None) -> DataFrame:
+def _auroc_terms(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """Integer Mann-Whitney terms: rank_pos2 = sum over distinct scores of
     (2*count_below + n + 1) * n_pos  ==  2 * sum(avg_rank * n_pos).
     Keeping the numerator integral makes AUC bit-identical at any
@@ -60,7 +59,7 @@ def _auroc_terms(df: DataFrame, score_col: str, label_col: str,
     # range-partitioned parallel rank windows (no single-partition global
     # Window.orderBy) — survives continuous scores where every value is
     # distinct and the grouped table is as large as the input
-    ranked = counts_below(g, "s", "n", caches=caches)
+    ranked = counts_below(g, "s", "n")
     return ranked.agg(
         F.sum((2 * F.col("below") + F.col("n") + 1) * F.col("np")).alias("rank_pos2"),
         F.sum("np").alias("P"),

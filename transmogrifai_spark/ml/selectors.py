@@ -30,6 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import cache_scope, cached
 from .evaluators import auroc, binary_metrics, regression_metrics
 
 
@@ -174,26 +175,26 @@ def select_binary_model(df: DataFrame, features_col: str, label_col: str,
     fold (the cutDAG guarantee); identity when omitted. ``df`` must already
     carry the assembled ml-vector ``features_col``."""
     candidates = candidates or default_binary_candidates(small=True)
-    df = df.persist()
-    folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
-    leaderboard: list[CandidateResult] = []
-    for name, params in candidates:
-        fold_metrics = []
-        for train, valid in folds:
-            t = prepare(train) if prepare else train
-            p = _resolve_auto_layers(name, params, t, features_col)
-            model = _make_classifier(name, p, features_col, label_col).fit(t)
-            preds = _binary_score_col(model.transform(valid))
-            fold_metrics.append(auroc(preds, "score", label_col))
-        m = sum(fold_metrics) / len(fold_metrics)
-        leaderboard.append(CandidateResult(name, params, m, fold_metrics))
-    leaderboard.sort(key=lambda c: (-c.metric, c.name))
-    best = leaderboard[0]
-    full = prepare(df) if prepare else df
-    fitted = _make_classifier(
-        best.name, _resolve_auto_layers(best.name, best.params, full, features_col),
-        features_col, label_col).fit(full)
-    df.unpersist()
+    with cache_scope():
+        df = cached(df)
+        folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
+        leaderboard: list[CandidateResult] = []
+        for name, params in candidates:
+            fold_metrics = []
+            for train, valid in folds:
+                t = prepare(train) if prepare else train
+                p = _resolve_auto_layers(name, params, t, features_col)
+                model = _make_classifier(name, p, features_col, label_col).fit(t)
+                preds = _binary_score_col(model.transform(valid))
+                fold_metrics.append(auroc(preds, "score", label_col))
+            m = sum(fold_metrics) / len(fold_metrics)
+            leaderboard.append(CandidateResult(name, params, m, fold_metrics))
+        leaderboard.sort(key=lambda c: (-c.metric, c.name))
+        best = leaderboard[0]
+        full = prepare(df) if prepare else df
+        fitted = _make_classifier(
+            best.name, _resolve_auto_layers(best.name, best.params, full, features_col),
+            features_col, label_col).fit(full)
     return SelectedModel(best.name, best.params, best.metric,
                          leaderboard, fitted)
 
@@ -219,21 +220,21 @@ def select_regression_model(df: DataFrame, features_col: str, label_col: str,
                             seed: int = 42) -> SelectedModel:
     """RegressionModelSelector: k-fold CV, metric = -RMSE (higher better)."""
     candidates = candidates or default_regression_candidates(small=True)
-    df = df.persist()
-    folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
-    leaderboard = []
-    for name, params in candidates:
-        fold_metrics = []
-        for train, valid in folds:
-            model = _make_regressor(name, params, features_col, label_col).fit(train)
-            preds = model.transform(valid)
-            fold_metrics.append(-regression_metrics(preds, "prediction", label_col)["rmse"])
-        m = sum(fold_metrics) / len(fold_metrics)
-        leaderboard.append(CandidateResult(name, params, m, fold_metrics))
-    leaderboard.sort(key=lambda c: (-c.metric, c.name))
-    best = leaderboard[0]
-    fitted = _make_regressor(best.name, best.params, features_col, label_col).fit(df)
-    df.unpersist()
+    with cache_scope():
+        df = cached(df)
+        folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
+        leaderboard = []
+        for name, params in candidates:
+            fold_metrics = []
+            for train, valid in folds:
+                model = _make_regressor(name, params, features_col, label_col).fit(train)
+                preds = model.transform(valid)
+                fold_metrics.append(-regression_metrics(preds, "prediction", label_col)["rmse"])
+            m = sum(fold_metrics) / len(fold_metrics)
+            leaderboard.append(CandidateResult(name, params, m, fold_metrics))
+        leaderboard.sort(key=lambda c: (-c.metric, c.name))
+        best = leaderboard[0]
+        fitted = _make_regressor(best.name, best.params, features_col, label_col).fit(df)
     return SelectedModel(best.name, best.params, best.metric, leaderboard, fitted)
 
 
@@ -246,29 +247,29 @@ def select_multiclass_model(df: DataFrame, features_col: str, label_col: str,
         ("LogisticRegression", {"regParam": 0.01, "maxIter": 20}),
         ("RandomForestClassifier", {"maxDepth": 5, "numTrees": 20, "seed": 42}),
     ]
-    df = df.persist()
-    n_classes = None
-    if any(n == "MultilayerPerceptronClassifier" for n, _ in candidates):
-        n_classes = int(df.agg(F.max(F.col(label_col))).first()[0]) + 1
-    folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
-    leaderboard = []
-    for name, params in candidates:
-        fold_metrics = []
-        for train, valid in folds:
-            p = _resolve_auto_layers(name, params, train, features_col,
-                                     n_classes or 2)
-            model = _make_classifier(name, p, features_col, label_col).fit(train)
-            preds = model.transform(valid)
-            fold_metrics.append(multiclass_metrics(preds, "prediction", label_col)["accuracy"])
-        m = sum(fold_metrics) / len(fold_metrics)
-        leaderboard.append(CandidateResult(name, params, m, fold_metrics))
-    leaderboard.sort(key=lambda c: (-c.metric, c.name))
-    best = leaderboard[0]
-    fitted = _make_classifier(
-        best.name, _resolve_auto_layers(best.name, best.params, df, features_col,
-                                        n_classes or 2),
-        features_col, label_col).fit(df)
-    df.unpersist()
+    with cache_scope():
+        df = cached(df)
+        n_classes = None
+        if any(n == "MultilayerPerceptronClassifier" for n, _ in candidates):
+            n_classes = int(df.agg(F.max(F.col(label_col))).first()[0]) + 1
+        folds = list(kfold_by_key(df, key_col, k=k, seed=seed))
+        leaderboard = []
+        for name, params in candidates:
+            fold_metrics = []
+            for train, valid in folds:
+                p = _resolve_auto_layers(name, params, train, features_col,
+                                         n_classes or 2)
+                model = _make_classifier(name, p, features_col, label_col).fit(train)
+                preds = model.transform(valid)
+                fold_metrics.append(multiclass_metrics(preds, "prediction", label_col)["accuracy"])
+            m = sum(fold_metrics) / len(fold_metrics)
+            leaderboard.append(CandidateResult(name, params, m, fold_metrics))
+        leaderboard.sort(key=lambda c: (-c.metric, c.name))
+        best = leaderboard[0]
+        fitted = _make_classifier(
+            best.name, _resolve_auto_layers(best.name, best.params, df, features_col,
+                                            n_classes or 2),
+            features_col, label_col).fit(df)
     return SelectedModel(best.name, best.params, best.metric, leaderboard, fitted)
 
 
@@ -351,16 +352,16 @@ def train_validation_split_select(df: DataFrame, features_col: str, label_col: s
     """OpTrainValidationSplit — single split instead of k folds."""
     candidates = candidates or default_binary_candidates(small=True)
     train, valid = split_by_key(df, key_col, test_fraction, seed)
-    train = train.persist()
-    leaderboard = []
-    for name, params in candidates:
-        model = _make_classifier(name, params, features_col, label_col).fit(train)
-        preds = _binary_score_col(model.transform(valid))
-        leaderboard.append(CandidateResult(name, params, auroc(preds, "score", label_col), []))
-    leaderboard.sort(key=lambda c: (-c.metric, c.name))
-    best = leaderboard[0]
-    fitted = _make_classifier(best.name, best.params, features_col, label_col).fit(df)
-    train.unpersist()
+    with cache_scope():
+        train = cached(train)
+        leaderboard = []
+        for name, params in candidates:
+            model = _make_classifier(name, params, features_col, label_col).fit(train)
+            preds = _binary_score_col(model.transform(valid))
+            leaderboard.append(CandidateResult(name, params, auroc(preds, "score", label_col), []))
+        leaderboard.sort(key=lambda c: (-c.metric, c.name))
+        best = leaderboard[0]
+        fitted = _make_classifier(best.name, best.params, features_col, label_col).fit(df)
     return SelectedModel(best.name, best.params, best.metric, leaderboard, fitted)
 
 

@@ -19,7 +19,7 @@ Design (100 TB):
 * Ranks are snapshotted every round (``util.snapshot``), so LINEAGE
   stays one-iteration deep: with the scalar aggregates riding
   in-plan, each iteration's plan references the previous ranks several
-  times, and persist alone (which caches execution but still nests the
+  times, and persist alone (which stores computed rows but still nests the
   logical plan) would grow the analyzed plan exponentially over 10+
   iterations — the same iterative-Spark failure llm/dedup's connected
   components hit (driver OOM in plan analysis, reproduced here by the
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util import snapshot
+from ..util import cache_scope, cached, snapshot
 
 __all__ = ["pagerank", "hits", "connected_components"]
 
@@ -59,67 +59,62 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
 
     The returned frame is a ``util.snapshot`` (r9 — one small row per
     node, lineage already truncated, so re-use never recomputes the
-    iteration chain); ``.unpersist()`` on it is a harmless no-op, kept
-    acceptable for callers written against the old persisted-handle
-    contract (release is ``util.snapshot``'s reference-drop contract)."""
+    iteration chain); the tables it keeps cached are released before
+    it returns."""
     w = (F.col(weight_col) if weight_col else F.lit(1.0)).cast("double")
-    # persist the aggregated edge table FIRST: nodes/outw/frac/dangling all
-    # derive from it — without the cache each one re-runs the (possibly
-    # expensive) upstream plan that produced the edges
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst"), w.alias("w"))
-         .groupBy("src", "dst").agg(F.sum("w").alias("w")).persist())
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct().persist())
-    n = nodes.count()
-    outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    frac = (e.join(outw, "src")
-            .select("src", "dst", (F.col("w") / F.col("outw")).alias("frac"))
-            .persist())
-    dangling = nodes.join(outw.select(F.col("src").alias("node")),
-                          "node", "left_anti").persist()
+    with cache_scope():
+        # cache the aggregated edge table FIRST: nodes/outw/frac/dangling
+        # all derive from it — without the cache each one re-runs the
+        # (possibly expensive) upstream plan that produced the edges
+        e = cached(edges.select(F.col(src_col).alias("src"),
+                                F.col(dst_col).alias("dst"), w.alias("w"))
+                   .groupBy("src", "dst").agg(F.sum("w").alias("w")))
+        nodes = cached(e.select(F.col("src").alias("node"))
+                       .unionByName(e.select(F.col("dst").alias("node")))
+                       .distinct())
+        n = nodes.count()
+        outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
+        frac = cached(e.join(outw, "src")
+                      .select("src", "dst",
+                              (F.col("w") / F.col("outw")).alias("frac")))
+        dangling = cached(nodes.join(outw.select(F.col("src").alias("node")),
+                                     "node", "left_anti"))
 
-    base = (1.0 - damping) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).persist()
-    ranks.count()
-    for _ in range(iterations):
-        if portable:
-            dang_col = F.sum(F.round(F.col("rank"), 9)
-                             .cast("decimal(29,9)")).cast("double")
-        else:
-            dang_col = F.sum("rank")
-        # the dangling mass rides in-plan as a broadcast 1-row aggregate
-        # (an agg with no groupBy always yields exactly one row, NULL sum
-        # on an empty input) — no per-iteration driver collect
-        dang_df = (dangling.join(ranks, "node")
-                   .agg(F.coalesce(dang_col, F.lit(0.0)).alias("_dang")))
-        contrib = (frac.join(ranks.withColumnRenamed("node", "src"), "src")
-                   .select("dst", (F.col("rank") * F.col("frac"))
-                           .alias("c")))
-        if portable:
-            summed = (contrib
-                      .groupBy("dst")
-                      .agg(F.sum(F.round(F.col("c"), 9)
-                                 .cast("decimal(29,9)"))
-                           .cast("double").alias("s")))
-        else:
-            summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        new = snapshot(
-            nodes.join(summed.withColumnRenamed("dst", "node"),
-                       "node", "left")
-            .crossJoin(F.broadcast(dang_df))
-            .select("node",
-                    (F.lit(base) + F.lit(damping)
-                     * (F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("_dang") / F.lit(float(n))))
-                    .alias("rank")))
-        ranks.unpersist()
-        ranks = new
-    out = ranks.select("node", "rank")
-    for h in (e, nodes, frac, dangling):
-        h.unpersist()
-    return out
+        base = (1.0 - damping) / n
+        ranks = cached(nodes.select("node", F.lit(1.0 / n).alias("rank")))
+        ranks.count()
+        for _ in range(iterations):
+            if portable:
+                dang_col = F.sum(F.round(F.col("rank"), 9)
+                                 .cast("decimal(29,9)")).cast("double")
+            else:
+                dang_col = F.sum("rank")
+            # the dangling mass rides in-plan as a broadcast 1-row aggregate
+            # (an agg with no groupBy always yields exactly one row, NULL sum
+            # on an empty input) — no per-iteration driver collect
+            dang_df = (dangling.join(ranks, "node")
+                       .agg(F.coalesce(dang_col, F.lit(0.0)).alias("_dang")))
+            contrib = (frac.join(ranks.withColumnRenamed("node", "src"), "src")
+                       .select("dst", (F.col("rank") * F.col("frac"))
+                               .alias("c")))
+            if portable:
+                summed = (contrib
+                          .groupBy("dst")
+                          .agg(F.sum(F.round(F.col("c"), 9)
+                                     .cast("decimal(29,9)"))
+                               .cast("double").alias("s")))
+            else:
+                summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+            ranks = snapshot(
+                nodes.join(summed.withColumnRenamed("dst", "node"),
+                           "node", "left")
+                .crossJoin(F.broadcast(dang_df))
+                .select("node",
+                        (F.lit(base) + F.lit(damping)
+                         * (F.coalesce(F.col("s"), F.lit(0.0))
+                            + F.col("_dang") / F.lit(float(n))))
+                        .alias("rank")))
+    return ranks.select("node", "rank")
 
 
 def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
@@ -136,15 +131,8 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     round-9dp DECIMAL(29,9) order-independent summation; the norm's
     sqrt is IEEE-correctly-rounded, so portable runs are bit-reproducible
     (law-tested against a pure-Python mirror). The returned frame is a
-    CHECKPOINTED snapshot (see pagerank — ``.unpersist()`` on it is a
-    harmless no-op)."""
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst"))
-         .distinct().persist())
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct().persist())
-
+    snapshot (see pagerank); each round's cached authority table is
+    released when the round ends."""
     def _sum(c):
         if portable:
             return F.sum(F.round(c, 9).cast("decimal(29,9)")).cast("double")
@@ -158,43 +146,46 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         return df.agg(
             F.when(s == 0.0, F.lit(1.0)).otherwise(F.sqrt(s)).alias(out))
 
-    ranks = nodes.select("node", F.lit(1.0).alias("hub"),
-                         F.lit(1.0).alias("authority")).persist()
-    ranks.count()
-    for _ in range(iterations):
-        auth = (e.join(ranks.select(F.col("node").alias("src"), "hub"),
-                       "src")
-                .groupBy("dst").agg(_sum(F.col("hub")).alias("a")))
-        auth_full = (nodes.join(auth.withColumnRenamed("dst", "node"),
-                                "node", "left")
-                     .select("node", F.coalesce("a", F.lit(0.0)).alias("a"))
-                     .persist())
-        na_df = _norm_df(auth_full, "a", "_na")
-        auth_n = (auth_full.crossJoin(F.broadcast(na_df))
-                  .select("node", (F.col("a") / F.col("_na"))
-                          .alias("authority")))
-        hub = (e.join(auth_n.select(F.col("node").alias("dst"), "authority"),
-                      "dst")
-               .groupBy("src").agg(_sum(F.col("authority")).alias("h")))
-        hub_full = (nodes.join(hub.withColumnRenamed("src", "node"),
+    with cache_scope():
+        e = cached(edges.select(F.col(src_col).alias("src"),
+                                F.col(dst_col).alias("dst")).distinct())
+        nodes = cached(e.select(F.col("src").alias("node"))
+                       .unionByName(e.select(F.col("dst").alias("node")))
+                       .distinct())
+        ranks = cached(nodes.select("node", F.lit(1.0).alias("hub"),
+                                    F.lit(1.0).alias("authority")))
+        ranks.count()
+        for _ in range(iterations):
+            with cache_scope():
+                auth = (e.join(ranks.select(F.col("node").alias("src"), "hub"),
+                               "src")
+                        .groupBy("dst").agg(_sum(F.col("hub")).alias("a")))
+                auth_full = cached(
+                    nodes.join(auth.withColumnRenamed("dst", "node"),
                                "node", "left")
-                    .select("node", F.coalesce("h", F.lit(0.0)).alias("h"))
-                    .join(auth_full, "node")
-                    .crossJoin(F.broadcast(na_df))
-                    .select("node", "h",
-                            (F.col("a") / F.col("_na")).alias("authority")))
-        nh_df = _norm_df(hub_full, "h", "_nh")
-        new = snapshot(
-            hub_full.crossJoin(F.broadcast(nh_df))
-            .select("node", (F.col("h") / F.col("_nh")).alias("hub"),
-                    "authority"))
-        ranks.unpersist()
-        auth_full.unpersist()
-        ranks = new
-    out = ranks.select("node", "hub", "authority")
-    e.unpersist()
-    nodes.unpersist()
-    return out
+                    .select("node", F.coalesce("a", F.lit(0.0)).alias("a")))
+                na_df = _norm_df(auth_full, "a", "_na")
+                auth_n = (auth_full.crossJoin(F.broadcast(na_df))
+                          .select("node", (F.col("a") / F.col("_na"))
+                                  .alias("authority")))
+                hub = (e.join(auth_n.select(F.col("node").alias("dst"),
+                                            "authority"), "dst")
+                       .groupBy("src")
+                       .agg(_sum(F.col("authority")).alias("h")))
+                hub_full = (nodes.join(hub.withColumnRenamed("src", "node"),
+                                       "node", "left")
+                            .select("node",
+                                    F.coalesce("h", F.lit(0.0)).alias("h"))
+                            .join(auth_full, "node")
+                            .crossJoin(F.broadcast(na_df))
+                            .select("node", "h", (F.col("a") / F.col("_na"))
+                                    .alias("authority")))
+                nh_df = _norm_df(hub_full, "h", "_nh")
+                ranks = snapshot(
+                    hub_full.crossJoin(F.broadcast(nh_df))
+                    .select("node", (F.col("h") / F.col("_nh")).alias("hub"),
+                            "authority"))
+    return ranks.select("node", "hub", "authority")
 
 
 def connected_components(edges: DataFrame, src_col: str = "src",

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..feature import Feature
 from ..stages.base import ColumnTransformer, Estimator
+from ..util import cache_scope, cached
 
 
 class FittedParamTransformer(ColumnTransformer):
@@ -288,23 +289,24 @@ def decision_tree_map_bucketizer(feat: Feature, label: Feature,
         from pyspark.ml.classification import DecisionTreeClassifier
         from pyspark.ml.functions import array_to_vector
         from .vectorizers import FittedVectorizer, VectorSlot
-        ex = (df.select(F.explode_outer(F.col(feat.name)).alias("_k", "_x"),
-                        F.col(label.name).cast("double").alias("_y"))
-              .where(F.col("_k").isNotNull() & F.col("_x").isNotNull()
-                     & F.col("_y").isNotNull())
-              .withColumn("_x", F.col("_x").cast("double"))
-              .persist())
-        ks = keys or [r["_k"] for r in ex.select("_k").distinct().orderBy("_k").collect()]
-        splits_by_key: dict[str, list[float]] = {}
-        for k in ks:
-            data = ex.where(F.col("_k") == F.lit(k)) \
-                .withColumn("_v", array_to_vector(F.array(F.col("_x"))))
-            dt = DecisionTreeClassifier(featuresCol="_v", labelCol="_y",
-                                        maxDepth=max_depth, seed=42).fit(data)
-            thresholds = {float(t) for t in
-                          re.findall(r"feature 0 <= ([0-9eE.+-]+)", dt.toDebugString)}
-            splits_by_key[k] = [-math.inf] + sorted(thresholds) + [math.inf]
-        ex.unpersist()
+        with cache_scope():
+            ex = cached(
+                df.select(F.explode_outer(F.col(feat.name)).alias("_k", "_x"),
+                          F.col(label.name).cast("double").alias("_y"))
+                .where(F.col("_k").isNotNull() & F.col("_x").isNotNull()
+                       & F.col("_y").isNotNull())
+                .withColumn("_x", F.col("_x").cast("double")))
+            ks = keys or [r["_k"] for r in
+                          ex.select("_k").distinct().orderBy("_k").collect()]
+            splits_by_key: dict[str, list[float]] = {}
+            for k in ks:
+                data = ex.where(F.col("_k") == F.lit(k)) \
+                    .withColumn("_v", array_to_vector(F.array(F.col("_x"))))
+                dt = DecisionTreeClassifier(featuresCol="_v", labelCol="_y",
+                                            maxDepth=max_depth, seed=42).fit(data)
+                thresholds = {float(t) for t in re.findall(
+                    r"feature 0 <= ([0-9eE.+-]+)", dt.toDebugString)}
+                splits_by_key[k] = [-math.inf] + sorted(thresholds) + [math.inf]
         params = {"keys": list(ks),
                   "splits": {k: list(v) for k, v in splits_by_key.items()},
                   "track_nulls": bool(track_nulls)}

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..feature import Feature
 from ..stages.base import ColumnTransformer, Estimator
+from ..util import cache_scope
 from .vectorizers import FittedVectorizer, VectorSlot
 
 
@@ -106,7 +107,8 @@ def spearman_corr(df: DataFrame, a: str, b: str) -> float:
     is exact and partitioning-invariant. Ranks come from one groupBy per
     column — the shuffle carries distinct values, not rows — and the running
     counts use range-partitioned parallel windows (util.counts_below), so
-    continuous all-distinct columns never funnel through one task."""
+    continuous all-distinct columns never funnel through one task. The
+    two ranked tables are released once the sums are read."""
     from ..util import counts_below
 
     def ranked(col):
@@ -115,15 +117,16 @@ def spearman_corr(df: DataFrame, a: str, b: str) -> float:
         g = counts_below(g, "v", "n")
         return g.select("v", (2 * F.col("below") + F.col("n") + 1).alias("r2"))  # 2*avg_rank
 
-    ra = ranked(a).withColumnRenamed("v", a).withColumnRenamed("r2", "_ra")
-    rb = ranked(b).withColumnRenamed("v", b).withColumnRenamed("r2", "_rb")
-    j = df.select(a, b).where(F.col(a).isNotNull() & F.col(b).isNotNull()) \
-        .join(ra, a).join(rb, b)
-    row = j.agg(F.count(F.lit(1)).alias("n"),
-                F.sum("_ra").alias("sx"), F.sum("_rb").alias("sy"),
-                F.sum(F.col("_ra") * F.col("_rb")).alias("sxy"),
-                F.sum(F.col("_ra") * F.col("_ra")).alias("sxx"),
-                F.sum(F.col("_rb") * F.col("_rb")).alias("syy")).first()
+    with cache_scope():
+        ra = ranked(a).withColumnRenamed("v", a).withColumnRenamed("r2", "_ra")
+        rb = ranked(b).withColumnRenamed("v", b).withColumnRenamed("r2", "_rb")
+        j = df.select(a, b).where(F.col(a).isNotNull() & F.col(b).isNotNull()) \
+            .join(ra, a).join(rb, b)
+        row = j.agg(F.count(F.lit(1)).alias("n"),
+                    F.sum("_ra").alias("sx"), F.sum("_rb").alias("sy"),
+                    F.sum(F.col("_ra") * F.col("_rb")).alias("sxy"),
+                    F.sum(F.col("_ra") * F.col("_ra")).alias("sxx"),
+                    F.sum(F.col("_rb") * F.col("_rb")).alias("syy")).first()
     n = row["n"]
     if not n:
         return 0.0

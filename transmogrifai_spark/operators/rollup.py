@@ -21,16 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-class _RollupLevels(dict):
-    """``{depth: DataFrame}`` plus an ``unpersist()`` release handle for
-    the cached deepest-level partials backing every coarser level."""
-
-    _cached: DataFrame | None = None
-
-    def unpersist(self, blocking: bool = False) -> None:
-        if self._cached is not None:
-            self._cached.unpersist(blocking)
-            self._cached = None
+from ..util import cached
 
 
 #: statistic -> (finest aggregation over the value col, merge aggregation
@@ -122,7 +113,7 @@ def hierarchical_rollup(events: DataFrame, time_col: str,
     fine_bucket = (t - (t % F.lit(finest))).alias("bucket_start_ms")
     partial = (events.groupBy(fine_bucket, *group_cols)
                .agg(*[a.alias(c) for c, (a, _) in carriers.items()]))
-    partial = partial.persist()
+    partial = cached(partial)
 
     out: dict[int, DataFrame] = {}
     out[finest] = partial.select(
@@ -160,21 +151,19 @@ def dimensional_rollup(df: DataFrame, hierarchy: list[str],
     ``stats`` kinds: count|sum|sum_exact|min|max|mean|
     approx_distinct[:lg_k]|approx_quantile:<q>.
 
-    The deepest level is persisted (every coarser level re-reads it). The
-    returned mapping carries an ``unpersist()`` handle — call it once the
-    level DataFrames have been materialized (written / collected) to
-    release the cached partitions; without it a long-lived session
-    accumulates one cached deepest-level per call.
+    The deepest level is ``cached`` (every coarser level re-reads it):
+    materialize the levels (write / collect) inside a ``util.cache_scope``
+    to release it; without one a long-lived session accumulates one cached
+    deepest level per call.
     """
     if not hierarchy:
         raise ValueError("hierarchy must name at least one column")
     carriers, finals = _build_carriers(stats)
     deepest = (df.groupBy(*hierarchy)
                .agg(*[a.alias(c) for c, (a, _) in carriers.items()]))
-    deepest = deepest.persist()
+    deepest = cached(deepest)
 
-    out: _RollupLevels = _RollupLevels()
-    out._cached = deepest
+    out: dict[int, DataFrame] = {}
     out[len(hierarchy)] = deepest.select(
         *hierarchy, *[finals[n]().alias(n) for n in stats])
     prev = deepest

@@ -39,6 +39,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import cache_scope, cached
+
 _MANIFEST = "_MANIFEST.json"
 
 
@@ -198,35 +200,36 @@ class CowSnapshot:
             return False
         spark = changes.sparkSession
         b = self._bucket_expr()
-        changes = changes.withColumn("__b", b).persist()
-        touched = sorted(r["__b"] for r in
-                         changes.select("__b").distinct().collect())
+        with cache_scope():
+            changes = cached(changes.withColumn("__b", b))
+            touched = sorted(r["__b"] for r in
+                             changes.select("__b").distinct().collect())
 
-        out_cols = [c for c in changes.columns
-                    if c not in ("__b", self.op_col)]
-        base = self.read(spark, buckets=touched)
-        if base is None:
-            base = spark.createDataFrame([], changes.select(*out_cols).schema)
-        merged = apply_changes(base, changes.drop("__b"), self.keys,
-                               self.order_col, self.op_col) \
-            .withColumn("__b", b).persist()
+            out_cols = [c for c in changes.columns
+                        if c not in ("__b", self.op_col)]
+            base = self.read(spark, buckets=touched)
+            if base is None:
+                base = spark.createDataFrame([], changes.select(*out_cols).schema)
+            merged = cached(apply_changes(base, changes.drop("__b"), self.keys,
+                                          self.order_col, self.op_col)
+                            .withColumn("__b", b))
 
-        # ONE write job for every touched bucket (r6 — was a driver-side
-        # loop of one write job per bucket, which serializes the batch at
-        # |touched buckets| jobs; a 100 TB ingest touching 1000 buckets
-        # must not run 1000 jobs). Range-partition on (__b, keys) and
-        # partitionBy(__b): each bucket's rows land range-disjoint and
-        # key-sorted in its own staging subdirectory — same per-file
-        # min/max tightness as before — then each subdirectory is MOVED
-        # into its b=<bucket>/v=<version> place (a metadata-only rename
-        # per bucket, not a job).
-        import uuid as _uuid
-        staging = os.path.join(self.path, f".staging-{_uuid.uuid4().hex[:8]}")
-        n_parts = max(1, self.files_per_bucket) * max(1, len(touched))
-        (merged.repartitionByRange(n_parts, F.col("__b"),
-                                   *[F.col(k) for k in self.keys])
-         .sortWithinPartitions("__b", *self.keys)
-         .write.mode("overwrite").partitionBy("__b").parquet(staging))
+            # ONE write job for every touched bucket (r6 — was a driver-side
+            # loop of one write job per bucket, which serializes the batch at
+            # |touched buckets| jobs; a 100 TB ingest touching 1000 buckets
+            # must not run 1000 jobs). Range-partition on (__b, keys) and
+            # partitionBy(__b): each bucket's rows land range-disjoint and
+            # key-sorted in its own staging subdirectory — same per-file
+            # min/max tightness as before — then each subdirectory is MOVED
+            # into its b=<bucket>/v=<version> place (a metadata-only rename
+            # per bucket, not a job).
+            import uuid as _uuid
+            staging = os.path.join(self.path, f".staging-{_uuid.uuid4().hex[:8]}")
+            n_parts = max(1, self.files_per_bucket) * max(1, len(touched))
+            (merged.repartitionByRange(n_parts, F.col("__b"),
+                                       *[F.col(k) for k in self.keys])
+             .sortWithinPartitions("__b", *self.keys)
+             .write.mode("overwrite").partitionBy("__b").parquet(staging))
         new_buckets = dict(manifest["buckets"])
         for bucket in touched:
             version = int(new_buckets.get(str(bucket), 0)) + 1
@@ -244,8 +247,6 @@ class CowSnapshot:
                     .coalesce(1).write.mode("overwrite").parquet(dst)
             new_buckets[str(bucket)] = version
         shutil.rmtree(staging, ignore_errors=True)
-        merged.unpersist()
-        changes.unpersist()
         self._commit({"buckets": new_buckets,
                       "last_batch_id": batch_id if batch_id is not None
                       else manifest["last_batch_id"],

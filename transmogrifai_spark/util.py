@@ -48,7 +48,7 @@ def snapshot(df: DataFrame) -> DataFrame:
     otherwise.
 
     Iterative loops rebind one snapshot per round (ARCHITECTURE rule 4):
-    ``persist()`` caches execution but round k's logical plan still nests
+    ``persist()`` stores computed rows but round k's logical plan still nests
     round k-1's, so a deep loop's analyzed plan grows until the driver
     dies in plan analysis; a snapshot's plan is a scan of its blocks.
 
@@ -60,6 +60,50 @@ def snapshot(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+# per-thread stack of open cache scopes, each the list of frames it owns
+_CACHE_SCOPES = threading.local()
+
+
+@contextlib.contextmanager
+def cache_scope():
+    """Own every frame ``cached`` persists inside the ``with`` block: on
+    exit — normal or by an exception — each is unpersisted, newest first,
+    so a frame derived from another cached one goes before its parent.
+    This is the one way library code releases a cached intermediate
+    (ARCHITECTURE rule 8).
+
+    Scopes nest and are per thread: ``cached`` registers with the
+    innermost open scope of the CALLING thread, so frames another thread
+    persists meanwhile are left alone. The block must materialize
+    everything built over its frames before it closes; a lazy frame that
+    outlives its scope still gives correct results, but recomputes the
+    released parts. A library function that returns a lazy frame
+    therefore opens no scope: its cached frames belong to the caller's
+    scope, or to the session when the caller opened none. Unpersisting
+    runs no Spark job."""
+    stack = _CACHE_SCOPES.__dict__.setdefault("stack", [])
+    owned: list[DataFrame] = []
+    stack.append(owned)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in reversed(owned):
+            df.unpersist()
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by the innermost open ``cache_scope`` of the
+    current thread. With no scope open it is exactly ``persist()``: the
+    session keeps the entry until someone unpersists it or clears the
+    cache."""
+    df = df.persist()
+    stack = getattr(_CACHE_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
 
 
 def observed_metrics(df: DataFrame, name: str) -> dict:
@@ -299,8 +343,7 @@ def right_size_for_iteration(df: DataFrame, rows_per_partition: int = 100_000) -
 
 def counts_below(g: DataFrame, value_col: str, count_col: str,
                  out_col: str = "below", partitions: int | None = None,
-                 group_cols: list[str] | None = None,
-                 caches: list | None = None) -> DataFrame:
+                 group_cols: list[str] | None = None) -> DataFrame:
     """Exclusive running count ("rows with value < v") per distinct value —
     the building block of average-rank statistics (Spearman, Mann-Whitney
     AuROC) — computed with RANGE-PARTITIONED parallel windows instead of a
@@ -312,10 +355,10 @@ def counts_below(g: DataFrame, value_col: str, count_col: str,
     map. Two extra narrow jobs buy a plan whose only ordering work is
     per-partition — no stage funnels all distinct values through one task,
     so the rank computation survives continuous (all-distinct) scores at
-    100 TB. The input is persisted so the sampled range boundaries are
-    computed once and shared by the totals job and the output plan; pass
-    ``caches`` to receive the handle for unpersisting after
-    materialization (as ``running_total``).
+    100 TB. The input is ``cached`` so the sampled range boundaries are
+    computed once and shared by the totals job and the output plan; it is
+    released by the caller's ``cache_scope`` (held by the session without
+    one).
 
     ``group_cols`` computes an independent ranking per group (e.g. one AuROC
     per data split) in the SAME single pass: range partitioning becomes
@@ -330,12 +373,9 @@ def counts_below(g: DataFrame, value_col: str, count_col: str,
     sc = g.sparkSession.sparkContext
     groups = list(group_cols or [])
     nparts = partitions or sc.defaultParallelism
-    rp = (g.repartitionByRange(nparts, *[F.col(c) for c in groups],
-                               F.col(value_col))
-          .withColumn("_pid", F.spark_partition_id())
-          .persist())
-    if caches is not None:
-        caches.append(rp)
+    rp = cached(g.repartitionByRange(nparts, *[F.col(c) for c in groups],
+                                     F.col(value_col))
+                .withColumn("_pid", F.spark_partition_id()))
     totals = rp.groupBy("_pid", *groups).agg(
         F.sum(count_col).alias("_t")).collect()
     offsets, acc = {}, defaultdict(int)
@@ -362,8 +402,8 @@ def counts_below(g: DataFrame, value_col: str, count_col: str,
 
 
 def running_total(df: DataFrame, order_cols: list[str], value_col: str,
-                  out_col: str = "cum", partitions: int | None = None,
-                  caches: list | None = None) -> DataFrame:
+                  out_col: str = "cum", partitions: int | None = None
+                  ) -> DataFrame:
     """INCLUSIVE distributed cumulative sum of ``value_col`` in
     ``order_cols`` order — the scale-correct replacement for a global
     ``Window.orderBy`` cumsum (which funnels every row through ONE task).
@@ -373,19 +413,16 @@ def running_total(df: DataFrame, order_cols: list[str], value_col: str,
     run in parallel, per-partition totals (one row each) become additive
     driver-side offsets via a literal map. The order tuple must be
     unique per row (add an id tie-break) so partition boundaries cannot
-    split ties. The input is persisted so the sampled range boundaries
-    are shared by the totals job and the output plan; pass ``caches`` to
-    receive the handle for unpersisting after materialization."""
+    split ties. The input is ``cached`` so the sampled range boundaries
+    are shared by the totals job and the output plan (released as in
+    ``counts_below``)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     sc = df.sparkSession.sparkContext
     nparts = partitions or sc.defaultParallelism
-    rp = (df.repartitionByRange(nparts, *[F.col(c) for c in order_cols])
-          .withColumn("_pid", F.spark_partition_id())
-          .persist())
-    if caches is not None:
-        caches.append(rp)
+    rp = cached(df.repartitionByRange(nparts, *[F.col(c) for c in order_cols])
+                .withColumn("_pid", F.spark_partition_id()))
     totals = rp.groupBy("_pid").agg(
         F.sum(F.col(value_col).cast("long")).alias("_t")).collect()
     offsets, acc = {}, 0

@@ -12,11 +12,11 @@ Physical differences from the reference, per SURVEY.md §4:
     single RDD map pass, FitStagesUtil.applyOpTransformations:96-119).
   * The reference's forced RDD-roundtrip persist every K stages
     (applySparkTransformations:150-163, a Spark 2.x Catalyst-blowup
-    workaround [SPARK-13346]) is obsolete on Spark 4 + AQE; we keep an
-    optional ``checkpoint_every`` escape hatch using ``localCheckpoint``.
+    workaround [SPARK-13346]) is obsolete on Spark 4 + AQE and has no
+    counterpart here.
   * Transform-only scoring builds a single lazy plan — no persist gymnastics;
-    persists happen only at estimator-fit boundaries, where a layer's output
-    is consumed by several fits.
+    frames are cached only at estimator-fit boundaries, where a layer's
+    output is consumed by several fits, and released when the fit ends.
 
 Scale note (100 TB): everything here is plan construction on the driver; the
 data path is pure DataFrame ops, so partitioning/shuffle behavior is decided
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .feature import Feature
 from .stages.base import ColumnTransformer, DataFrameTransformer, Estimator, Stage
+from .util import cache_scope, cached
 
 
 def compute_dag(result_features: Sequence[Feature]) -> list[list[Stage]]:
@@ -166,11 +167,10 @@ class Workflow:
     or bit-reproducibility across configurations matters.
     """
 
-    def __init__(self, result_features: Sequence[Feature], checkpoint_every: int | None = None,
+    def __init__(self, result_features: Sequence[Feature],
                  fit_sample: float | None = None, fit_sample_seed: int = 42,
                  raw_feature_filter: dict | None = None):
         self.result_features = list(result_features)
-        self.checkpoint_every = checkpoint_every
         self.fit_sample = fit_sample
         self.fit_sample_seed = fit_sample_seed
         # OpWorkflow.withRawFeatureFilter (OpWorkflow.scala:544): optional
@@ -198,9 +198,10 @@ class Workflow:
 
         Per layer: fit every estimator on the current frame (each fit is a
         distributed agg/ml job), then substitute the fitted transformers and
-        apply the whole layer. The frame is persisted before a layer that
+        apply the whole layer. The frame is cached before a layer that
         contains estimators, since each estimator triggers its own action
-        (the reference persists raw data the same way, OpWorkflow.scala:242).
+        (the reference persists raw data the same way, OpWorkflow.scala:242);
+        every cached layer frame is released when the fit returns.
         """
         dag = compute_dag(self.result_features)
         rff_result = None
@@ -208,28 +209,21 @@ class Workflow:
             dag, rff_result = self._apply_raw_feature_filter(dag, df)
         fitted_layers: list[list[Stage]] = []
         cur = df
-        persisted = []
-        applied = 0
-        for layer in dag:
-            estimators = [s for s in layer if isinstance(s, Estimator)]
-            fit_frame = cur
-            if estimators:
-                cur = cur.persist()
-                persisted.append(cur)
+        with cache_scope():
+            for layer in dag:
+                estimators = [s for s in layer if isinstance(s, Estimator)]
                 fit_frame = cur
-                if self.fit_sample is not None:
-                    fit_frame = cur.sample(self.fit_sample, seed=self.fit_sample_seed)
-            fitted_layer: list[Stage] = []
-            for s in layer:
-                fitted_layer.append(s.fit(fit_frame) if isinstance(s, Estimator) else s)
-            cur = _apply_layer(cur, fitted_layer)
-            applied += len(fitted_layer)
-            if self.checkpoint_every and applied >= self.checkpoint_every:
-                cur = cur.localCheckpoint(eager=False)
-                applied = 0
-            fitted_layers.append(fitted_layer)
-        for p in persisted:
-            p.unpersist()
+                if estimators:
+                    cur = fit_frame = cached(cur)
+                    if self.fit_sample is not None:
+                        fit_frame = cur.sample(self.fit_sample,
+                                               seed=self.fit_sample_seed)
+                fitted_layer: list[Stage] = []
+                for s in layer:
+                    fitted_layer.append(s.fit(fit_frame)
+                                        if isinstance(s, Estimator) else s)
+                cur = _apply_layer(cur, fitted_layer)
+                fitted_layers.append(fitted_layer)
         return WorkflowModel(layers=fitted_layers,
                              result_features=self.result_features,
                              rff=rff_result)
