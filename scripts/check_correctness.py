@@ -4,7 +4,9 @@
 Runs every SPARK_QUERIES entry at sf0.01 and compares against its ORACLES SQL
 via DuckDB: row count, column names, and an order-insensitive value hash
 (columns sorted by name, rows sorted, floats compared bit-exactly after a
-canonical repr). Usage:
+canonical repr). When a row whose first column is a ``union_arms`` tag
+mismatches, each arm whose rows differ is named with its row counts on
+both sides. Usage:
 
     python scripts/check_correctness.py [query ...]   # default: all
     SF_DIR=/root/testdata/sf0.001 python scripts/check_correctness.py
@@ -48,6 +50,33 @@ def frame_sig(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted("\x01".join(canon(r[i]) for i in order) for r in rows)
     return sorted(cols), lines
+
+
+def arm_diffs(tags, scols, srows, ocols, orows):
+    """``[(arm, spark_rows, oracle_rows)]`` for every tag value whose rows
+    differ between the two sides, when the Spark frame's first column is
+    one of ``tags`` (a union of named arms); ``[]`` otherwise."""
+    tag = scols[0] if scols and scols[0] in tags else None
+    if tag is None or tag not in ocols:
+        return []
+
+    def by_arm(cols, rows):
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        t = cols.index(tag)
+        arms = {}
+        for r in rows:
+            arms.setdefault(canon(r[t]), []).append(
+                "\x01".join(canon(r[i]) for i in order))
+        return {a: sorted(lines) for a, lines in arms.items()}
+
+    s, o = by_arm(scols, srows), by_arm(ocols, orows)
+    return [(a, len(s.get(a, ())), len(o.get(a, ())))
+            for a in sorted(set(s) | set(o)) if s.get(a) != o.get(a)]
+
+
+def print_arm_diffs(tags, scols, srows, ocols, orows):
+    for arm, ns, no in arm_diffs(tags, scols, srows, ocols, orows):
+        print(f"   arm {scols[0]}={arm}: spark={ns} rows oracle={no} rows")
 
 
 _SPARK_T = {"bigint": "i64", "int": "i32", "smallint": "i16", "double": "f64",
@@ -94,7 +123,8 @@ def type_report(sdf, arrow_schema) -> list[str]:
 def main():
     only = set(sys.argv[1:])
     from transmogrifai_spark import session
-    from transmogrifai_spark.driver_queries import ORACLES, SPARK_QUERIES
+    from transmogrifai_spark.driver_queries import (ARM_TAGS, ORACLES,
+                                                    SPARK_QUERIES)
 
     spark = session(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
     spark.sparkContext.setLogLevel("ERROR")
@@ -139,6 +169,7 @@ def main():
             continue
         if len(sl) != len(ol):
             print(f"FAIL {name}: rowcount spark={len(sl)} oracle={len(ol)}")
+            print_arm_diffs(ARM_TAGS, scols, srows, ocols, orows)
             n_fail += 1
             continue
         if sl != ol:
@@ -147,6 +178,7 @@ def main():
             for a, b in bad:
                 print(f"   spark:  {a[:200]}")
                 print(f"   oracle: {b[:200]}")
+            print_arm_diffs(ARM_TAGS, scols, srows, ocols, orows)
             n_fail += 1
             continue
         print(f"PASS {name}: {len(sl)} rows [{time.time()-t0:.1f}s]")

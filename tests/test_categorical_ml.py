@@ -4,6 +4,7 @@ import base64
 import math
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from transmogrifai_spark.feature import from_dataframe
@@ -326,6 +327,21 @@ def test_model_selection_and_metrics_release_their_caches(
         sorted(set(range(120)) - INGEST_DROPPED)
 
 
+def test_model_selection_keeps_the_callers_cache(spark, trainable):
+    """A frame the caller cached stays cached at the caller's level after a
+    library call caches the same plan inside its own scope: ``cached``
+    hands the scope only the entries it created."""
+    spark.catalog.clearCache()
+    df = trainable.select("k", "fv", "y").persist(StorageLevel.MEMORY_ONLY)
+    df.count()
+    sel = select_binary_model(
+        df, "fv", "y", "k", k=2,
+        candidates=[("LogisticRegression", {"regParam": 0.01, "maxIter": 20})])
+    assert sel.best_metric > 0.8
+    assert df.storageLevel == StorageLevel.MEMORY_ONLY
+    spark.catalog.clearCache()
+
+
 def test_raising_fit_releases_its_cache(spark, trainable):
     """A fit that raises after caching its frame still releases it."""
     spark.catalog.clearCache()
@@ -337,7 +353,10 @@ def test_raising_fit_releases_its_cache(spark, trainable):
 
 
 class _Frame:
-    """Stands in for a DataFrame: logs persist/unpersist calls."""
+    """Stands in for a DataFrame that nobody cached before: logs
+    persist/unpersist calls."""
+
+    storageLevel = StorageLevel.NONE
 
     def __init__(self, name, log):
         self.name, self.log = name, log
@@ -374,8 +393,6 @@ def test_cache_scope_nests_and_releases_newest_first_on_error():
 
 def test_cache_scope_is_per_thread_and_unscoped_frames_stay(spark):
     import threading
-
-    from pyspark import StorageLevel
 
     from transmogrifai_spark.util import cache_scope, cached
     spark.catalog.clearCache()

@@ -229,3 +229,40 @@ def test_session_state_lint_catches_violations(tmp_path):
         ("mod.py", 9, ".unpersist"), ("mod.py", 10, ".localCheckpoint"),
         ("session.py", 6, ".persist"),
         ("util.py", 4, "conf.unset"), ("util.py", 10, ".unpersist")]
+
+
+def _hand_written_arm_tags(path):
+    """Lines of ``path`` that write an arm tag by hand: an
+    ``alias(<tag>)`` or ``withColumn(<tag>, ...)`` call, for a tag in
+    ``driver_queries.ARM_TAGS``, outside ``union_arms`` (ARCHITECTURE
+    rule 9: the arm name is the tag, and only union_arms writes it)."""
+    from transmogrifai_spark.driver_queries import ARM_TAGS
+    tree = ast.parse(open(path).read(), path)
+    owner = set()
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and fn.name == "union_arms":
+            owner |= {id(n) for n in ast.walk(fn)}
+    return sorted(
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and id(node) not in owner
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("alias", "withColumn")
+        and node.args and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value in ARM_TAGS)
+
+
+def test_only_union_arms_writes_arm_tags():
+    assert _hand_written_arm_tags(
+        os.path.join(PKG, "driver_queries.py")) == []
+
+
+def test_arm_tag_lint_catches_violations(tmp_path):
+    mod = tmp_path / "driver_queries.py"
+    mod.write_text(
+        "def union_arms(arms, schema, tag='part'):\n"
+        "    return [df.select(F.lit(a).alias('part')) for a, df in arms]\n"
+        "def q(df):\n"
+        "    a = df.select(F.lit('x').alias('part'), F.col('k').alias('key'))\n"
+        "    b = df.withColumn('method', F.lit('y'))\n"
+        "    return a.unionByName(b.withColumn('set_op', F.lit('z')))\n")
+    assert _hand_written_arm_tags(str(mod)) == [4, 5]

@@ -1,5 +1,5 @@
-"""Full Snowball stemmers de/fr/es (functions/snowball.py) — the three
-backends (Catalyst expressions, DuckDB SQL, Python) are generated from
+"""Full Snowball stemmers de/fr/es (functions/snowball.py) — the four
+backends (Catalyst expressions, Spark-SQL steps, DuckDB SQL, Python) are generated from
 ONE spec by one interpreter; these tests pin the Python arm on known
 Snowball behavior and law-test Spark == Python and DuckDB == Python.
 
@@ -14,8 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from transmogrifai_spark.functions.snowball import (
-    snowball_spark_sql, snowball_sql_ctes, snowball_stem,
-    snowball_stem_py)
+    snowball_sql_ctes, snowball_stem, snowball_stem_py)
 
 _PINNED = {
     "de": [
@@ -228,22 +227,10 @@ def test_sql_replica_matches_mirror_pinned(lang):
 
 
 @pytest.mark.parametrize("lang", sorted(_PINNED))
-def test_spark_sql_text_backend_matches_mirror(spark, lang):
-    """The F.expr text form (the fast-build driver-gate path) stems
-    exactly like the mirror — fourth backend, same rule tables."""
-    words = [w for w, _ in _PINNED[lang]] + ["", "x", "qq"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    got = {r["w"]: r["s"] for r in
-           df.select("w", F.expr(snowball_spark_sql(lang, "w"))
-                     .alias("s")).collect()}
-    assert got == {w: snowball_stem_py(w, lang) for w in words}
-
-
-@pytest.mark.parametrize("lang", sorted(_PINNED))
 def test_step_backend_matches_mirror(spark, lang):
     """The STEP backend (snowball_spark_steps — the r12 driver-gate
     path: chain of small parsed step/chunk expressions applied as
-    withColumn projections) stems exactly like the mirror — fifth
+    withColumn projections) stems exactly like the mirror — fourth
     backend, same rule tables."""
     from transmogrifai_spark.functions.snowball import \
         snowball_spark_steps

@@ -49,6 +49,52 @@ def _t(spark, sf_dir, name):
     return load_table(spark, sf_dir, name)
 
 
+# the tag columns union_arms writes: a registry row whose first column is
+# one of these is a union of named arms, one tag value per arm
+ARM_TAGS = ("part", "method")
+
+
+def _ddl_fields(schema: str) -> list[tuple[str, str]]:
+    """``[(name, type)]`` of a DDL column list such as
+    ``"a bigint, m map<string,double>"``, split at top-level commas."""
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            name, typ = schema[start:i].split(None, 1)
+            fields.append((name, typ.strip()))
+            start = i + 1
+    return fields
+
+
+def union_arms(arms: list[tuple[str, DataFrame]], schema: str,
+               tag: str = "part") -> DataFrame:
+    """UNION ALL of named arms in the listed order, each projected to
+    ``tag`` (the arm's name) followed by ``schema``'s columns (a DDL
+    string) in schema order: every column is cast to its declared type,
+    and a column an arm lacks is a typed NULL. An arm column the schema
+    does not declare raises ``ValueError`` instead of being dropped.
+
+    A column that already has its declared type (written as Spark's
+    ``simpleString``, e.g. ``bigint``) is passed through bare, so the
+    projection adds no ``c AS c`` rename to the union's first arm."""
+    fields = _ddl_fields(schema)
+    declared = dict(fields)
+    out = None
+    for arm, df in arms:
+        have = dict(df.dtypes)
+        extra = [c for c in have if c not in declared]
+        if extra:
+            raise ValueError(f"arm {arm!r} has undeclared columns {extra}; "
+                             f"declared: {schema}")
+        row = df.select(F.lit(arm).alias(tag), *[
+            F.col(c) if have.get(c) == typ.replace(" ", "")
+            else (F.col(c) if c in have else F.lit(None)).cast(typ).alias(c)
+            for c, typ in fields])
+        out = row if out is None else out.unionAll(row)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # scans / joins / aggregation readers
 # ---------------------------------------------------------------------------
@@ -112,9 +158,8 @@ def q_join_left_agg(spark, sf_dir):
             AggSpec("total_spend", "o_totalprice", "sum_exact"),
             AggSpec("max_order", "o_totalprice", "max"),
         ])
-    left = ja.generate(spark).select(
-        F.lit("left").alias("part"), "key", "n_orders", "total_spend",
-        "max_order")
+    left = ja.generate(spark).select("key", "n_orders", "total_spend",
+                                     "max_order")
     from .sources.joins import skew_join
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders") \
@@ -126,10 +171,10 @@ def q_join_left_agg(spark, sf_dir):
              .agg(F.count(F.lit(1)).alias("n_orders"),
                   agg_sum_exact(F.col("o_totalprice")).alias("total_spend"),
                   F.max("o_totalprice").alias("max_order"))
-             .select(F.lit("inner").alias("part"),
-                     F.col("c_mktsegment").alias("key"),
-                     "n_orders", "total_spend", "max_order"))
-    return left.unionByName(inner)
+             .withColumnRenamed("c_mktsegment", "key"))
+    return union_arms([("left", left), ("inner", inner)],
+                      "key string, n_orders bigint, total_spend double, "
+                      "max_order double")
 
 
 def q_join_outer_combined(spark, sf_dir):
@@ -265,18 +310,14 @@ def q_map_monoid(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").withColumn(
         "props_map", M.parse_json_map(F.col("props"), "bigint"))
     agg = aggregate_map_column(ev, "user_id", "props_map", "m", "sum")
-    monoid = (agg.select(F.col("user_id").cast("string").alias("key"),
-                         F.explode(F.col("m")).alias("map_key", "total"))
-              .select(F.lit("monoid").alias("part"), "key", "map_key",
-                      "total", F.lit(None).cast("double").alias("k_value"),
-                      F.lit(None).cast("double").alias("k_null")))
+    monoid = agg.select(F.col("user_id").cast("string").alias("key"),
+                        F.explode(F.col("m")).alias("map_key", "total"))
     vec = q_map_vectorizer(spark, sf_dir).select(
-        F.lit("vectorizer").alias("part"),
-        F.col("event_id").cast("string").alias("key"),
-        F.lit("k").alias("map_key"),
-        F.lit(None).cast("long").alias("total"),
+        F.col("event_id").alias("key"), F.lit("k").alias("map_key"),
         "k_value", "k_null")
-    return monoid.union(vec)
+    return union_arms([("monoid", monoid), ("vectorizer", vec)],
+                      "key string, map_key string, total bigint, "
+                      "k_value double, k_null double")
 
 
 # ---------------------------------------------------------------------------
@@ -929,10 +970,11 @@ def q_stopwords_ngrams(spark, sf_dir):
     # Python text in milliseconds and parses each step/chunk as a
     # SMALL F.expr — neither the Column backend's 1-10 s of py4j
     # round trips per language (~44 s of every gate round, measured)
-    # nor the one-big-parse snowball_spark_sql form's superlinear
-    # ANTLR cost and STATIC DFA-cache retention (40-70 MB per
+    # nor one big F.expr parse per language, whose ANTLR cost is
+    # superlinear and whose STATIC DFA cache is retained (40-70 MB per
     # language, ~430 MB JVM-lifetime, measured r11 — a 1g gate sweep
-    # dies on it; small chunked parses retain a bounded fraction).
+    # dies on it, and that backend was deleted; small chunked parses
+    # retain a bounded fraction).
     # (2) NO_CODEGEN skips Janino entirely — at 500-5000 fixture rows
     # interpreted evaluation is instant and nothing lands in the
     # codegen cache.
@@ -1347,26 +1389,21 @@ def q_lexicon_segment(spark, sf_dir):
                   F.concat(text, F.lit("卡"))).otherwise(text)
     toks = lexicon_segment(text, dict(_SEG_LEX), unknown_cost=2.0)
     plain = docs.select("doc_id", toks.alias("_t")) \
-        .select(F.lit("plain").alias("part"), "doc_id",
-                F.posexplode("_t").alias("tok_idx", "token")) \
-        .withColumn("cls", F.lit(None).cast("string"))
+        .select("doc_id", F.posexplode("_t").alias("tok_idx", "token"))
     typed_lex = {w: (cost, _SEG_CLS[w]) for w, cost in _SEG_LEX}
     ttoks = lexicon_segment_lattice(text, typed_lex, _SEG_CONN,
                                     unknown_cost=2.0)
     lattice = docs.select("doc_id", ttoks.alias("_t")) \
-        .select(F.lit("lattice").alias("part"), "doc_id",
-                F.posexplode("_t").alias("tok_idx", "e")) \
-        .select("part", "doc_id", "tok_idx",
-                F.col("e.token").alias("token"),
+        .select("doc_id", F.posexplode("_t").alias("tok_idx", "e")) \
+        .select("doc_id", "tok_idx", F.col("e.token").alias("token"),
                 F.col("e.cls").alias("cls"))
     lex_df = spark.createDataFrame(
         [(w, float(c)) for w, c in _SEG_LEX], "word string, cost double")
     jtoks = lexicon_segment_join(docs.select("doc_id", text.alias("_s")),
                                  "_s", lex_df, out_col="_t",
                                  unknown_cost=2.0)
-    join_part = jtoks.select(F.lit("join").alias("part"), "doc_id",
-                             F.posexplode("_t").alias("tok_idx", "token")) \
-        .withColumn("cls", F.lit(None).cast("string"))
+    join_part = jtoks.select("doc_id",
+                             F.posexplode("_t").alias("tok_idx", "token"))
     from .llm.tokenizer import unigram_tokenize_df
     uarr = F.array(*[F.lit(w) for w in _UG_WORDS])
     utext = F.concat(
@@ -1384,11 +1421,12 @@ def q_lexicon_segment(spark, sf_dir):
     useg = unigram_tokenize_df(
         docs.select("doc_id", utext.alias("_u")), "_u", uvocab,
         id_col="doc_id", out_col="_t", unknown_cost=_UG_UNK)
-    uni_part = useg.select(F.lit("unigram").alias("part"), "doc_id",
-                           F.posexplode("_t").alias("tok_idx", "token")) \
-        .withColumn("cls", F.lit(None).cast("string"))
-    return plain.unionByName(lattice).unionByName(join_part) \
-        .unionByName(uni_part) \
+    uni_part = useg.select("doc_id",
+                           F.posexplode("_t").alias("tok_idx", "token"))
+    return union_arms([("plain", plain), ("lattice", lattice),
+                       ("join", join_part), ("unigram", uni_part)],
+                      "doc_id bigint, tok_idx int, token string, "
+                      "cls string") \
         .select("doc_id", "part", "tok_idx", "token", "cls")
 
 
@@ -1413,20 +1451,18 @@ def q_raw_feature_filter(spark, sf_dir):
         (F.count("l_returnflag") / n).alias("fill_flag"))
     fill_rows = fills.select(F.explode(F.array(*[
         F.struct(F.lit(c).alias("name"), F.col(c).alias("metric"))
-        for c in ("fill_qty", "fill_qty_sparse", "fill_flag")])).alias("r"))         .select(F.lit("fill").alias("part"), F.col("r.name").alias("name"),
-                F.col("r.metric").alias("metric"),
-                F.lit(None).cast("double").alias("threshold"),
-                F.lit(None).cast("boolean").alias("passed"))
+        for c in ("fill_qty", "fill_qty_sparse", "fill_flag")])).alias("r")) \
+        .select("r.name", "r.metric")
     report = check_report(li, [
         complete("l_quantity", 1.0),
         unique("l_orderkey"),
         in_range("l_discount", 0.0, 0.1, 0.95),
         allowed_values("l_returnflag", ["A", "N", "R"], 1.0),
         satisfies("qty_positive", F.col("l_quantity") > 0, 1.0),
-    ]).select(F.lit("expect").alias("part"),
-              F.col("constraint").alias("name"), "metric", "threshold",
-              "passed")
-    return fill_rows.unionByName(report)
+    ]).withColumnRenamed("constraint", "name")
+    return union_arms([("fill", fill_rows), ("expect", report)],
+                      "name string, metric double, threshold double, "
+                      "passed boolean")
 
 
 # ---------------------------------------------------------------------------
@@ -1443,10 +1479,7 @@ def q_dedup_exact(spark, sf_dir):
     100-TB ingest path: a batch never rescans prior corpus text."""
     import tempfile
     docs = _t(spark, sf_dir, "documents")
-    full = dedup.exact_dedup(docs, "doc_id", "text").select(
-        F.lit("full").alias("part"), "digest",
-        F.col("representative").cast("long").alias("representative"),
-        F.col("dup_count").cast("long").alias("dup_count"))
+    full = dedup.exact_dedup(docs, "doc_id", "text")
     p = tempfile.mkdtemp(prefix="dedup_exact_registry_")
     k0 = dedup.exact_dedup_incremental(
         spark, p, docs.where(F.col("doc_id") % 2 == 0), "doc_id", "text",
@@ -1455,11 +1488,11 @@ def q_dedup_exact(spark, sf_dir):
         spark, p, docs.where(F.col("doc_id") % 2 == 1), "doc_id", "text",
         batch_id=1, n_buckets=16)
     incr = k0.unionByName(k1).select(
-        F.lit("incremental").alias("part"),
         dedup.text_digest(F.col("text")).alias("digest"),
-        F.col("doc_id").cast("long").alias("representative"),
-        F.lit(None).cast("long").alias("dup_count"))
-    return full.unionByName(incr)
+        F.col("doc_id").alias("representative"))
+    return union_arms([("full", full), ("incremental", incr)],
+                      "digest string, representative bigint, "
+                      "dup_count bigint")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1495,32 +1528,19 @@ def q_dedup_clusters(spark, sf_dir):
     pairs_live = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
                                            threshold=0.3, max_doc_freq=200)
     pairs = spark.createDataFrame(pairs_live.collect(), pairs_live.schema)
-    pair_rows = pairs.select(
-        F.lit("pair").alias("part"),
-        F.col("id1").cast("long").alias("a"), F.col("id2").cast("long").alias("b"),
-        F.col("common").cast("long").alias("common"), F.col("jaccard"))
-    cluster_rows = dedup.duplicate_clusters(pairs).select(
-        F.lit("cluster").alias("part"),
-        F.col("doc").cast("long").alias("a"),
-        F.col("cluster_id").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("common"),
-        F.lit(None).cast("double").alias("jaccard"))
+    pair_rows = pairs.withColumnsRenamed({"id1": "a", "id2": "b"})
+    cluster_rows = dedup.duplicate_clusters(pairs).withColumnsRenamed(
+        {"doc": "a", "cluster_id": "b"})
     span_rows = dedup.duplicated_spans(docs, "doc_id", "text", min_len=8,
-                                       portable=True).select(
-        F.lit("span").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("span_start").cast("long").alias("b"),
-        F.col("span_end").cast("long").alias("common"),
-        F.lit(None).cast("double").alias("jaccard"))
+                                       portable=True).withColumnsRenamed(
+        {"doc_id": "a", "span_start": "b", "span_end": "common"})
     names = (_t(spark, sf_dir, "part")
              .groupBy("p_name").agg(F.min("p_partkey").alias("pid")))
-    ed_rows = edit_distance_self_join(names, "pid", "p_name", 3).select(
-        F.lit("editdist").alias("part"),
-        F.col("id1").cast("long").alias("a"),
-        F.col("id2").cast("long").alias("b"),
-        F.col("dist").cast("long").alias("common"),
-        F.lit(None).cast("double").alias("jaccard"))
-    return pair_rows.union(cluster_rows).union(span_rows).union(ed_rows)
+    ed_rows = edit_distance_self_join(names, "pid", "p_name", 3) \
+        .withColumnsRenamed({"id1": "a", "id2": "b", "dist": "common"})
+    return union_arms([("pair", pair_rows), ("cluster", cluster_rows),
+                       ("span", span_rows), ("editdist", ed_rows)],
+                      "a bigint, b bigint, common bigint, jaccard double")
 
 
 def q_corpus_mixture(spark, sf_dir):
@@ -1596,56 +1616,39 @@ def q_corpus_mixture(spark, sf_dir):
                     F.sum(F.coalesce(F.col("is_cont"), F.lit(0)))
                      .cast("long").alias("c"))
                 .join(kmv, "lang")
-                .select(F.lit("mix").alias("part"), "lang", "a", "b", "c",
-                        F.col("kmv_distinct_est").cast("double").alias("d")))
-    _nulls = [F.lit(None).cast("long").alias("b"),
-              F.lit(None).cast("long").alias("c"),
-              F.lit(None).cast("double").alias("d")]
+                .withColumnRenamed("kmv_distinct_est", "d"))
     strat_rows = stratified_fixed_sample(docs, "lang", "doc_id", 20).select(
-        F.lit("strat").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"), *_nulls)
+        "lang", F.col("doc_id").alias("a"))
     budget_rows = token_budget_sample(
         docs, "doc_id", "n_chars", group_col="lang",
         budgets={"en": 30000, "fr": 10000, "de": 10000, "es": 10000}).select(
-        F.lit("budget").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"), *_nulls)
+        "lang", F.col("doc_id").alias("a"))
     pack_rows = pack_sequences(docs, "doc_id", "n_chars", seq_len=2048,
                                group_col="lang").select(
-        F.lit("pack").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("stream_offset").cast("long").alias("b"),
-        F.col("last_seq").cast("long").alias("c"),
-        F.col("first_seq").cast("double").alias("d"))
+        "lang", F.col("doc_id").alias("a"),
+        F.col("stream_offset").alias("b"), F.col("last_seq").alias("c"),
+        F.col("first_seq").alias("d"))
     chunk_rows = chunk_documents(docs, "doc_id", "text", chunk_tokens=32,
                                  overlap=8).select(
-        F.lit("chunk").alias("part"),
         F.md5(F.col("chunk_text")).alias("lang"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("chunk_id").cast("long").alias("b"),
-        F.col("n_chunk_tokens").cast("long").alias("c"),
-        F.lit(None).cast("double").alias("d"))
+        F.col("doc_id").alias("a"), F.col("chunk_id").alias("b"),
+        F.col("n_chunk_tokens").alias("c"))
     repeat_rows = domain_reweight(docs, "doc_id", "lang", RW_SHARES,
                                   scale=RW_SCALE).select(
-        F.lit("repeat").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("epoch").cast("long").alias("b"),
-        F.col("n_epochs").cast("long").alias("c"),
-        F.col("repeat_factor").cast("double").alias("d"))
+        "lang", F.col("doc_id").alias("a"), F.col("epoch").alias("b"),
+        F.col("n_epochs").alias("c"), F.col("repeat_factor").alias("d"))
     emb = _t(spark, sf_dir, "embeddings")
     dctr_rows = emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()
     dcents = [[float(x) for x in r["embedding"]] for r in dctr_rows]
     divers_rows = diversity_sample(emb, "vec_id", "embedding",
                                    per_cluster=30, centroids=dcents,
                                    keep_cluster_col=True).select(
-        F.lit("divers").alias("part"),
-        F.lit(None).cast("string").alias("lang"),
-        F.col("vec_id").cast("long").alias("a"),
-        F.col("_cell").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
-        F.lit(None).cast("double").alias("d"))
-    return (mix_rows.unionByName(strat_rows).unionByName(budget_rows)
-            .unionByName(pack_rows).unionByName(chunk_rows)
-            .unionByName(repeat_rows).unionByName(divers_rows))
+        F.col("vec_id").alias("a"), F.col("_cell").alias("b"))
+    return union_arms([("mix", mix_rows), ("strat", strat_rows),
+                       ("budget", budget_rows), ("pack", pack_rows),
+                       ("chunk", chunk_rows), ("repeat", repeat_rows),
+                       ("divers", divers_rows)],
+                      "lang string, a bigint, b bigint, c bigint, d double")
 
 
 def q_retrieval_indexed(spark, sf_dir):
@@ -1723,11 +1726,8 @@ def q_retrieval_indexed(spark, sf_dir):
     shard_dir = tempfile.mkdtemp(prefix="shard_gate_")
     export_shards(docs, "doc_id", shard_dir, n_shards=8, token_col="n_chars")
     shard_rows = read_shards(spark, shard_dir).select(
-        F.lit("shard").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("_shard").cast("long").alias("b"),
-        F.col("_rank").cast("long").alias("c"),
-        F.lit(None).cast("double").alias("d"))
+        "lang", F.col("doc_id").alias("a"), F.col("_shard").alias("b"),
+        F.col("_rank").alias("c"))
     bq = docs.where(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("qid"),
         F.substring("text", 1, 120).alias("qtext"))
@@ -1748,54 +1748,31 @@ def q_retrieval_indexed(spark, sf_dir):
     # pattern) instead of persisting: it feeds both the bm25 rows and the
     # RRF fusion, and a persist here would outlive the query (r7 review)
     bm = spark.createDataFrame(bm_live.collect(), bm_live.schema)
-    bm25_rows = bm.select(
-        F.lit("bm25").alias("part"),
-        F.col("query_id").cast("string").alias("lang"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("rank").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
-        (F.col("score") + F.lit(0.0)).alias("d"))
+    bm25_rows = _ranked_arm(bm)
     emb = _t(spark, sf_dir, "embeddings")
     ann = brute_force_topk(emb, emb.where(F.col("vec_id") < 3), "vec_id",
                            "embedding", k=5) \
         .select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
     fused = reciprocal_rank_fusion(
         [bm.select("query_id", "doc_id", "rank"), ann], k=8, c=60)
-    rrf_rows = fused.select(
-        F.lit("rrf").alias("part"),
-        F.col("query_id").cast("string").alias("lang"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("rank").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
-        (F.col("score") + F.lit(0.0)).alias("d"))
+    rrf_rows = _ranked_arm(fused)
     dsw_live = dsir_log_weights(docs, docs.where(F.col("lang") == "en"),
                                 "doc_id", "text", n_buckets=512, alpha=1.0,
                                 portable=True)
     # one-doc-per-row weights table: bounded snapshot, shared by the dsir
     # rows and the Gumbel top-k without a leaked persist
     dsw = spark.createDataFrame(dsw_live.collect(), dsw_live.schema)
-    dsir_rows = docs.select("doc_id", "lang").join(dsw, "doc_id").select(
-        F.lit("dsir").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_feats").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
-        (F.col("log_weight") + F.lit(0.0)).alias("d"))
+    dsir_rows = _dsir_arm(docs, dsw)
     dsirtop_rows = dsir_sample(docs, None, "doc_id", "text", k=40,
                                seed=42, quantize=6, weights=dsw).select(
-        F.lit("dsirtop").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.lit(None).cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
+        "lang", F.col("doc_id").alias("a"),
         (F.col("log_weight") + F.lit(0.0)).alias("d"))
     scored = docs.select("doc_id", "lang",
                          ((F.col("doc_id") % 100) / F.lit(100.0))
                          .alias("q"))
     pareto_rows = pareto_quality_sample(scored, "doc_id", "q",
                                         alpha=9.0, seed=42).select(
-        F.lit("pareto").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.lit(None).cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
+        "lang", F.col("doc_id").alias("a"),
         (F.col("q") + F.lit(0.0)).alias("d"))
     # streamed twin of the bm25 arm: same bootstrap, odd half via a real
     # file stream with batch_id_base=1 (the non-empty-bootstrap trap)
@@ -1809,14 +1786,8 @@ def q_retrieval_indexed(spark, sf_dir):
                            checkpoint=tempfile.mkdtemp(prefix="bm25_ck_"),
                            batch_id_base=1)
     sq.awaitTermination()
-    bm25s_rows = bm25_topk_indexed(spark, bs, bq, "qid", "qtext", k=5,
-                                   quantize=6).select(
-        F.lit("bm25s").alias("part"),
-        F.col("query_id").cast("string").alias("lang"),
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("rank").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
-        (F.col("score") + F.lit(0.0)).alias("d"))
+    bm25s_rows = _ranked_arm(bm25_topk_indexed(spark, bs, bq, "qid", "qtext",
+                                               k=5, quantize=6))
     # streamed twin of the dsir arm (r10 — the LAST index writer with
     # law-only evidence): even-id bucket-count partials bootstrap
     # batch=0, odd half arrives through a real parquet file stream via
@@ -1849,16 +1820,28 @@ def q_retrieval_indexed(spark, sf_dir):
                                   alpha=1.0)
     dsw_s = dsir_log_weights(docs, None, "doc_id", "text", n_buckets=512,
                              alpha=1.0, portable=True, table=stab)
-    dsirs_rows = docs.select("doc_id", "lang").join(dsw_s, "doc_id").select(
-        F.lit("dsirs").alias("part"), "lang",
-        F.col("doc_id").cast("long").alias("a"),
-        F.col("n_feats").cast("long").alias("b"),
-        F.lit(None).cast("long").alias("c"),
+    dsirs_rows = _dsir_arm(docs, dsw_s)
+    return union_arms([("shard", shard_rows), ("bm25", bm25_rows),
+                       ("dsir", dsir_rows), ("dsirtop", dsirtop_rows),
+                       ("pareto", pareto_rows), ("rrf", rrf_rows),
+                       ("bm25s", bm25s_rows), ("dsirs", dsirs_rows)],
+                      "lang string, a bigint, b bigint, c bigint, d double")
+
+
+def _ranked_arm(ranked):
+    """A retrieval_indexed arm from a (query_id, doc_id, rank, score)
+    ranking: lang=query id, a=doc_id, b=rank, d=score."""
+    return ranked.select(F.col("query_id").alias("lang"),
+                         F.col("doc_id").alias("a"), F.col("rank").alias("b"),
+                         (F.col("score") + F.lit(0.0)).alias("d"))
+
+
+def _dsir_arm(docs, weights):
+    """A retrieval_indexed arm from a DSIR weights table: a=doc_id,
+    b=n_feats, d=log_weight."""
+    return docs.select("doc_id", "lang").join(weights, "doc_id").select(
+        "lang", F.col("doc_id").alias("a"), F.col("n_feats").alias("b"),
         (F.col("log_weight") + F.lit(0.0)).alias("d"))
-    return (shard_rows.unionByName(bm25_rows).unionByName(dsir_rows)
-            .unionByName(dsirtop_rows).unionByName(pareto_rows)
-            .unionByName(rrf_rows).unionByName(bm25s_rows)
-            .unionByName(dsirs_rows))
 
 
 def q_text_quality(spark, sf_dir):
@@ -2040,6 +2023,10 @@ def _opq_gate_rotation(dim: int = 64) -> list[list[float]]:
     return [[float(x) for x in row] for row in (h1 @ h2)]
 
 
+# the arm columns of every top-k ANN composition
+_TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double, rank int"
+
+
 def q_similarity_topk(spark, sf_dir):
     """Brute-force cosine top-k AND IVF at full probe (n_probe == n_lists)
     AND scalar-quantized (SQ8) top-k:
@@ -2097,8 +2084,7 @@ def q_similarity_topk(spark, sf_dir):
     cvecs = [v for _, v in sorted(
         (r["vec_id"], [float(x) for x in r["embedding"]])
         for r in _emb_rows if r["vec_id"] < 18)]
-    brute = similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=5) \
-        .withColumn("method", F.lit("brute"))
+    brute = similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
     # injected centroids (embeddings 0..7): at FULL probe the answer
     # equals brute force whatever the centroids are — that is the point
     # of this arm — so the KMeans fit adds nothing to what the gate
@@ -2107,29 +2093,26 @@ def q_similarity_topk(spark, sf_dir):
     # the explicit-model contract at the coarse tier too
     ivf = similarity.ivf_topk(emb, q, "vec_id", "embedding", k=5,
                               n_lists=8, n_probe=8,
-                              centroids=cvecs[:8]) \
-        .withColumn("method", F.lit("ivf_full_probe"))
+                              centroids=cvecs[:8])
     sq = similarity.sq_topk(emb, q, "vec_id", "embedding", k=5, levels=256,
-                            dim=64) \
-        .withColumn("method", F.lit("sq_reconstructed"))
+                            dim=64)
     pq_model = {"centroids": [cvecs[0], cvecs[1]],
                 "codebooks": [[cvecs[2 + c][j * 8:(j + 1) * 8]
                                for c in range(16)] for j in range(8)]}
     pq = similarity.ivf_pq_topk(emb, q, "vec_id", "embedding", 64, k=5,
                                 n_probe=1, m=8, model=pq_model,
-                                quantize=6) \
-        .withColumn("method", F.lit("pq_adc"))
+                                quantize=6)
     opq_model = {"rotation": _opq_gate_rotation(64),
                  "codebooks": pq_model["codebooks"],
                  "m": 8, "dsub": 8, "dim": 64}
     opq = similarity.opq_topk(emb.where(F.col("vec_id") % 2 == 0), q,
                               "vec_id", "embedding", 64, k=5, m=8,
-                              model=opq_model, quantize=6) \
-        .withColumn("method", F.lit("opq"))
-    return (brute.unionAll(ivf).unionAll(sq).unionAll(pq).unionAll(opq)
-            .select("method", "query_id", "neighbor_id", "rank",
-                    (F.round(F.col("cosine"), 6) + F.lit(0.0))
-                    .alias("cosine6")))
+                              model=opq_model, quantize=6)
+    return union_arms([("brute", brute), ("ivf_full_probe", ivf),
+                       ("sq_reconstructed", sq), ("pq_adc", pq),
+                       ("opq", opq)], _TOPK_SCHEMA, tag="method") \
+        .select("method", "query_id", "neighbor_id", "rank",
+                (F.round(F.col("cosine"), 6) + F.lit(0.0)).alias("cosine6"))
 
 
 def q_sessionize(spark, sf_dir):
@@ -2148,13 +2131,7 @@ def q_sessionize(spark, sf_dir):
                                     scaled_state_partitions,
                                     session_windowed_aggregate)
     ev = _t(spark, sf_dir, "events")
-    batch = session_stats_batch(ev, "user_id", "ts", gap_minutes=30.0).select(
-        F.lit("batch").alias("part"), F.col("key"),
-        F.col("session_id").cast("long").alias("session_id"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("start_ms").cast("long").alias("start_ms"),
-        F.col("end_ms").cast("long").alias("end_ms"),
-        "total_value")
+    batch = session_stats_batch(ev, "user_id", "ts", gap_minutes=30.0)
     stream = file_stream(spark, f"{sf_dir}/events.parquet", ts_col="ts")
     agg = session_windowed_aggregate(stream, "user_id", "ts",
                                      gap="30 minutes", watermark="1 hour")
@@ -2163,15 +2140,12 @@ def q_sessionize(spark, sf_dir):
     streamed = run_to_memory(
         agg, "append",
         state_partitions=scaled_state_partitions(
-            spark, f"{sf_dir}/events.parquet")).select(
-        F.lit("stream").alias("part"),
-        F.col("user_id").cast("string").alias("key"),
-        F.lit(None).cast("long").alias("session_id"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("session_start_ms").cast("long").alias("start_ms"),
-        F.col("session_end_ms").cast("long").alias("end_ms"),
-        "total_value")
-    return batch.unionByName(streamed)
+            spark, f"{sf_dir}/events.parquet")).withColumnsRenamed(
+        {"user_id": "key", "session_start_ms": "start_ms",
+         "session_end_ms": "end_ms"})
+    return union_arms([("batch", batch), ("stream", streamed)],
+                      "key string, session_id bigint, n_events bigint, "
+                      "start_ms bigint, end_ms bigint, total_value double")
 
 
 def q_streaming_window(spark, sf_dir):
@@ -2231,16 +2205,6 @@ def q_cdc_scd2(spark, sf_dir):
     hist = scd2_history(changes, ["k"], "ver", op_col="op")
     s1 = snapshot_at(hist, t1)
     s2 = snapshot_at(hist, t2)
-
-    def shape(df, part, op_col=None):
-        return df.select(
-            F.lit(part).alias("part"),
-            F.col("k").cast("long").alias("k"),
-            F.col("ver").cast("long").alias("ver"),
-            F.col("value").cast("double").alias("value"),
-            (F.col(op_col) if op_col else F.lit(None).cast("string"))
-            .alias("op"))
-
     diff = snapshot_diff(s1, s2, ["k"], "ver")
     # part='pit': the BUCKETED point-in-interval join
     # (sources/range_join.point_in_interval_join) driven over the same
@@ -2259,13 +2223,15 @@ def q_cdc_scd2(spark, sf_dir):
     pit = point_in_interval_join(points, intervals, "t", "valid_from",
                                  "vend", bucket_width=max(1, max_ver // 16),
                                  extra_keys=["k"], how="inner")
-    pit_rows = pit.select(
-        F.lit("pit").alias("part"), F.col("k").cast("long").alias("k"),
-        F.col("g_ver").cast("long").alias("ver"),
-        F.col("g_value").cast("double").alias("value"),
-        F.col("t").cast("string").alias("op"))
-    return shape(s1, "snap1").union(shape(s2, "snap2")) \
-        .union(shape(diff, "diff", op_col="op")).union(pit_rows)
+    pit_rows = pit.select("k", F.col("g_ver").alias("ver"),
+                          F.col("g_value").alias("value"),
+                          F.col("t").alias("op"))
+    snap_cols = ["k", "ver", "value"]
+    return union_arms([("snap1", s1.select(snap_cols)),
+                       ("snap2", s2.select(snap_cols)),
+                       ("diff", diff.select(*snap_cols, "op")),
+                       ("pit", pit_rows)],
+                      "k bigint, ver bigint, value double, op string")
 
 
 def q_top_k_by_group(spark, sf_dir):
@@ -2346,17 +2312,13 @@ def q_sketch_quantiles(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     sk = kll_partial(ev, ["event_type"], "value", k=8192)
     kll = sk.select(
-        F.lit("kll").alias("part"), "event_type",
-        F.lit(None).cast("long").alias("est"),
+        "event_type",
         *[F.round(kll_quantile("kll", q), 6).alias(f"q{int(q * 100)}")
           for q in (0.25, 0.5, 0.75)])
     cms = cms_collect(ev, "event_type", eps=0.002, confidence=0.995, seed=42)
     types = sorted(r[0] for r in ev.select("event_type").distinct().collect())
     est_rows = [(t, cms.estimate(t)) for t in types]
-    cms_df = spark.createDataFrame(est_rows, "event_type string, est long") \
-        .select(F.lit("cms").alias("part"), "event_type", "est",
-                *[F.lit(None).cast("double").alias(f"q{int(q * 100)}")
-                  for q in (0.25, 0.5, 0.75)])
+    cms_df = spark.createDataFrame(est_rows, "event_type string, est long")
     fp = freq_partial(ev.select(F.to_date("ts").alias("_slice"), "event_type"),
                       ["_slice"], "event_type", k=64)
     d = tempfile.mkdtemp(prefix="freq_partials_gate_")
@@ -2364,11 +2326,8 @@ def q_sketch_quantiles(spark, sf_dir):
     fm = freq_merge(spark.read.parquet(d).withColumn("_all", F.lit(1)),
                     ["_all"], k=64)
     freq = (fm.select("err", F.explode("items").alias("event_type", "_c"))
-            .select(F.lit("freq").alias("part"), "event_type",
-                    F.when(F.col("err") == 0, F.col("_c"))
-                     .cast("long").alias("est"),
-                    *[F.lit(None).cast("double").alias(f"q{int(q * 100)}")
-                      for q in (0.25, 0.5, 0.75)]))
+            .select("event_type",
+                    F.when(F.col("err") == 0, F.col("_c")).alias("est")))
 
     docs = _t(spark, sf_dir, "documents")
     tkdf = docs.select(
@@ -2399,12 +2358,12 @@ def q_sketch_quantiles(spark, sf_dir):
         _bigrams(F.col("tk")), _bigrams(F.col("tk"), rev=True))).alias("bg"))
         .distinct())
     bloom = (bloom_probe(probes, bitmap, "bg", 4096, 3, portable=True)
-             .select(F.lit("bloom").alias("part"),
-                     F.col("bg").alias("event_type"),
-                     F.col("might_contain").cast("long").alias("est"),
-                     *[F.lit(None).cast("double").alias(f"q{int(q * 100)}")
-                       for q in (0.25, 0.5, 0.75)]))
-    return kll.union(cms_df).union(freq).union(bloom)
+             .select(F.col("bg").alias("event_type"),
+                     F.col("might_contain").alias("est")))
+    return union_arms([("kll", kll), ("cms", cms_df), ("freq", freq),
+                       ("bloom", bloom)],
+                      "event_type string, est bigint, q25 double, "
+                      "q50 double, q75 double")
 
 
 def q_ivf_topk_indexed(spark, sf_dir):
@@ -2478,9 +2437,8 @@ def q_ivf_topk_indexed(spark, sf_dir):
     sq.awaitTermination()
     streamed = ivfpq_topk_indexed(spark, d3, q, "vec_id", "embedding", k=5,
                                   n_probe=1, quantize=6)
-    out = full.withColumn("part", F.lit("full")) \
-        .unionAll(pq.withColumn("part", F.lit("pq"))) \
-        .unionAll(streamed.withColumn("part", F.lit("stream")))
+    out = union_arms([("full", full), ("pq", pq), ("stream", streamed)],
+                     _TOPK_SCHEMA)
     return out.select(
         "part",
         F.col("query_id").cast("long").alias("query_id"),
@@ -2765,9 +2723,7 @@ def q_embedding_near_dup(spark, sf_dir):
     pairs = dedup.embedding_near_dup_pairs_lsh(emb, "vec_id", "embedding",
                                                dim=64, threshold=0.35)
     lsh_rows = pairs.select(
-        F.lit("lsh").alias("part"),
-        F.col("id1").cast("long").alias("a"),
-        F.col("id2").cast("long").alias("b"),
+        F.col("id1").alias("a"), F.col("id2").alias("b"),
         (F.round(F.col("cosine"), 6) + F.lit(0.0)).alias("d"))
     ctr_rows = emb.where(F.col("vec_id") < 2).orderBy("vec_id").collect()
     centroids = [[float(x) for x in r["embedding"]] for r in ctr_rows]
@@ -2777,9 +2733,8 @@ def q_embedding_near_dup(spark, sf_dir):
     semclu_rows = (clusters
                    .join(assigned.select(F.col("id").alias("doc"),
                                          "centroid_sim"), "doc")
-                   .select(F.lit("semclu").alias("part"),
-                           F.col("doc").cast("long").alias("a"),
-                           F.col("cluster_id").cast("long").alias("b"),
+                   .select(F.col("doc").alias("a"),
+                           F.col("cluster_id").alias("b"),
                            (F.round("centroid_sim", 6) + F.lit(0.0))
                            .alias("d")))
     # r8 gate-cost shave: derive the kept-set from the SAME pairs/CC/
@@ -2788,11 +2743,7 @@ def q_embedding_near_dup(spark, sf_dir):
     kept = dedup.semantic_dedup_keep(emb.select("vec_id"), "vec_id",
                                      clusters, assigned, keep="edge",
                                      quantize=6)
-    semkeep_rows = kept.select(
-        F.lit("semkeep").alias("part"),
-        F.col("vec_id").cast("long").alias("a"),
-        F.lit(None).cast("long").alias("b"),
-        F.lit(None).cast("double").alias("d"))
+    semkeep_rows = kept.select(F.col("vec_id").alias("a"))
     # part='pool' (r9): text -> embedding ingestion gated end to end —
     # embed_documents in its PORTABLE decimal-mean form over a word-
     # vector table computed from the corpus vocabulary by pure char-code
@@ -2820,13 +2771,12 @@ def q_embedding_near_dup(spark, sf_dir):
     pooled = embed_documents(docs, "text", vecs, id_col="doc_id",
                              portable=True)
     pool_rows = pooled.where(F.col("embedding").isNotNull()).select(
-        F.lit("pool").alias("part"),
-        F.col("doc_id").cast("long").alias("a"),
+        F.col("doc_id").alias("a"),
         F.posexplode("embedding").alias("_p", "_v")) \
-        .select("part", "a", (F.col("_p")).cast("long").alias("b"),
-                F.col("_v").cast("double").alias("d"))
-    return lsh_rows.unionByName(semclu_rows).unionByName(semkeep_rows) \
-        .unionByName(pool_rows)
+        .withColumnsRenamed({"_p": "b", "_v": "d"})
+    return union_arms([("lsh", lsh_rows), ("semclu", semclu_rows),
+                       ("semkeep", semkeep_rows), ("pool", pool_rows)],
+                      "a bigint, b bigint, d double")
 
 
 def q_dedup_simhash(spark, sf_dir):
@@ -2842,10 +2792,8 @@ def q_dedup_simhash(spark, sf_dir):
     import tempfile
     docs = _t(spark, sf_dir, "documents")
     groups = dedup.simhash_groups(docs, "doc_id", "text", portable=True) \
-        .select(F.lit("group").alias("part"),
-                F.col("simhash").alias("a"),
-                F.col("representative").cast("long").alias("b"),
-                F.col("dup_count").cast("long").alias("c"))
+        .withColumnsRenamed({"simhash": "a", "representative": "b",
+                             "dup_count": "c"})
     p = tempfile.mkdtemp(prefix="simhash_index_gate_")
     a_df = docs.where(F.col("doc_id") % 2 == 0)
     b_df = docs.where(F.col("doc_id") % 2 == 1)
@@ -2859,9 +2807,9 @@ def q_dedup_simhash(spark, sf_dir):
             .select(F.least("id1", "id2").cast("long").alias("a"),
                     F.greatest("id1", "id2").cast("long").alias("b"),
                     F.col("hamming").cast("long").alias("c"))
-            .distinct()
-            .select(F.lit("incremental").alias("part"), "a", "b", "c"))
-    return groups.unionByName(incr)
+            .distinct())
+    return union_arms([("group", groups), ("incremental", incr)],
+                      "a bigint, b bigint, c bigint")
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -2902,10 +2850,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
                                            num_hashes=16, portable=True))
     full = dedup.minhash_lsh_candidates(
         docs, "doc_id", "text", num_hashes=16, bands=4, portable=True,
-        signatures=sigs) \
-        .select(F.lit("full").alias("part"),
-                F.col("id1").cast("long").alias("id1"),
-                F.col("id2").cast("long").alias("id2"))
+        signatures=sigs)
     p = tempfile.mkdtemp(prefix="lsh_index_gate_")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
@@ -2923,8 +2868,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     incr = (a_pairs.unionByName(b_pairs)
             .select(F.least("id1", "id2").cast("long").alias("id1"),
                     F.greatest("id1", "id2").cast("long").alias("id2"))
-            .distinct()
-            .select(F.lit("incremental").alias("part"), "id1", "id2"))
+            .distinct())
     # streamed twin: odd half through a real file stream appending to
     # the bootstrap snapshot; one all-docs probe (shared signatures)
     # must equal the one-shot candidate set
@@ -2946,9 +2890,9 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     streamed = (s_pairs
                 .select(F.least("id1", "id2").cast("long").alias("id1"),
                         F.greatest("id1", "id2").cast("long").alias("id2"))
-                .distinct()
-                .select(F.lit("stream").alias("part"), "id1", "id2"))
-    return full.unionByName(incr).unionByName(streamed)
+                .distinct())
+    return union_arms([("full", full), ("incremental", incr),
+                       ("stream", streamed)], "id1 bigint, id2 bigint")
 
 
 def q_similarity_ann_lsh(spark, sf_dir):
@@ -2966,8 +2910,7 @@ def q_similarity_ann_lsh(spark, sf_dir):
     probe = similarity.hyperplane_lsh_topk(emb, q, "vec_id", "embedding",
                                            dim=64, k=5, planes="signs",
                                            n_flip=1)
-    out = base.withColumn("part", F.lit("base")) \
-        .unionAll(probe.withColumn("part", F.lit("probe1")))
+    out = union_arms([("base", base), ("probe1", probe)], _TOPK_SCHEMA)
     return out.select("part", "query_id", "neighbor_id", "rank",
                       (F.round(F.col("cosine"), 6) + F.lit(0.0)).alias("cosine6"))
 
@@ -3111,19 +3054,13 @@ def q_ml_train_score_merged(spark, sf_dir):
     Both are seeded-ML outputs DuckDB cannot replicate (no oracle row by
     design); row counts and the deterministic integer metric columns stay
     comparable across rounds."""
-    null_s = F.lit(None).cast("string")
-    base = q_ml_train_score(spark, sf_dir).select(
-        F.lit("spine").alias("part"), "split", "n", "n_pos", "n_correct",
-        "auc4", null_s.alias("model"), null_s.alias("params"),
-        F.lit(None).cast("double").alias("cv_auroc"))
-    sel = q_model_selection(spark, sf_dir).select(
-        F.lit("selection").alias("part"), null_s.alias("split"),
-        F.lit(None).cast("long").alias("n"),
-        F.lit(None).cast("long").alias("n_pos"),
-        F.lit(None).cast("long").alias("n_correct"),
-        F.lit(None).cast("double").alias("auc4"),
-        "model", "params", "cv_auroc")
-    return base.unionByName(sel)
+    spine = q_ml_train_score(spark, sf_dir)
+    sel = q_model_selection(spark, sf_dir).select("model", "params",
+                                                   "cv_auroc")
+    return union_arms([("spine", spine), ("selection", sel)],
+                      "split string, n bigint, n_pos bigint, "
+                      "n_correct bigint, auc4 double, model string, "
+                      "params string, cv_auroc double")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Full Snowball stemmers (de fr es sv no da ru it nl pt ro fi hu)
 from ONE spec per language, interpreted by FOUR backends: Catalyst
-expressions, Spark-SQL text, DuckDB SQL text, and plain Python.
+expressions, Spark-SQL step text, DuckDB SQL text, and plain Python.
 
 Reference: the per-language analyzer registry the reference routes
 text through (utils/src/main/scala/com/salesforce/op/utils/text/
@@ -57,8 +57,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["snowball_stem", "snowball_stem_py", "snowball_spark_sql",
-           "snowball_sql_ctes", "SNOWBALL_LANGS"]
+__all__ = ["snowball_stem", "snowball_stem_py", "snowball_sql_ctes",
+           "SNOWBALL_LANGS"]
 
 SNOWBALL_LANGS = ("de", "fr", "es", "sv", "no", "da", "ru", "it", "nl",
                   "pt", "ro", "fi", "hu")
@@ -352,42 +352,7 @@ class _SqlB:
     # finished planning). One step, one CTE is the measured optimum.
 
 
-class _SparkSqlB(_SqlB):
-    """Spark-SQL-dialect text backend: same expression generator as the
-    DuckDB one, but bind-once is a nested transform-over-struct lambda
-    (the textual form of _SparkB's bind) so the whole stemmer arrives
-    as ONE parsed expression. Building the Column form costs 1-3.5 s of
-    py4j round trips per language; this form is one F.expr call — the
-    driver-gate path uses it."""
-
-    # no CTE machinery here — chunking is meaningless inside one
-    # nested expression (and _SqlB's subbind needs the CTE state)
-    subbind = None
-
-    def __init__(self):
-        self.depth = 0
-
-    def endswith(self, w, s):
-        return f"endswith({w}, {_q(s)})"
-
-    def startswith(self, w, s):
-        return f"startswith({w}, {_q(s)})"
-
-    def regex_replace(self, w, pat, repl):
-        # Spark regexp_replace is global; replacement refs stay $1
-        return f"regexp_replace({w}, {_q(pat)}, {_q(repl)})"
-
-    def bind(self, refs, name, val, cont):
-        self.depth += 1
-        var = f"sb{self.depth}"
-        items = list(refs.items()) + [(name, val)]
-        fields = ", ".join(f"{_q(k)}, {v}" for k, v in items)
-        inner = cont({k: f"{var}.{k}" for k, _ in items})
-        return (f"transform(array(named_struct({fields})), "
-                f"{var} -> {inner})[0]")
-
-
-class _SparkStepB(_SparkSqlB):
+class _SparkStepB(_SqlB):
     """Spark-SQL dialect with a STEP-PER-COLUMN bind: each plan step —
     and, via ``subbind``, each ``_RULE_CHUNK``-rule slice of a big
     among — is recorded as (column_name, small_expression_text)
@@ -404,6 +369,16 @@ class _SparkStepB(_SparkSqlB):
         self.steps: list[tuple[str, str]] = []
         self._aux = 0
         self._pfx = col_prefix
+
+    def endswith(self, w, s):
+        return f"endswith({w}, {_q(s)})"
+
+    def startswith(self, w, s):
+        return f"startswith({w}, {_q(s)})"
+
+    def regex_replace(self, w, pat, repl):
+        # Spark regexp_replace is global; replacement refs stay $1
+        return f"regexp_replace({w}, {_q(pat)}, {_q(repl)})"
 
     def subbind(self, val):
         self._aux += 1
@@ -443,8 +418,8 @@ def snowball_spark_steps(lang: str, variant: str | None = None,
 
     The fast-BUILD backend: pure-Python text assembly plus one tiny
     ``F.expr`` parse per step/chunk — neither the Column backend's
-    1-10 s of py4j round trips per language nor the one-big-parse
-    form's superlinear ANTLR cost and DFA-cache retention (measured
+    1-10 s of py4j round trips per language nor one big ``F.expr``
+    parse's superlinear ANTLR cost and DFA-cache retention (measured
     ~300 MB retained for the ru stemmer's 85 KB step). Equal to
     ``snowball_stem`` by the backend law tests."""
     plan, final = _lang_program(lang, variant)
@@ -1305,16 +1280,6 @@ def snowball_stem_py(w: str | None, lang: str,
         return None
     plan, final = _lang_program(lang, variant)
     return _run(_PyB(), plan, w, final)
-
-
-def snowball_spark_sql(lang: str, input_expr: str,
-                       variant: str | None = None) -> str:
-    """The whole stemmer as ONE Spark-SQL expression string over
-    ``input_expr`` (fast to build: pure Python string assembly; parse
-    happens JVM-side in one F.expr). Equal to ``snowball_stem`` by the
-    backend law tests."""
-    plan, final = _lang_program(lang, variant)
-    return _run(_SparkSqlB(), plan, f"({input_expr})", final)
 
 
 def snowball_sql_ctes(lang: str, word_expr: str, prefix: str,

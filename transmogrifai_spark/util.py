@@ -4,6 +4,7 @@ from __future__ import annotations
 import contextlib
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,10 +99,14 @@ def cached(df: DataFrame) -> DataFrame:
     """``df.persist()``, owned by the innermost open ``cache_scope`` of the
     current thread. With no scope open it is exactly ``persist()``: the
     session keeps the entry until someone unpersists it or clears the
-    cache."""
+    cache. A plan that was already cached keeps its owner: Spark adds no
+    entry for it, so the scope does not register it and leaves the
+    caller's cache in place (the storage-level check is a driver-side
+    CacheManager lookup and runs no job)."""
+    fresh = df.storageLevel == StorageLevel.NONE
     df = df.persist()
     stack = getattr(_CACHE_SCOPES, "stack", None)
-    if stack:
+    if stack and fresh:
         stack[-1].append(df)
     return df
 
