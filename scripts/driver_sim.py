@@ -2,43 +2,30 @@
 """Driver rehearsal: run entry() + every queries() entry against oracle_sql()
 using a STOCK default SparkSession (no engine configs) — catches anything that
 silently depends on session settings (ANSI, timezone, AQE, legacy flags).
+Rows are compared with check_correctness.py's canonical signature, and a
+mismatching ``union_arms`` row names each arm whose rows differ.
 
     python scripts/driver_sim.py [sf_dir]
 """
 from __future__ import annotations
 
 import importlib.util
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb
+from check_correctness import frame_sig, print_arm_diffs
 from pyspark.sql import SparkSession
+
+from transmogrifai_spark.driver_queries import ARM_TAGS
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-
-
-def canon(v):
-    if v is None:
-        return "\\N"
-    if isinstance(v, bool):
-        return "T" if v else "F"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            return "0"
-        return repr(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{canon(v[k])}" for k in sorted(v)) + "}"
-    return str(v)
 
 
 def main():
@@ -79,15 +66,12 @@ def main():
         cur = con.execute(oracles[name])
         ocols = [d[0] for d in cur.description]
         orows = cur.fetchall()
-        so = sorted(range(len(scols)), key=lambda i: scols[i])
-        oo = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        sl = sorted("\x01".join(canon(r[i]) for i in so) for r in srows)
-        ol = sorted("\x01".join(canon(r[i]) for i in oo) for r in orows)
-        if sorted(scols) != sorted(ocols) or sl != ol:
-            print(f"FAIL {name}: mismatch ({len(sl)} vs {len(ol)} rows)")
+        if frame_sig(scols, srows) != frame_sig(ocols, orows):
+            print(f"FAIL {name}: mismatch ({len(srows)} vs {len(orows)} rows)")
+            print_arm_diffs(ARM_TAGS, scols, srows, ocols, orows)
             nfail += 1
         else:
-            print(f"PASS {name}: {len(sl)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
             npass += 1
     print(f"\n== driver-sim: {npass} pass, {nfail} fail, {nrows} rows-only ==")
     spark.stop()

@@ -463,6 +463,24 @@ def test_train_validation_split_select(spark, trainable):
     assert sel.fitted_model.transform(trainable).count() == trainable.count()
 
 
+def test_mlp_auto_layers_fit_through_tvs_and_combiner(spark, trainable):
+    """An MLP candidate with ``layers="auto"`` (as default_binary_candidates
+    lists it) fits on every selector path: train-validation split and the
+    top-model combiner resolve the layers from the data, as CV does."""
+    from transmogrifai_spark.ml.selectors import (
+        combine_top_models, train_validation_split_select)
+    cands = [("MultilayerPerceptronClassifier",
+              {"layers": "auto", "maxIter": 20, "seed": 42})]
+    sel = train_validation_split_select(trainable, "fv", "y", "k",
+                                        candidates=cands)
+    assert sel.best_params["layers"] == "auto"
+    assert list(sel.fitted_model.getLayers()) == [2, 2, 2]
+    ens = combine_top_models(sel, trainable, "fv", "y", "k", top_n=1)
+    scores = [r["ensemble_score"] for r in ens.collect()]
+    assert len(scores) == trainable.count()
+    assert all(0.0 <= s <= 1.0 for s in scores)
+
+
 def test_model_insights_and_loco(spark, trainable):
     from pyspark.ml.classification import LogisticRegression
     from transmogrifai_spark.ml.insights import loco_linear, model_insights

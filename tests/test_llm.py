@@ -1307,6 +1307,16 @@ def test_simhash_index_incremental_equals_full(spark, sf_dir, tmp_path):
     assert all(any(c in pr for c in
                    [r["doc_id"] for r in clones.collect()]) for pr in probe)
     assert len(probe) >= 15
+    # bootstrap: against an index built over an EMPTY frame (no parquet
+    # footers yet) the probe returns exactly the batch's within pairs
+    p0 = str(tmp_path / "sh0")
+    build_simhash_index(a.limit(0), "doc_id", "text", p0, n_shards=16)
+    boot = {tuple(sorted((r["id1"], r["id2"]))) for r in
+            simhash_dedup_incremental(spark, p0, b, "doc_id",
+                                      "text").collect()}
+    assert boot == {tuple(sorted((r["id1"], r["id2"]))) for r in
+                    simhash_near_dup_pairs(b, "doc_id", "text").collect()}
+    assert len(boot) >= 15
 
 
 def test_simhash_incremental_max_bucket_guard(spark, tmp_path):

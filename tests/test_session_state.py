@@ -2,7 +2,9 @@
 confs as they found them, scoped conf changes are thread-safe, no
 module outside session.py / util.scoped_conf writes a conf or reads the
 environment, and no module outside util.cached / cache_scope / snapshot
-persists, unpersists or checkpoints a frame."""
+persists, unpersists or checkpoints a frame. Two more single owners are
+linted here: ``union_arms`` for arm tags and ``sources/layout.py`` for
+persisted index storage."""
 import ast
 import os
 import threading
@@ -266,3 +268,75 @@ def test_arm_tag_lint_catches_violations(tmp_path):
         "    b = df.withColumn('method', F.lit('y'))\n"
         "    return a.unionByName(b.withColumn('set_op', F.lit('z')))\n")
     assert _hand_written_arm_tags(str(mod)) == [4, 5]
+
+
+def _in_write_chain(node):
+    """Whether a method chain below ``node`` passes through ``.write``."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "write":
+            return True
+        node = node.value if isinstance(node, ast.Attribute) else node.func
+    return False
+
+
+def _index_storage_sites(pkg):
+    """(file, line, what) outside ``sources/layout.py`` for every
+    ``os.replace`` call, every string literal naming
+    ``UNABLE_TO_INFER_SCHEMA`` and, under ``llm/``, every
+    ``.write…partitionBy(`` chain (ARCHITECTURE rule 10: the atomic
+    sidecar write, the bootstrap read and the batch directory are
+    layout.py's)."""
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if rel == os.path.join("sources", "layout.py"):
+                continue
+            in_llm = rel.startswith("llm" + os.sep)
+            for node in ast.walk(ast.parse(open(path).read(), path)):
+                if (isinstance(node, ast.Constant)
+                        and isinstance(node.value, str)
+                        and "UNABLE_TO_INFER_SCHEMA" in node.value):
+                    hits.append((rel, node.lineno, "UNABLE_TO_INFER_SCHEMA"))
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                f = node.func
+                if (f.attr == "replace" and isinstance(f.value, ast.Name)
+                        and f.value.id == "os"):
+                    hits.append((rel, node.lineno, "os.replace"))
+                if (in_llm and f.attr == "partitionBy"
+                        and _in_write_chain(f.value)):
+                    hits.append((rel, node.lineno, ".write.partitionBy"))
+    return hits
+
+
+def test_only_layout_owns_index_storage():
+    assert _index_storage_sites(PKG) == []
+
+
+def test_index_storage_lint_catches_violations(tmp_path):
+    body = ("import os\n"
+            "def commit(p):\n"
+            "    os.replace(p + '.tmp', p)\n"
+            "def bootstrap(e):\n"
+            "    return 'UNABLE_TO_INFER_SCHEMA' in str(e)\n"
+            "def append(df, p):\n"
+            "    (df.repartition(1)\n"
+            "       .write.mode('overwrite').partitionBy('_s').parquet(p))\n"
+            "def rank(df):\n"
+            "    return Window.partitionBy('k')\n")
+    for d in ("sources", "llm"):
+        (tmp_path / d).mkdir()
+    (tmp_path / "sources" / "layout.py").write_text(body)
+    (tmp_path / "sources" / "sink.py").write_text(body)
+    (tmp_path / "llm" / "index.py").write_text(body)
+    assert sorted(_index_storage_sites(str(tmp_path))) == [
+        (os.path.join("llm", "index.py"), 3, "os.replace"),
+        (os.path.join("llm", "index.py"), 5, "UNABLE_TO_INFER_SCHEMA"),
+        (os.path.join("llm", "index.py"), 7, ".write.partitionBy"),
+        (os.path.join("sources", "sink.py"), 3, "os.replace"),
+        (os.path.join("sources", "sink.py"), 5, "UNABLE_TO_INFER_SCHEMA")]

@@ -28,14 +28,16 @@ verifies the operator.
 """
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from ..sources.layout import (compact_batch_dirs, read_batches,
+                              stream_batches, write_atomic, write_batch)
 from ..util import (bind_sql, cache_scope, cached, ensure_parallelism,
                     observed_metrics, scoped_conf, snapshot)
 
@@ -207,6 +209,23 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                           portable=portable).alias("_sig"))
 
 
+def _minhash_bands(sig: Column, bands: int, rows: int,
+                   portable: bool) -> Column:
+    """array<struct<band, bucket>> of a MinHash signature: band b's bucket
+    hashes signature entries b*rows .. b*rows+rows-1, joined by "_", with
+    seed b. The one band builder of the one-shot candidates and of the
+    persisted index's build and probe sides: an index built and probed
+    with different band keys matches nothing (the r6 seed-binding bug)."""
+    bucket_hash = portable_hash64 if portable else (
+        lambda c, seed: F.xxhash64(c, F.lit(seed)))
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 bucket_hash(F.concat_ws("_", *[
+                     F.element_at(sig, b * rows + r + 1).cast("string")
+                     for r in range(rows)]), b).alias("bucket"))
+        for b in range(bands)])
+
+
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                            n: int = 3, num_hashes: int = 32,
                            bands: int = 8, portable: bool = False,
@@ -227,9 +246,6 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
     assert); near-duplicates are candidates with probability
     1-(1-j^rows)^bands for Jaccard j.
     """
-    rows = num_hashes // bands
-    bucket_hash = portable_hash64 if portable else (
-        lambda c, seed: F.xxhash64(c, F.lit(seed)))
     if signatures is None:
         sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
                                  portable=portable)
@@ -242,14 +258,8 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
         # once, shared with build_lsh_index & friends; the caller owns its
         # persistence, a second cache copy here would double the storage
         sig = signatures.select(F.col("id").alias("_id"), "_sig")
-    banded = sig.select(
-        "_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     bucket_hash(F.concat_ws("_", *[
-                         F.element_at("_sig", b * rows + r + 1).cast("string")
-                         for r in range(rows)]), b).alias("bucket"))
-            for b in range(bands)])).alias("bb"))
+    banded = sig.select("_id", F.explode(_minhash_bands(
+        F.col("_sig"), bands, num_hashes // bands, portable)).alias("bb"))
     if max_bucket is not None:
         # the LSH skew guard: a bucket of m docs yields m(m-1)/2 candidate
         # pairs — one pathological bucket (boilerplate pages, empty-ish
@@ -334,6 +344,18 @@ def simhash_groups(df: DataFrame, id_col: str, text_col: str,
     )
 
 
+def _simhash_bands(sig: Column) -> Column:
+    """array<struct<band, bits>>: the four 16-bit bands of a 64-bit
+    signature (pigeonhole: any pair within hamming <= 3 shares at least
+    one band exactly). The one band builder of the one-shot search and of
+    the SimHash index's build and probe sides."""
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.shiftrightunsigned(sig, b * 16)
+                 .bitwiseAND(F.lit(0xFFFF)).alias("bits"))
+        for b in range(4)])
+
+
 def sig_near_dup_pairs(df: DataFrame, id_col: str, sig_col,
                        max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs within a hamming radius over ANY 64-bit
@@ -347,11 +369,8 @@ def sig_near_dup_pairs(df: DataFrame, id_col: str, sig_col,
                     (F.col(sig_col) if isinstance(sig_col, str)
                      else sig_col).alias("_sig"))
     sig = cached(ensure_parallelism(sig))
-    banded = sig.select("_id", "_sig", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("_sig"), b * 16)
-                 .bitwiseAND(F.lit(0xFFFF)).alias("bits"))
-        for b in range(4)])).alias("bb"))
+    banded = sig.select("_id", "_sig",
+                        F.explode(_simhash_bands(F.col("_sig"))).alias("bb"))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (a.join(b, (F.col("a.bb") == F.col("b.bb")) & (F.col("a._id") < F.col("b._id")))
             .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"),
@@ -888,20 +907,13 @@ def _lsh_banded(df: DataFrame, id_col: str, text_col: str, *, n: int,
                 signatures: DataFrame | None = None) -> DataFrame:
     """(id, band, bucket, _shard) rows — the banded-bucket form both the
     index builder and the query side compute with identical parameters."""
-    rows = num_hashes // bands
-    bucket_hash = portable_hash64 if portable else (
-        lambda c, seed: F.xxhash64(c, F.lit(seed)))
     if signatures is None:
         sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
                                  portable=portable)
     else:
         sig = signatures.select("id", "_sig")
-    banded = sig.select("id", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 bucket_hash(F.concat_ws("_", *[
-                     F.element_at("_sig", b * rows + r + 1).cast("string")
-                     for r in range(rows)]), b).alias("bucket"))
-        for b in range(bands)])).alias("bb"))
+    banded = sig.select("id", F.explode(_minhash_bands(
+        F.col("_sig"), bands, num_hashes // bands, portable)).alias("bb"))
     return banded.select("id", F.col("bb.band").alias("band"),
                          F.col("bb.bucket").alias("bucket"),
                          F.pmod("bb.bucket", F.lit(n_shards)).alias("_shard"))
@@ -923,21 +935,14 @@ def build_lsh_index(df: DataFrame, id_col: str, text_col: str, path: str, *,
     Each batch writes ``bands/batch=<batch_id>/`` with overwrite, so an
     at-least-once ingestion pipeline that replays a batch converges (the
     same guard as stream_rollup_partials / CowSnapshot)."""
-    import json
-    import os
-
     banded = _lsh_banded(df, id_col, text_col, n=n, num_hashes=num_hashes,
                          bands=bands, portable=portable, n_shards=n_shards,
                          signatures=signatures)
-    banded.write.mode("overwrite").partitionBy("_shard") \
-        .parquet(os.path.join(path, "bands", f"batch={batch_id}"))
+    write_batch(banded, os.path.join(path, "bands"), batch_id, "_shard")
     meta = {"n": n, "num_hashes": num_hashes, "bands": bands,
             "portable": portable, "n_shards": n_shards}
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, "_LSH_INDEX.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_LSH_INDEX.json"))
+    write_atomic(os.path.join(path, "_LSH_INDEX.json"), json.dumps(meta))
     return meta
 
 
@@ -946,17 +951,13 @@ def append_lsh_index(spark, path: str, df: DataFrame, id_col: str,
     """Add a document batch to an existing index (same parameters, read
     from the sidecar). Overwrites this batch's own subdirectory —
     replay-idempotent."""
-    import json
-    import os
-
     with open(os.path.join(path, "_LSH_INDEX.json")) as f:
         meta = json.load(f)
     banded = _lsh_banded(df, id_col, text_col, n=meta["n"],
                          num_hashes=meta["num_hashes"], bands=meta["bands"],
                          portable=meta["portable"],
                          n_shards=meta["n_shards"])
-    banded.write.mode("overwrite").partitionBy("_shard") \
-        .parquet(os.path.join(path, "bands", f"batch={batch_id}"))
+    write_batch(banded, os.path.join(path, "bands"), batch_id, "_shard")
 
 
 def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
@@ -1000,9 +1001,6 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
     the index sidecar (the read_dsir_counts contract); independently, one
     sample row's signature length is checked against the sidecar's
     num_hashes (catches the most common mismatch even without params)."""
-    import json
-    import os
-
     with open(os.path.join(path, "_LSH_INDEX.json")) as f:
         meta = json.load(f)
     if signatures is not None:
@@ -1026,26 +1024,14 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
                      signatures=signatures)
     nb = cached(nb)
     shards = sorted(r["_shard"] for r in nb.select("_shard").distinct().collect())
-    try:
-        idx = spark.read.parquet(os.path.join(path, "bands")) \
-            .where(F.col("_shard").isin(shards))
-        if exclude_batches:
-            idx = idx.where(~F.col("batch").isin(list(exclude_batches)))
-    except AnalysisException as e:
-        # ONLY the bootstrap case is recoverable: an index built over an
-        # EMPTY frame (the streaming-ingest pattern) has no parquet footers
-        # yet, so schema inference fails. Shape the empty side from the
-        # batch's own banded frame so the id type matches the caller's id
-        # column. Any other read failure (permissions, corrupt footers,
-        # transient FS errors) must surface — silently treating it as
-        # "empty corpus" would skip dedup for the batch.
-        msg = str(e)
-        if ("UNABLE_TO_INFER_SCHEMA" not in msg
-                and "PATH_NOT_FOUND" not in msg
-                and "Unable to infer schema" not in msg
-                and "Path does not exist" not in msg):
-            raise
-        idx = nb.select("id", "band", "bucket", "_shard").limit(0)
+    # an index built over an EMPTY frame (the streaming-ingest pattern) has
+    # no batch to read yet: its empty side takes the batch's own banded
+    # shape, so the id type matches the caller's id column
+    idx = read_batches(spark, os.path.join(path, "bands"),
+                       nb.withColumn("batch", F.lit(0))) \
+        .where(F.col("_shard").isin(shards))
+    if exclude_batches:
+        idx = idx.where(~F.col("batch").isin(list(exclude_batches)))
     if max_bucket is not None:
         # skew guard on the INDEX side: drop ultra-hot (band, bucket)
         # groups before the join (same rationale as minhash_lsh_candidates)
@@ -1083,18 +1069,11 @@ def stream_lsh_index(stream: DataFrame, path: str, id_col: str,
     at batch 0), pass ``batch_id_base=1`` — stream micro-batch ids start
     at 0 and would silently overwrite ``batch=0`` (the stream_ivf_index
     clobber trap)."""
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        append_lsh_index(batch.sparkSession, path, batch, id_col, text_col,
-                         batch_id=batch_id_base + batch_id)
-
-    writer = stream.writeStream.foreachBatch(write_batch) \
-        .outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_batches(
+        stream,
+        lambda sp, b, bid: append_lsh_index(sp, path, b, id_col, text_col,
+                                            batch_id=bid),
+        checkpoint, available_now, batch_id_base)
 
 
 def exact_dedup_incremental(spark, registry_path: str, new_docs: DataFrame,
@@ -1155,27 +1134,17 @@ def build_simhash_index(df: DataFrame, id_col: str, text_col: str,
     a band; probing a new batch is a shard-pruned equi-join plus an exact
     bit_count filter. Same batch=<id>/ overwrite layout as the LSH index
     (replay-idempotent); same JSON sidecar pattern."""
-    import json
-    import os
-
     sig = df.select(F.col(id_col).alias("id"),
                     simhash64(F.col(text_col), portable=portable).alias("sig"))
-    banded = sig.select("id", "sig", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("sig"), b * 16)
-                 .bitwiseAND(F.lit(0xFFFF)).alias("bits"))
-        for b in range(4)])).alias("bb")) \
+    banded = sig.select("id", "sig",
+                        F.explode(_simhash_bands(F.col("sig"))).alias("bb")) \
         .select("id", "sig", F.col("bb.band").alias("band"),
                 F.col("bb.bits").alias("bits"),
                 F.pmod("bb.bits", F.lit(n_shards)).alias("_shard"))
-    banded.write.mode("overwrite").partitionBy("_shard") \
-        .parquet(os.path.join(path, "bands", f"batch={batch_id}"))
+    write_batch(banded, os.path.join(path, "bands"), batch_id, "_shard")
     meta = {"portable": portable, "n_shards": n_shards}
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, "_SIMHASH_INDEX.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_SIMHASH_INDEX.json"))
+    write_atomic(os.path.join(path, "_SIMHASH_INDEX.json"), json.dumps(meta))
     return meta
 
 
@@ -1200,9 +1169,6 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
     (mirrors ``lsh_dedup_incremental``); ``append_batch_id`` is ALWAYS
     self-excluded, so an at-least-once replay that already registered this
     batch cannot pair its docs against their prior selves."""
-    import json
-    import os
-
     with open(os.path.join(path, "_SIMHASH_INDEX.json")) as f:
         meta = json.load(f)
     excluded = set(exclude_batches or [])
@@ -1211,17 +1177,19 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
     sig = new_docs.select(
         F.col(id_col).alias("nid"),
         simhash64(F.col(text_col), portable=meta["portable"]).alias("nsig"))
-    nb = sig.select("nid", "nsig", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned(F.col("nsig"), b * 16)
-                 .bitwiseAND(F.lit(0xFFFF)).alias("bits"))
-        for b in range(4)])).alias("bb")) \
+    nb = sig.select("nid", "nsig",
+                    F.explode(_simhash_bands(F.col("nsig"))).alias("bb")) \
         .select("nid", "nsig", F.col("bb.band").alias("band"),
                 F.col("bb.bits").alias("bits"),
                 F.pmod("bb.bits", F.lit(meta["n_shards"])).alias("_shard"))
     nb = cached(nb)
     shards = sorted(r["_shard"] for r in nb.select("_shard").distinct().collect())
-    idx = spark.read.parquet(os.path.join(path, "bands")) \
+    # bootstrap (an index built over an empty frame): the empty side takes
+    # the batch's own banded shape, as in lsh_dedup_incremental
+    idx = read_batches(spark, os.path.join(path, "bands"),
+                       nb.select(F.col("nid").alias("id"),
+                                 F.col("nsig").alias("sig"), "band", "bits",
+                                 "_shard", F.lit(0).alias("batch"))) \
         .where(F.col("_shard").isin(shards))
     if excluded:
         idx = idx.where(~F.col("batch").isin(sorted(excluded)))
@@ -1251,10 +1219,9 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
                   .where(F.col("hamming") <= max_hamming).distinct())
         out = cross.unionByName(within).distinct()
     if append_batch_id is not None:
-        nb.withColumnRenamed("nid", "id").withColumnRenamed("nsig", "sig") \
-            .write.mode("overwrite").partitionBy("_shard") \
-            .parquet(os.path.join(path, "bands",
-                                  f"batch={append_batch_id}"))
+        write_batch(nb.withColumnRenamed("nid", "id")
+                    .withColumnRenamed("nsig", "sig"),
+                    os.path.join(path, "bands"), append_batch_id, "_shard")
     return out
 
 
@@ -1314,16 +1281,10 @@ def compact_lsh_index(spark, path: str, upto_batch: int) -> dict:
     are ``distinct``-collapsed, so even the crash window's transient
     duplication is correctness-neutral. Run only for batches below the
     stream's replay frontier."""
-    from ..sources.layout import compact_batch_dirs
-    import os as _os
-    return compact_batch_dirs(spark, _os.path.join(path, "bands"),
-                              upto_batch)
+    return compact_batch_dirs(spark, os.path.join(path, "bands"), upto_batch)
 
 
 def compact_simhash_index(spark, path: str, upto_batch: int) -> dict:
     """SimHash-index counterpart of :func:`compact_lsh_index` (identical
     ``bands/batch=<id>/_shard=<s>`` layout)."""
-    from ..sources.layout import compact_batch_dirs
-    import os as _os
-    return compact_batch_dirs(spark, _os.path.join(path, "bands"),
-                              upto_batch)
+    return compact_batch_dirs(spark, os.path.join(path, "bands"), upto_batch)

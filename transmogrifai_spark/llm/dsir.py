@@ -154,12 +154,12 @@ def _write_dsir_meta(path: str, n_buckets: int, max_n: int,
                      portable: bool) -> None:
     import json
     import os
+
+    from ..sources.layout import write_atomic
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, "_DSIR_COUNTS.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"n_buckets": n_buckets, "max_n": max_n,
-                   "portable": portable}, f)
-    os.replace(tmp, os.path.join(path, "_DSIR_COUNTS.json"))
+    write_atomic(os.path.join(path, "_DSIR_COUNTS.json"),
+                 json.dumps({"n_buckets": n_buckets, "max_n": max_n,
+                             "portable": portable}))
 
 
 def read_dsir_counts(spark, path: str, n_buckets: int | None = None,

@@ -36,12 +36,13 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokenize
+from ..sources.layout import (merge_batches, read_batches, stream_batches,
+                              write_atomic, write_batch)
 from ..util import cached, ensure_parallelism
 
 
@@ -166,15 +167,11 @@ def build_bm25_index(docs: DataFrame, id_col: str, text_col: str, path: str,
     sidecar; per-batch stats sidecars keep N/avgdl exact across appends."""
     post = bm25_postings(docs, id_col, text_col).withColumn(
         "_shard", F.pmod(F.xxhash64("term"), F.lit(n_shards)))
-    post.write.mode("overwrite").partitionBy("_shard") \
-        .parquet(os.path.join(path, "postings", f"batch={batch_id}"))
+    write_batch(post, os.path.join(path, "postings"), batch_id, "_shard")
     n_docs, total_len = _corpus_stats(docs, text_col)
     os.makedirs(os.path.join(path, "stats"), exist_ok=True)
     meta = {"n_shards": n_shards}
-    tmp = os.path.join(path, "_BM25_INDEX.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_BM25_INDEX.json"))
+    write_atomic(os.path.join(path, "_BM25_INDEX.json"), json.dumps(meta))
     _write_stats(path, batch_id, n_docs, total_len)
     return meta
 
@@ -184,10 +181,8 @@ def _write_stats(path: str, batch_id: int, n_docs: int, total_len: int,
     payload = {"n_docs": n_docs, "total_len": total_len}
     if covers:
         payload["covers"] = sorted(covers)
-    tmp = os.path.join(path, "stats", f"batch_{batch_id}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, os.path.join(path, "stats", f"batch_{batch_id}.json"))
+    write_atomic(os.path.join(path, "stats", f"batch_{batch_id}.json"),
+                 json.dumps(payload))
 
 
 def _load_stats(path: str) -> tuple[int, int, list[int]]:
@@ -225,8 +220,7 @@ def append_bm25_index(spark, path: str, docs: DataFrame, id_col: str,
         meta = json.load(f)
     post = bm25_postings(docs, id_col, text_col).withColumn(
         "_shard", F.pmod(F.xxhash64("term"), F.lit(meta["n_shards"])))
-    post.write.mode("overwrite").partitionBy("_shard") \
-        .parquet(os.path.join(path, "postings", f"batch={batch_id}"))
+    write_batch(post, os.path.join(path, "postings"), batch_id, "_shard")
     n_docs, total_len = _corpus_stats(docs, text_col)
     _write_stats(path, batch_id, n_docs, total_len)
 
@@ -249,18 +243,11 @@ def stream_bm25_index(stream: DataFrame, path: str, id_col: str,
     at 0 and would overwrite the bootstrap's ``batch=0`` directory (both
     writers are replay-idempotent overwriters by design — the
     stream_ivf_index clobber trap)."""
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        append_bm25_index(batch.sparkSession, path, batch, id_col, text_col,
-                          batch_id=batch_id_base + batch_id)
-
-    writer = stream.writeStream.foreachBatch(write_batch) \
-        .outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_batches(
+        stream,
+        lambda sp, b, bid: append_bm25_index(sp, path, b, id_col, text_col,
+                                             batch_id=bid),
+        checkpoint, available_now, batch_id_base)
 
 
 def bm25_topk_indexed(spark, path: str, queries: DataFrame, qid_col: str,
@@ -280,23 +267,13 @@ def bm25_topk_indexed(spark, path: str, queries: DataFrame, qid_col: str,
     qt = _query_terms(queries, qid_col, qtext_col).withColumn(
         "_shard", F.pmod(F.xxhash64("term"), F.lit(meta["n_shards"])))
     shards = sorted(r["_shard"] for r in qt.select("_shard").distinct().collect())
-    try:
-        post = spark.read.parquet(os.path.join(path, "postings")) \
-            .where(F.col("_shard").isin(shards)) \
-            .where(F.col("batch").isin(live))
-    except AnalysisException as e:
-        # ONLY the bootstrap case (index built over an EMPTY frame — no
-        # parquet footers yet) is recoverable; anything else must surface
-        # (the lsh_dedup_incremental guard)
-        msg = str(e)
-        if ("UNABLE_TO_INFER_SCHEMA" not in msg
-                and "PATH_NOT_FOUND" not in msg
-                and "Unable to infer schema" not in msg
-                and "Path does not exist" not in msg):
-            raise
-        post = spark.createDataFrame(
+    post = read_batches(
+        spark, os.path.join(path, "postings"),
+        spark.createDataFrame(
             [], "term string, doc_id long, dl int, tf long, _shard int, "
-                "batch int")
+                "batch int")) \
+        .where(F.col("_shard").isin(shards)) \
+        .where(F.col("batch").isin(live))
     # df from the pruned read itself: every batch of a probed shard is
     # present, so the count is the exact corpus-wide document frequency
     dfreq = (post.join(F.broadcast(qt.select("term").distinct()), "term")
@@ -319,9 +296,10 @@ def compact_bm25_index(spark, path: str, upto_batch: int) -> dict:
     flavor of sources/layout.compact_batch_dirs, with an exactly-consistent
     switchover:
 
-      1. consolidated postings are written to a staging dot-dir and renamed
-         to ``postings/batch=<cid>`` — INVISIBLE to probes, which only read
-         batches with a live stats sidecar;
+      1. consolidated postings are written to ``postings/batch=<cid>``
+         (``sources/layout.merge_batches``: a staging dot-dir, then a
+         rename) — INVISIBLE to probes, which only read batches with a live
+         stats sidecar;
       2. the ``batch_<cid>.json`` sidecar lands with one atomic rename,
          carrying the merged N/total_len and a ``covers`` list of the
          replaced batch ids — in that single step probes switch from the
@@ -332,7 +310,6 @@ def compact_bm25_index(spark, path: str, upto_batch: int) -> dict:
          a crash here just leaves garbage for the next compaction).
     """
     import shutil
-    import uuid
 
     root = os.path.join(path, "postings")
     _, _, live = _load_stats(path)
@@ -350,16 +327,7 @@ def compact_bm25_index(spark, path: str, upto_batch: int) -> dict:
         total_len += s["total_len"]
         covers.update(s.get("covers", []))
         covers.add(i)
-    all_ids = [int(d[len("batch="):]) for d in os.listdir(root)
-               if d.startswith("batch=")]
-    cid = min([0] + all_ids) - 1
-    src = (spark.read.option("basePath", root)
-           .parquet(*[os.path.join(root, f"batch={i}") for i in merge])
-           .drop("batch"))
-    staging = os.path.join(root, f".compact-{uuid.uuid4().hex[:8]}")
-    (src.repartition(F.col("_shard"))
-        .write.mode("overwrite").partitionBy("_shard").parquet(staging))
-    os.rename(staging, os.path.join(root, f"batch={cid}"))
+    cid = merge_batches(spark, root, merge, "_shard")
     _write_stats(path, cid, n_docs, total_len, covers=sorted(covers))
     for i in merge:
         shutil.rmtree(os.path.join(root, f"batch={i}"), ignore_errors=True)

@@ -20,10 +20,15 @@ Physical notes:
 """
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.layout import (compact_batch_dirs, read_batches,
+                              stream_batches, write_atomic, write_batch)
 from ..util import bind_sql, cache_scope, cached, ensure_parallelism, vec_sql
 
 
@@ -922,23 +927,16 @@ def build_ivf_index(corpus: DataFrame, id_col: str, vec_col: str, path: str,
     reads only its probed cells from storage — at 100 TB the scan itself
     shrinks to ~n_probe/n_lists of the corpus via directory-level
     partition pruning, not just the join. Returns the index metadata."""
-    import json
-    import os
-
     assigned, centroids = ivf_assignments(corpus, id_col, vec_col, n_lists,
                                           seed, max_iter, fit_sample,
                                           centroids)
     # batch=0 subdir so append_ivf_index batches nest as sibling partitions
     # (readers discover batch + _cell partition columns; _cell pruning is
     # unaffected, batch is ignored)
-    assigned.write.mode("overwrite").partitionBy("_cell") \
-        .parquet(os.path.join(path, "cells", "batch=0"))
+    write_batch(assigned, os.path.join(path, "cells"), 0, "_cell")
     meta = {"centroids": centroids, "n_lists": n_lists, "seed": seed,
             "id_col": id_col, "vec_col": vec_col}
-    tmp = os.path.join(path, "_INDEX.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_INDEX.json"))
+    write_atomic(os.path.join(path, "_INDEX.json"), json.dumps(meta))
     return meta
 
 
@@ -951,9 +949,6 @@ def append_ivf_index(spark, path: str, new_vectors: DataFrame,
     (overwrite — replay-idempotent, the same guard as the LSH index and
     stream_rollup_partials). The standard IVF ingest path: centroids
     drift-check / refit is a periodic offline job, not per batch."""
-    import json
-    import os
-
     with open(os.path.join(path, "_INDEX.json")) as f:
         meta = json.load(f)
     assigned = new_vectors.select(
@@ -961,29 +956,7 @@ def append_ivf_index(spark, path: str, new_vectors: DataFrame,
         F.col(meta["vec_col"]).alias("_cv")) \
         .withColumn("_cell", _probe_cells(F.col("_cv"), meta["centroids"],
                                           1)[0])
-    assigned.write.mode("overwrite").partitionBy("_cell") \
-        .parquet(os.path.join(path, "cells", f"batch={batch_id}"))
-
-
-def _read_index_or_empty(spark, cells_path: str, empty_shape: DataFrame):
-    """Read an index's ``cells/`` tree; ONLY the bootstrap case — an
-    index whose quantizer sidecar exists but no vector batch has landed
-    yet (the streaming-ingest pattern), so there are no parquet footers
-    — is recoverable, shaped as an empty frame from ``empty_shape``.
-    Any other read failure must surface (the lsh_dedup_incremental
-    guard)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return spark.read.parquet(cells_path)
-    except AnalysisException as e:
-        msg = str(e)
-        if ("UNABLE_TO_INFER_SCHEMA" not in msg
-                and "PATH_NOT_FOUND" not in msg
-                and "Unable to infer schema" not in msg
-                and "Path does not exist" not in msg):
-            raise
-        return empty_shape.limit(0)
+    write_batch(assigned, os.path.join(path, "cells"), batch_id, "_cell")
 
 
 def ivf_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
@@ -992,12 +965,9 @@ def ivf_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
     partition-column predicate, so only `_cell=N/` directories the query
     batch needs are read (verify with .inputFiles()); scoring/top-k is the
     same bucket equi-join + per-query window as the in-memory form."""
-    import json
-    import os
-
     with open(os.path.join(path, "_INDEX.json")) as f:
         meta = json.load(f)
-    assigned = _read_index_or_empty(
+    assigned = read_batches(
         spark, os.path.join(path, "cells"),
         queries.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("_cv"),
@@ -1043,9 +1013,6 @@ def compact_ivf_index(spark, path: str, upto_batch: int) -> dict:
     transient duplicate rows before ranking, so the rename/delete order
     is correctness-neutral. Run only for batches below any replaying
     stream's frontier."""
-    import os
-
-    from ..sources.layout import compact_batch_dirs
     return compact_batch_dirs(spark, os.path.join(path, "cells"),
                               upto_batch, shard_col="_cell")
 
@@ -1069,21 +1036,14 @@ def build_ivfpq_index(corpus: DataFrame, id_col: str, vec_col: str,
     every fit; otherwise the KMeans fits run on ``fit_sample``.
     Same batch layout as the IVF index (``cells/batch=0``), so
     ``append_ivfpq_index`` / ``compact_ivfpq_index`` nest identically."""
-    import json
-    import os
-
     encoded, model = pq_encode(corpus, id_col, vec_col, dim, n_lists, m,
                                k_codes, seed, max_iter, fit_sample,
                                model=model)
-    encoded.write.mode("overwrite").partitionBy("_cell") \
-        .parquet(os.path.join(path, "cells", "batch=0"))
+    write_batch(encoded, os.path.join(path, "cells"), 0, "_cell")
     meta = {"centroids": model["centroids"],
             "codebooks": model["codebooks"], "dim": dim, "m": m,
             "k_codes": k_codes, "id_col": id_col, "vec_col": vec_col}
-    tmp = os.path.join(path, "_IVFPQ_INDEX.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_IVFPQ_INDEX.json"))
+    write_atomic(os.path.join(path, "_IVFPQ_INDEX.json"), json.dumps(meta))
     return meta
 
 
@@ -1095,9 +1055,6 @@ def append_ivfpq_index(spark, path: str, new_vectors: DataFrame,
     (overwrite — replay-idempotent, the LSH/IVF-index guard). Periodic
     codebook refit on drifted corpora is an offline rebuild, not an
     append concern — the standard IVF-PQ ingest split."""
-    import json
-    import os
-
     with open(os.path.join(path, "_IVFPQ_INDEX.json")) as f:
         meta = json.load(f)
     encoded, _ = pq_encode(new_vectors, meta["id_col"], meta["vec_col"],
@@ -1105,8 +1062,7 @@ def append_ivfpq_index(spark, path: str, new_vectors: DataFrame,
                            k_codes=meta["k_codes"],
                            model={"centroids": meta["centroids"],
                                   "codebooks": meta["codebooks"]})
-    encoded.write.mode("overwrite").partitionBy("_cell") \
-        .parquet(os.path.join(path, "cells", f"batch={batch_id}"))
+    write_batch(encoded, os.path.join(path, "cells"), batch_id, "_cell")
 
 
 def ivfpq_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
@@ -1122,13 +1078,10 @@ def ivfpq_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
     for compaction's crash window matches ivf_topk_indexed: duplicates
     tie on (cosine, neighbor_id), so a lag() over the SAME rank window
     drops them with no extra Exchange."""
-    import json
-    import os
-
     with open(os.path.join(path, "_IVFPQ_INDEX.json")) as f:
         meta = json.load(f)
     model = {"centroids": meta["centroids"], "codebooks": meta["codebooks"]}
-    enc = _read_index_or_empty(
+    enc = read_batches(
         spark, os.path.join(path, "cells"),
         queries.select(F.col(id_col).alias("neighbor_id"),
                        F.array().cast("array<int>").alias("_codes"),
@@ -1170,26 +1123,8 @@ def compact_ivfpq_index(spark, path: str, upto_batch: int) -> dict:
     """Merge ``cells/batch=<id>`` subdirectories of an IVF-PQ index (same
     layout and crash-window story as compact_ivf_index; the query tier's
     lag() collapse makes the rename/delete order correctness-neutral)."""
-    import os
-
-    from ..sources.layout import compact_batch_dirs
     return compact_batch_dirs(spark, os.path.join(path, "cells"),
                               upto_batch, shard_col="_cell")
-
-
-def _stream_index_writer(stream: DataFrame, append_fn,
-                         checkpoint: str | None, available_now: bool,
-                         batch_id_base: int):
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        append_fn(batch.sparkSession, batch, batch_id_base + batch_id)
-
-    writer = stream.writeStream.foreachBatch(write_batch) \
-        .outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ivf_index(stream: DataFrame, path: str,
@@ -1209,7 +1144,7 @@ def stream_ivf_index(stream: DataFrame, path: str,
     them so the first micro-batch does NOT overwrite the bootstrap
     build's ``batch=0`` data (a real clobber trap: both writers are
     replay-idempotent overwriters by design)."""
-    return _stream_index_writer(
+    return stream_batches(
         stream,
         lambda sp, b, bid: append_ivf_index(sp, path, b, batch_id=bid),
         checkpoint, available_now, batch_id_base)
@@ -1227,7 +1162,7 @@ def stream_ivfpq_index(stream: DataFrame, path: str,
     failing), which is the pure-streaming ingest shape. As with
     stream_ivf_index, ``batch_id_base`` (default 1) keeps micro-batch 0
     from overwriting a non-empty bootstrap ``batch=0``."""
-    return _stream_index_writer(
+    return stream_batches(
         stream,
         lambda sp, b, bid: append_ivfpq_index(sp, path, b, batch_id=bid),
         checkpoint, available_now, batch_id_base)

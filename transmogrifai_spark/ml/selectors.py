@@ -148,10 +148,14 @@ def _resolve_auto_layers(name: str, params: dict, df: DataFrame,
     return {**params, "layers": [dim, max(2, dim // 2), n_classes]}
 
 
-def _make_classifier(name: str, params: dict, features_col: str, label_col: str):
+def _fit_classifier(name: str, params: dict, df: DataFrame, features_col: str,
+                    label_col: str, n_classes: int = 2):
+    """Fit candidate ``name`` on ``df``: the one classifier fit of every
+    selector, so an MLP's ``layers="auto"`` is resolved on each path."""
     import pyspark.ml.classification as C
-    cls = getattr(C, name)
-    return cls(featuresCol=features_col, labelCol=label_col, **params)
+    p = _resolve_auto_layers(name, params, df, features_col, n_classes)
+    return getattr(C, name)(featuresCol=features_col, labelCol=label_col,
+                            **p).fit(df)
 
 
 def _binary_score_col(pred_df: DataFrame) -> DataFrame:
@@ -183,8 +187,8 @@ def select_binary_model(df: DataFrame, features_col: str, label_col: str,
             fold_metrics = []
             for train, valid in folds:
                 t = prepare(train) if prepare else train
-                p = _resolve_auto_layers(name, params, t, features_col)
-                model = _make_classifier(name, p, features_col, label_col).fit(t)
+                model = _fit_classifier(name, params, t, features_col,
+                                        label_col)
                 preds = _binary_score_col(model.transform(valid))
                 fold_metrics.append(auroc(preds, "score", label_col))
             m = sum(fold_metrics) / len(fold_metrics)
@@ -192,9 +196,8 @@ def select_binary_model(df: DataFrame, features_col: str, label_col: str,
         leaderboard.sort(key=lambda c: (-c.metric, c.name))
         best = leaderboard[0]
         full = prepare(df) if prepare else df
-        fitted = _make_classifier(
-            best.name, _resolve_auto_layers(best.name, best.params, full, features_col),
-            features_col, label_col).fit(full)
+        fitted = _fit_classifier(best.name, best.params, full, features_col,
+                                 label_col)
     return SelectedModel(best.name, best.params, best.metric,
                          leaderboard, fitted)
 
@@ -257,19 +260,16 @@ def select_multiclass_model(df: DataFrame, features_col: str, label_col: str,
         for name, params in candidates:
             fold_metrics = []
             for train, valid in folds:
-                p = _resolve_auto_layers(name, params, train, features_col,
-                                         n_classes or 2)
-                model = _make_classifier(name, p, features_col, label_col).fit(train)
+                model = _fit_classifier(name, params, train, features_col,
+                                        label_col, n_classes or 2)
                 preds = model.transform(valid)
                 fold_metrics.append(multiclass_metrics(preds, "prediction", label_col)["accuracy"])
             m = sum(fold_metrics) / len(fold_metrics)
             leaderboard.append(CandidateResult(name, params, m, fold_metrics))
         leaderboard.sort(key=lambda c: (-c.metric, c.name))
         best = leaderboard[0]
-        fitted = _make_classifier(
-            best.name, _resolve_auto_layers(best.name, best.params, df, features_col,
-                                            n_classes or 2),
-            features_col, label_col).fit(df)
+        fitted = _fit_classifier(best.name, best.params, df, features_col,
+                                 label_col, n_classes or 2)
     return SelectedModel(best.name, best.params, best.metric, leaderboard, fitted)
 
 
@@ -324,7 +324,8 @@ def combine_top_models(selected: SelectedModel, df: DataFrame, features_col: str
     scored = None
     taken = 0
     for cand in selected.leaderboard[:top_n]:
-        model = _make_classifier(cand.name, cand.params, features_col, label_col).fit(df)
+        model = _fit_classifier(cand.name, cand.params, df, features_col,
+                                label_col)
         preds = _binary_score_col(model.transform(df)).select(
             F.col(key_col), F.col("score").alias(f"_s{taken}"))
         scored = preds if scored is None else scored.join(preds, key_col)
@@ -356,12 +357,14 @@ def train_validation_split_select(df: DataFrame, features_col: str, label_col: s
         train = cached(train)
         leaderboard = []
         for name, params in candidates:
-            model = _make_classifier(name, params, features_col, label_col).fit(train)
+            model = _fit_classifier(name, params, train, features_col,
+                                    label_col)
             preds = _binary_score_col(model.transform(valid))
             leaderboard.append(CandidateResult(name, params, auroc(preds, "score", label_col), []))
         leaderboard.sort(key=lambda c: (-c.metric, c.name))
         best = leaderboard[0]
-        fitted = _make_classifier(best.name, best.params, features_col, label_col).fit(df)
+        fitted = _fit_classifier(best.name, best.params, df, features_col,
+                                 label_col)
     return SelectedModel(best.name, best.params, best.metric, leaderboard, fitted)
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..util import cache_scope, cached
+from .layout import write_atomic
 
 _MANIFEST = "_MANIFEST.json"
 
@@ -114,11 +115,7 @@ class CowSnapshot:
         return m
 
     def _commit(self, manifest: dict) -> None:
-        p = os.path.join(self.path, _MANIFEST)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, p)  # atomic: readers see old or new manifest
+        write_atomic(os.path.join(self.path, _MANIFEST), json.dumps(manifest))
 
     # -- read --------------------------------------------------------------
     def _bucket_paths(self, manifest: dict,

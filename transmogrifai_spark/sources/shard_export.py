@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..llm.curation import hash_bucket
+from .layout import write_atomic
 
 MANIFEST = "_shard_manifest.json"
 
@@ -91,10 +92,8 @@ def export_shards(df: DataFrame, id_col: str, path: str, n_shards: int,
             "max_rank": r["max_rank"],
         } for r in sorted(stats, key=lambda r: r["_shard"])},
     }
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MANIFEST))  # atomic pointer swap
+    write_atomic(os.path.join(path, MANIFEST),
+                 json.dumps(manifest, indent=2, sort_keys=True))
     return manifest
 
 

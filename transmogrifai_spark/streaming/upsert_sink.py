@@ -28,6 +28,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.layout import write_atomic
 from ..sources.upsert import apply_changes
 
 _POINTER = "_CURRENT.json"
@@ -42,11 +43,7 @@ def _read_pointer(snapshot_dir: str) -> dict:
 
 
 def _write_pointer(snapshot_dir: str, meta: dict) -> None:
-    p = os.path.join(snapshot_dir, _POINTER)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, p)  # atomic swap — readers see old or new, never half
+    write_atomic(os.path.join(snapshot_dir, _POINTER), json.dumps(meta))
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
