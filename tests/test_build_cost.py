@@ -7,7 +7,8 @@ builders parse their body from one SQL text instead (``util.bind_sql``);
 the tests count the py4j commands one build sends and pin each under a
 small bound, so a later edit that goes back to node-by-node construction
 fails here loudly. Node-by-node counts, for scale: ``plane_bits`` at 32
-planes ~5,500, ``wordpiece_tokenize_df`` ~2,800, ``gopher_rules`` ~2,600.
+planes ~5,500, ``wordpiece_tokenize_df`` ~2,800, ``gopher_rules`` ~2,600,
+``snowball_stem`` for ru ~56,500.
 """
 import contextlib
 import threading
@@ -72,3 +73,14 @@ def test_gopher_rules_build_cost(spark):
     with py4j_commands(spark) as sent:
         gopher_rules(F.col("text"))
     assert sent[0] <= 100, sent[0]
+
+
+def test_snowball_stem_build_cost(spark):
+    from transmogrifai_spark.functions.snowball import snowball_stem
+    with py4j_commands(spark) as sent:
+        stem = snowball_stem(F.col("w"), "ru")
+    assert sent[0] <= 600, sent[0]
+    words = spark.createDataFrame([("книгами",), ("возможность",)],
+                                  "w string")
+    assert [r["s"] for r in words.select(stem.alias("s")).collect()] == \
+        ["книг", "возможн"]

@@ -236,6 +236,26 @@ def test_stream_dsir_counts_batch_id_base_protects_bootstrap(
         sorted(map(tuple, oneshot.collect()))
 
 
+def test_read_dsir_counts_rejects_other_bucket_count(spark, tmp_path):
+    """Counts read with another ``n_buckets`` than the store was built
+    with would align buckets by id without an error: the sidecar check
+    raises, naming the field."""
+    from transmogrifai_spark.llm.dsir import (read_dsir_counts,
+                                              stream_dsir_counts)
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "the cat sat on the mat")], schema) \
+        .write.parquet(src)
+    store = str(tmp_path / "counts")
+    stream_dsir_counts(spark.readStream.schema(schema).parquet(src), store,
+                       "text", n_buckets=B, portable=True,
+                       checkpoint=str(tmp_path / "ck")).awaitTermination()
+    assert read_dsir_counts(spark, store, n_buckets=B,
+                            portable=True).count() > 0
+    with pytest.raises(ValueError, match="n_buckets"):
+        read_dsir_counts(spark, store, n_buckets=2 * B)
+
+
 def test_table_from_counts_merges_guards_and_tolerates_nulls(spark, corpora):
     """r13 (VERDICT r12 #7): dsir_table_from_counts aggregates its inputs
     to one row per bucket BEFORE the driver snapshot (so an unaggregated

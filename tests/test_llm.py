@@ -1086,6 +1086,27 @@ def test_lsh_shared_signatures_equal_recompute(spark, sf_dir, tmp_path):
         sigs.unpersist()
 
 
+def test_lsh_probe_rejects_signatures_of_another_family(spark, tmp_path):
+    """Precomputed signatures whose ``signature_params`` differ from the
+    index sidecar raise, naming the field, even when the signature width
+    matches: a mismatched hash family would miss duplicates silently."""
+    from transmogrifai_spark.llm.dedup import (build_lsh_index,
+                                               lsh_dedup_incremental,
+                                               minhash_signatures)
+    docs = spark.createDataFrame([(1, "the quick brown fox"),
+                                  (2, "the quick brown fox jumps")],
+                                 "doc_id long, text string")
+    p = str(tmp_path / "lsh")
+    build_lsh_index(docs, "doc_id", "text", p, num_hashes=16, bands=4,
+                    n_shards=4)
+    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=16,
+                              portable=True)
+    with pytest.raises(ValueError, match="portable"):
+        lsh_dedup_incremental(
+            spark, p, docs, "doc_id", "text", signatures=sigs,
+            signature_params={"n": 3, "num_hashes": 16, "portable": True})
+
+
 def test_lsh_index_query_prunes_shard_directories(spark, sf_dir, tmp_path):
     """Files-read law: a small batch's index probe is a partition-column
     predicate — only the batch's shard directories are touched."""

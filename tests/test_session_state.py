@@ -282,10 +282,11 @@ def _in_write_chain(node):
 def _index_storage_sites(pkg):
     """(file, line, what) outside ``sources/layout.py`` for every
     ``os.replace`` call, every string literal naming
-    ``UNABLE_TO_INFER_SCHEMA`` and, under ``llm/``, every
+    ``UNABLE_TO_INFER_SCHEMA``, every ``json.load`` call in a module that
+    writes through ``write_atomic`` and, under ``llm/``, every
     ``.write…partitionBy(`` chain (ARCHITECTURE rule 10: the atomic
-    sidecar write, the bootstrap read and the batch directory are
-    layout.py's)."""
+    sidecar write and its read, the bootstrap read and the batch
+    directory are layout.py's)."""
     hits = []
     for root, _, files in os.walk(pkg):
         for name in files:
@@ -296,7 +297,11 @@ def _index_storage_sites(pkg):
             if rel == os.path.join("sources", "layout.py"):
                 continue
             in_llm = rel.startswith("llm" + os.sep)
-            for node in ast.walk(ast.parse(open(path).read(), path)):
+            tree = ast.parse(open(path).read(), path)
+            writes_sidecars = any(
+                isinstance(n, ast.Name) and n.id == "write_atomic"
+                for n in ast.walk(tree))
+            for node in ast.walk(tree):
                 if (isinstance(node, ast.Constant)
                         and isinstance(node.value, str)
                         and "UNABLE_TO_INFER_SCHEMA" in node.value):
@@ -308,6 +313,10 @@ def _index_storage_sites(pkg):
                 if (f.attr == "replace" and isinstance(f.value, ast.Name)
                         and f.value.id == "os"):
                     hits.append((rel, node.lineno, "os.replace"))
+                if (writes_sidecars and f.attr == "load"
+                        and isinstance(f.value, ast.Name)
+                        and f.value.id == "json"):
+                    hits.append((rel, node.lineno, "json.load"))
                 if (in_llm and f.attr == "partitionBy"
                         and _in_write_chain(f.value)):
                     hits.append((rel, node.lineno, ".write.partitionBy"))
@@ -329,14 +338,21 @@ def test_index_storage_lint_catches_violations(tmp_path):
             "       .write.mode('overwrite').partitionBy('_s').parquet(p))\n"
             "def rank(df):\n"
             "    return Window.partitionBy('k')\n")
+    save = ("def save(p, meta):\n"
+            "    write_atomic(p, json.dumps(meta))\n")
+    load = ("def load(p):\n"
+            "    with open(p) as f:\n"
+            "        return json.load(f)\n")
     for d in ("sources", "llm"):
         (tmp_path / d).mkdir()
-    (tmp_path / "sources" / "layout.py").write_text(body)
+    (tmp_path / "sources" / "layout.py").write_text(body + save + load)
     (tmp_path / "sources" / "sink.py").write_text(body)
-    (tmp_path / "llm" / "index.py").write_text(body)
+    (tmp_path / "sources" / "model.py").write_text(load)
+    (tmp_path / "llm" / "index.py").write_text(body + save + load)
     assert sorted(_index_storage_sites(str(tmp_path))) == [
         (os.path.join("llm", "index.py"), 3, "os.replace"),
         (os.path.join("llm", "index.py"), 5, "UNABLE_TO_INFER_SCHEMA"),
         (os.path.join("llm", "index.py"), 7, ".write.partitionBy"),
+        (os.path.join("llm", "index.py"), 15, "json.load"),
         (os.path.join("sources", "sink.py"), 3, "os.replace"),
         (os.path.join("sources", "sink.py"), 5, "UNABLE_TO_INFER_SCHEMA")]

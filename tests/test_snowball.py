@@ -1,5 +1,6 @@
-"""Full Snowball stemmers de/fr/es (functions/snowball.py) — the four
-backends (Catalyst expressions, Spark-SQL steps, DuckDB SQL, Python) are generated from
+"""Full Snowball stemmers de/fr/es (functions/snowball.py) — the three
+backends (Spark-SQL steps, applied as step columns or as one Column;
+DuckDB SQL; Python) are generated from
 ONE spec by one interpreter; these tests pin the Python arm on known
 Snowball behavior and law-test Spark == Python and DuckDB == Python.
 

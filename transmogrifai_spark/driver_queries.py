@@ -869,13 +869,12 @@ def _sb_word_spark_sql(roots, tails):
 
 
 # stemmer step chains (snowball_spark_steps) are pure Python text —
-# built in milliseconds for all 13 languages, cached per process. r12:
-# this replaced the Column-tree build, whose 1-10 s of py4j round
-# trips per language were ~44 s of every gate round (the r11 VERDICT's
-# gate-budget finding); the step form parses as many SMALL F.expr
-# texts (linear ANTLR cost, bounded DFA retention — the one-big-parse
-# form measured ~300 MB retained for ru alone), same values by the
-# backend law tests
+# built in milliseconds for all 13 languages, cached per process, and
+# applied as withColumn projections: many SMALL F.expr parses (linear
+# ANTLR cost, bounded DFA retention — one big parse per language
+# measured ~300 MB retained for ru alone). snowball_stem renders the
+# same step texts as one Column; the gate keeps the step columns, whose
+# plan and driver memory are what it was sized on
 _SB_STEP_CACHE: dict = {}
 
 
@@ -928,10 +927,10 @@ def q_stopwords_ngrams(spark, sf_dir):
     sb_* (r10 de/fr/es/sv/no/da/ru/it/nl, r11 pt/ro/fi/hu): the FULL
     Snowball stemmers (functions/snowball.py — PARITY delta 1a arms)
     oracle-gated end-to-end: one morphology-rich word per doc and
-    language (roots x tails), stemmed by the Catalyst chain on the
-    Spark side and by CTE-per-step DuckDB SQL on the oracle side, BOTH
-    generated from the same rule tables by the same step interpreter
-    (snowball_sql_ctes) — prelude marking, R1/R2/RV arithmetic, every
+    language (roots x tails), stemmed by the Spark-SQL step chain on
+    the Spark side and by CTE-per-step DuckDB SQL on the oracle side,
+    BOTH generated from the same rule tables by the same step
+    interpreter (snowball_sql_ctes) — prelude marking, R1/R2/RV arithmetic, every
     suffix step, undoubling, un-accenting, postlude; r11 adds the pt
     nasal markers + residual rules, the ro unrolled combining step +
     verb guards, the fi guarded case amongs + tidy/undouble, and the
@@ -966,15 +965,13 @@ def q_stopwords_ngrams(spark, sf_dir):
     # STEP backend (r12) and evaluated INTERPRETED. Both choices are
     # about a stock 1g driver surviving the whole 50-query sweep AND
     # the r11 gate-budget finding (the sweep doubled to 75-90 s):
-    # (1) the step backend (snowball_spark_steps) assembles pure
-    # Python text in milliseconds and parses each step/chunk as a
-    # SMALL F.expr — neither the Column backend's 1-10 s of py4j
-    # round trips per language (~44 s of every gate round, measured)
-    # nor one big F.expr parse per language, whose ANTLR cost is
-    # superlinear and whose STATIC DFA cache is retained (40-70 MB per
-    # language, ~430 MB JVM-lifetime, measured r11 — a 1g gate sweep
-    # dies on it, and that backend was deleted; small chunked parses
-    # retain a bounded fraction).
+    # (1) the step texts (snowball_spark_steps) assemble as pure
+    # Python text in milliseconds and parse each step/chunk as a
+    # SMALL F.expr — never one big F.expr parse per language, whose
+    # ANTLR cost is superlinear and whose STATIC DFA cache is retained
+    # (40-70 MB per language, ~430 MB JVM-lifetime, measured r11 — a
+    # 1g gate sweep dies on it; small chunked parses retain a bounded
+    # fraction).
     # (2) NO_CODEGEN skips Janino entirely — at 500-5000 fixture rows
     # interpreted evaluation is instant and nothing lands in the
     # codegen cache.
@@ -996,8 +993,7 @@ def q_stopwords_ngrams(spark, sf_dir):
                              "spark.sql.codegen.wholeStage": "false"}):
         # the 13 per-language sub-jobs are independent tiny collects —
         # each builds its stemmer as a chain of SMALL parsed step
-        # expressions (snowball_spark_steps, r12: replaced the 1-10 s
-        # py4j Column build per language) applied as withColumn
+        # expressions (snowball_spark_steps) applied as withColumn
         # projections, then runs its snapshot job; threads overlap the
         # parse/analyze with evaluation across languages; order of the
         # local joins is pinned by the fixture list

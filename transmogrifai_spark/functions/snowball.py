@@ -1,6 +1,8 @@
 """Full Snowball stemmers (de fr es sv no da ru it nl pt ro fi hu)
-from ONE spec per language, interpreted by FOUR backends: Catalyst
-expressions, Spark-SQL step text, DuckDB SQL text, and plain Python.
+from ONE spec per language, interpreted by THREE backends: Spark-SQL
+step text, DuckDB SQL text, and plain Python. The Spark step texts are
+applied two ways: as step columns (``snowball_spark_steps``) and as one
+Column (``snowball_stem``).
 
 Reference: the per-language analyzer registry the reference routes
 text through (utils/src/main/scala/com/salesforce/op/utils/text/
@@ -19,11 +21,16 @@ Spark-first design notes (the 100 TB shape):
 - Pure expressions, zero UDFs: suffix steps are longest-first CASE
   chains; regions (R1/R2/RV) are two regexp skeleton rewrites + locate
   arithmetic computed ONCE per word.
-- Bind-once: each step binds its output (plus the region integers) as
-  a transform-lambda struct field before the next step references it —
-  naive chaining would re-inline every step into each reference and
-  grow the plan exponentially across the 8-13 stages (the engine-wide
-  rule porter.py states; SQL binds via CTE-per-step, Python is eager).
+- Bind-once: each step binds its output (plus the region integers)
+  before the next step references it — as a column, or as a
+  transform-lambda variable in the one-Column form — because naive
+  chaining would re-inline every step into each reference and grow the
+  plan exponentially across the 8-13 stages (the engine-wide rule
+  porter.py states; SQL binds via CTE-per-step, Python is eager).
+- Small parses: the step texts are parsed a step or a level of at most
+  ``_LEVEL_TEXT`` characters at a time, never as one big ``F.expr``
+  (ANTLR's cost and DFA-cache retention are superlinear in text size),
+  and never node by node over py4j (ARCHITECTURE rule 7).
 
 Documented micro-deltas vs the Snowball reference implementation (all
 three shared by every backend, so laws and oracles stay exact):
@@ -53,9 +60,11 @@ three shared by every backend, so laws and oracles stay exact):
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..util import bind_sql
 
 __all__ = ["snowball_stem", "snowball_stem_py", "snowball_sql_ctes",
            "SNOWBALL_LANGS"]
@@ -75,138 +84,6 @@ _DE_ST_END = "bdfghklmnt"     # valid st-endings (step 2)
 # backends
 
 
-class _SparkB:
-    """Values are Columns; bind packs live refs into a struct and
-    continues inside a transform lambda (the porter _bind trick, struct
-    form, so every step is evaluated once per row)."""
-
-    kind = "spark"
-
-    def lit(self, s):
-        return F.lit(s)
-
-    num = lit
-
-    def true(self):
-        return F.lit(True)
-
-    def when(self, c, a, b):
-        return F.when(c, a).otherwise(b)
-
-    def endswith(self, w, s):
-        return w.endswith(s)
-
-    def startswith(self, w, s):
-        return w.startswith(s)
-
-    def drop(self, w, n):
-        return w.substr(F.lit(1), F.length(w) - n)
-
-    def append(self, w, s):
-        return F.concat(w, F.lit(s))
-
-    def concat2(self, a, b):
-        return F.concat(a, b)
-
-    def length(self, w):
-        return F.length(w)
-
-    def add(self, a, b):
-        return a + b
-
-    def sub(self, a, b):
-        return a - b
-
-    def ge(self, a, b):
-        return a >= b
-
-    def gt(self, a, b):
-        return a > b
-
-    def eq(self, a, b):
-        return a == b
-
-    def eqs(self, a, b):
-        return a == b
-
-    def and_(self, *cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out & c
-        return out
-
-    def or_(self, *cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out | c
-        return out
-
-    def not_(self, c):
-        return ~c
-
-    def char_from_end(self, w, i):
-        # '' when the word is shorter than i (no such character)
-        return F.when(F.length(w) >= i,
-                      w.substr(F.length(w) - F.lit(i - 1), F.lit(1))) \
-            .otherwise(F.lit(""))
-
-    def take_char(self, w, i):
-        return w.substr(F.lit(i), F.lit(1))
-
-    def in_chars(self, ch, chars):
-        return ch.isin(list(chars))
-
-    def regex_replace(self, w, pat, repl):
-        return F.regexp_replace(w, pat, repl)     # global; $1 refs
-
-    def replace_all(self, w, a, b):
-        return F.regexp_replace(w, re.escape(a), b)
-
-    def locate_from(self, w, sub, start):
-        """Absolute 1-based position of ``sub`` at/after position
-        ``start`` (a Column), 0 if absent."""
-        tail = w.substr(start, F.length(w))
-        found = F.locate(sub, tail)
-        return F.when(found > 0, found + start - 1).otherwise(F.lit(0))
-
-    @staticmethod
-    def _pos(p):
-        return F.lit(p) if isinstance(p, int) else p
-
-    def char_at(self, w, pos):
-        """1-based char at an EXPRESSION position; '' out of range
-        (guarded — Spark substring treats pos 0 as 1 and negatives as
-        from-the-end, so out-of-range must never be observed raw)."""
-        p = self._pos(pos)
-        return F.when((p >= 1) & (p <= F.length(w)),
-                      w.substr(p, F.lit(1))).otherwise(F.lit(""))
-
-    def substr_at(self, w, pos, n):
-        p = self._pos(pos)
-        return F.when(p >= 1, w.substr(p, F.lit(n))).otherwise(F.lit(""))
-
-    def prefix_to(self, w, pos):
-        """Chars 1..pos (expression position; '' when pos <= 0)."""
-        p = self._pos(pos)
-        return F.when(p >= 1, w.substr(F.lit(1), p)).otherwise(F.lit(""))
-
-    def suffix_from(self, w, pos):
-        """Chars pos..end (expression position; '' past the end)."""
-        p = self._pos(pos)
-        return F.when((p >= 1) & (p <= F.length(w)),
-                      w.substr(p, F.length(w))).otherwise(F.lit(""))
-
-    def greatest(self, a, b):
-        return F.greatest(a, F.lit(b) if isinstance(b, int) else b)
-
-    def bind(self, refs, name, val, cont):
-        items = list(refs.items()) + [(name, val)]
-        keys = [k for k, _ in items]
-        arr = F.array(F.struct(*[v.alias(k) for k, v in items]))
-        return F.get(F.transform(
-            arr, lambda s: cont({k: s[k] for k in keys})), 0)
-
-
 def _q(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
@@ -215,8 +92,6 @@ class _SqlB:
     """Values are DuckDB SQL expression strings; bind emits one CTE per
     step (the SQL bind-once — each step's text references its input
     COLUMN, never the previous step's expression)."""
-
-    kind = "sql"
 
     def __init__(self, prefix: str, key: str, source: str):
         self.prefix, self.key = prefix, key
@@ -352,18 +227,33 @@ class _SqlB:
     # finished planning). One step, one CTE is the measured optimum.
 
 
+def _ref(i: int) -> str:
+    """Placeholder for binding ``i`` of a step chain (0 is the input
+    word): step texts are recorded with these, and each rendering
+    substitutes its own name for them."""
+    return f"\x00{i}\x00"
+
+
+_REF_RE = re.compile("\x00(\\d+)\x00")
+
+
+def _render(text: str, name) -> str:
+    """``text`` with each placeholder replaced by ``name(i)``."""
+    return _REF_RE.sub(lambda m: name(int(m[1])), text)
+
+
 class _SparkStepB(_SqlB):
-    """Spark-SQL dialect with a STEP-PER-COLUMN bind: each plan step —
-    and, via ``subbind``, each ``_RULE_CHUNK``-rule slice of a big
-    among — is recorded as (column_name, small_expression_text)
-    referencing earlier step COLUMNS by name. The caller applies the
-    chain as ``withColumn`` projections, so the stemmer arrives as
-    many SMALL parses instead of one giant ``F.expr`` (whose ANTLR
-    prediction cost and DFA-cache retention are superlinear in text
-    size) and with ~zero py4j round trips (the Column backend's cost).
-    Spark's CollapseProject keeps non-cheap multiply-referenced step
-    outputs in their own projections, so each step evaluates once.
-    Equal to every other backend by the shared-spec law tests."""
+    """Spark-SQL dialect with a STEP-PER-BINDING record: each plan step
+    — and, via ``subbind``, each ``_RULE_CHUNK``-rule slice of a big
+    among — is recorded as (column_name, small_expression_text), its
+    references to earlier bindings kept as ``_ref`` placeholders. The
+    same record renders two ways: as step columns applied by
+    ``withColumn`` (``snowball_spark_steps``), and as one Column of
+    nested lambdas parsed level by level (``snowball_stem``). Either
+    way the stemmer arrives as SMALL parses instead of one giant
+    ``F.expr`` (whose ANTLR prediction cost and DFA-cache retention
+    are superlinear in text size), and each step evaluates once per
+    row. Equal to every other backend by the shared-spec law tests."""
 
     def __init__(self, col_prefix: str = "_sb_"):
         self.steps: list[tuple[str, str]] = []
@@ -380,20 +270,27 @@ class _SparkStepB(_SqlB):
         # Spark regexp_replace is global; replacement refs stay $1
         return f"regexp_replace({w}, {_q(pat)}, {_q(repl)})"
 
+    def _record(self, col, val):
+        self.steps.append((col, val))
+        return _ref(len(self.steps))
+
     def subbind(self, val):
         self._aux += 1
-        name = f"{self._pfx}a{self._aux}"
-        self.steps.append((name, val))
-        return name
+        return self._record(f"{self._pfx}a{self._aux}", val)
 
     def bind(self, refs, name, val, cont):
         # plan step names ('w', 'r1', 'skel', ...) become COLUMNS in
         # the caller's frame — prefix them so they can never collide
         # with (and silently overwrite) a data column; a per-language
         # prefix also lets several languages' chains share one frame
-        col = f"{self._pfx}{name}"
-        self.steps.append((col, val))
-        return cont({**refs, name: col})
+        return cont({**refs, name: self._record(f"{self._pfx}{name}", val)})
+
+
+def _step_chain(lang, variant, col_prefix="_sb_"):
+    """(steps, final_text) with references left as placeholders."""
+    plan, final = _lang_program(lang, variant)
+    B = _SparkStepB(col_prefix)
+    return B.steps, _run(B, plan, _ref(0), final)
 
 
 def snowball_spark_steps(lang: str, variant: str | None = None,
@@ -416,22 +313,19 @@ def snowball_spark_steps(lang: str, variant: str | None = None,
             df = df.withColumn(name, F.expr(expr))
         df = df.selectExpr(..., f"{final_expr} AS stem")
 
-    The fast-BUILD backend: pure-Python text assembly plus one tiny
-    ``F.expr`` parse per step/chunk — neither the Column backend's
-    1-10 s of py4j round trips per language nor one big ``F.expr``
-    parse's superlinear ANTLR cost and DFA-cache retention (measured
-    ~300 MB retained for the ru stemmer's 85 KB step). Equal to
-    ``snowball_stem`` by the backend law tests."""
-    plan, final = _lang_program(lang, variant)
-    B = _SparkStepB(col_prefix)
-    out = _run(B, plan, input_col, final)
-    return B.steps, out
+    Pure-Python text assembly plus one tiny ``F.expr`` parse per
+    step/chunk — never one big ``F.expr`` parse, whose ANTLR cost is
+    superlinear and whose DFA cache is retained (measured ~300 MB for
+    the ru stemmer's 85 KB step). Equal to ``snowball_stem`` by the
+    backend law tests."""
+    steps, final = _step_chain(lang, variant, col_prefix)
+    names = [input_col] + [col for col, _ in steps]
+    return ([(col, _render(val, names.__getitem__)) for col, val in steps],
+            _render(final, names.__getitem__))
 
 
 class _PyB:
     """Values are native str/int/bool; eager evaluation (the mirror)."""
-
-    kind = "py"
 
     def lit(self, s):
         return s
@@ -542,6 +436,11 @@ def _sorted_rules(rules):
 # ~300 MB of DFA cache; 8-rule chunks parse in linear time with
 # near-zero retention), so big amongs split into chained chunk columns
 _RULE_CHUNK = 8
+
+# characters of step text per parsed level of ``snowball_stem``: small
+# enough for a linear ANTLR parse, few enough levels (1-12 per
+# language) for the analyzer's fixed-point iteration limit
+_LEVEL_TEXT = 12_000
 
 
 def _apply_rules(B, w, rules):
@@ -1265,10 +1164,60 @@ def _lang_program(lang: str, variant: str | None):
 def snowball_stem(t: Column, lang: str,
                   variant: str | None = None) -> Column:
     """Stem one lowercase token with the complete published Snowball
-    algorithm for ``lang`` (see SNOWBALL_LANGS) as pure Catalyst
-    expressions. NULL passes through."""
-    plan, final = _lang_program(lang, variant)
-    return _run(_SparkB(), plan, t, final)
+    algorithm for ``lang`` (see SNOWBALL_LANGS) as one Column of pure
+    Catalyst expressions. NULL passes through.
+
+    Built from the step texts ``snowball_spark_steps`` renders as
+    columns, in three moves:
+    - a binding read exactly once is substituted into its reader while
+      the reader stays under ``_LEVEL_TEXT`` characters, so a rule chunk
+      is evaluated only when the longer suffixes above it all miss;
+    - the remaining bindings are grouped in order into levels of at
+      most ``_LEVEL_TEXT`` characters, and each level is one
+      ``bind_sql`` over a struct of the bindings later levels read;
+    - inside a level the bindings nest as
+      ``transform(array(<text>), v<i> -> ...)[0]``, so each evaluates
+      once per row; a reference is the bare lambda variable ``v<i>`` in
+      its own level and ``s.v<i>`` after it.
+    One parse per step would nest 23-54 levels, past the analyzer's 100
+    resolution iterations; one level per plan step would parse texts of
+    up to 108 KB (ru)."""
+    steps, final = _step_chain(lang, variant)
+    vals = [val for _, val in steps] + [final]     # vals[i - 1] binds i
+    n_reads = Counter(int(j) for val in vals for j in _REF_RE.findall(val))
+    texts = {}       # the bindings kept, in order; the last is the stem
+    for i, val in enumerate(vals, 1):
+        for j in map(int, _REF_RE.findall(val)):
+            if (n_reads[j] == 1 and j in texts
+                    and len(val) + len(texts[j]) <= _LEVEL_TEXT):
+                val = val.replace(_ref(j), texts.pop(j))
+        texts[i] = val
+    levels, size = [[]], 0
+    for i, val in texts.items():
+        if levels[-1] and size + len(val) > _LEVEL_TEXT:
+            levels.append([])
+            size = 0
+        levels[-1].append(i)
+        size += len(val)
+    level_of = {0: 0} | {i: k for k, lv in enumerate(levels) for i in lv}
+    reads = {i: {int(j) for j in _REF_RE.findall(val)}
+             for i, val in texts.items()}
+    col, var = t, "v0"
+    for k, lv in enumerate(levels):
+        def name(j, k=k):
+            return f"v{j}" if level_of[j] == k else f"s.v{j}"
+        if k == len(levels) - 1:
+            body, lv = _render(texts[lv[-1]], name), lv[:-1]
+        else:
+            live = sorted({j for i in reads if i > lv[-1] for j in reads[i]
+                           if level_of[j] <= k})
+            body = "named_struct(" + ", ".join(
+                f"'v{j}', {name(j)}" for j in live) + ")"
+        for i in reversed(lv):
+            body = (f"transform(array({_render(texts[i], name)}), "
+                    f"v{i} -> {body})[0]")
+        col, var = bind_sql(col, var, body), "s"
+    return col
 
 
 def snowball_stem_py(w: str | None, lang: str,

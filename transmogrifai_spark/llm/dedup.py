@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
 from ..sources.layout import (compact_batch_dirs, read_batches,
-                              stream_batches, write_atomic, write_batch)
+                              read_sidecar, stream_batches, write_atomic,
+                              write_batch)
 from ..util import (bind_sql, cache_scope, cached, ensure_parallelism,
                     observed_metrics, scoped_conf, snapshot)
 
@@ -951,8 +952,7 @@ def append_lsh_index(spark, path: str, df: DataFrame, id_col: str,
     """Add a document batch to an existing index (same parameters, read
     from the sidecar). Overwrites this batch's own subdirectory —
     replay-idempotent."""
-    with open(os.path.join(path, "_LSH_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_LSH_INDEX.json"))
     banded = _lsh_banded(df, id_col, text_col, n=meta["n"],
                          num_hashes=meta["num_hashes"], bands=meta["bands"],
                          portable=meta["portable"],
@@ -1001,17 +1001,11 @@ def lsh_dedup_incremental(spark, path: str, new_docs: DataFrame,
     the index sidecar (the read_dsir_counts contract); independently, one
     sample row's signature length is checked against the sidecar's
     num_hashes (catches the most common mismatch even without params)."""
-    with open(os.path.join(path, "_LSH_INDEX.json")) as f:
-        meta = json.load(f)
+    params = (signature_params or {}) if signatures is not None else {}
+    meta = read_sidecar(os.path.join(path, "_LSH_INDEX.json"),
+                        **{k: params.get(k)
+                           for k in ("n", "num_hashes", "portable")})
     if signatures is not None:
-        if signature_params is not None:
-            for k in ("n", "num_hashes", "portable"):
-                if k in signature_params and signature_params[k] != meta[k]:
-                    raise ValueError(
-                        f"precomputed signatures were built with {k}="
-                        f"{signature_params[k]!r} but the index at {path} "
-                        f"uses {k}={meta[k]!r} — probing with a mismatched "
-                        "hash family would silently miss duplicates")
         probe = signatures.select(F.size("_sig").alias("_w")).head(1)
         if probe and probe[0]["_w"] != meta["num_hashes"]:
             raise ValueError(
@@ -1169,8 +1163,7 @@ def simhash_dedup_incremental(spark, path: str, new_docs: DataFrame,
     (mirrors ``lsh_dedup_incremental``); ``append_batch_id`` is ALWAYS
     self-excluded, so an at-least-once replay that already registered this
     batch cannot pair its docs against their prior selves."""
-    with open(os.path.join(path, "_SIMHASH_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_SIMHASH_INDEX.json"))
     excluded = set(exclude_batches or [])
     if append_batch_id is not None:
         excluded.add(append_batch_id)

@@ -176,19 +176,13 @@ def read_dsir_counts(spark, path: str, n_buckets: int | None = None,
     explicitly passed parameter is VERIFIED against it — counts joined
     into a table with mismatched n_buckets/portable would be silently
     wrong (buckets align by id, no error), so mismatch raises."""
-    import json
     import os
+
+    from ..sources.layout import read_sidecar
     meta_path = os.path.join(path, "_DSIR_COUNTS.json")
     if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        for name, got in (("n_buckets", n_buckets), ("max_n", max_n),
-                          ("portable", portable)):
-            if got is not None and got != meta[name]:
-                raise ValueError(
-                    f"dsir counts at {path} were built with "
-                    f"{name}={meta[name]!r}, caller expects {got!r} — "
-                    "mixed hash params would corrupt the ratio table")
+        read_sidecar(meta_path, n_buckets=n_buckets, max_n=max_n,
+                     portable=portable)
     # the sidecar's leading underscore keeps it invisible to the parquet
     # file index (the _SUCCESS rule), so it lives beside the batch dirs
     spark.catalog.refreshByPath(path)

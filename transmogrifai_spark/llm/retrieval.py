@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokenize
-from ..sources.layout import (merge_batches, read_batches, stream_batches,
-                              write_atomic, write_batch)
+from ..sources.layout import (merge_batches, read_batches, read_sidecar,
+                              stream_batches, write_atomic, write_batch)
 from ..util import cached, ensure_parallelism
 
 
@@ -199,8 +199,8 @@ def _load_stats(path: str) -> tuple[int, int, list[int]]:
     sidecars = {}
     for fn in os.listdir(stats_dir):
         if fn.startswith("batch_") and fn.endswith(".json"):
-            with open(os.path.join(stats_dir, fn)) as f:
-                sidecars[int(fn[len("batch_"):-len(".json")])] = json.load(f)
+            sidecars[int(fn[len("batch_"):-len(".json")])] = \
+                read_sidecar(os.path.join(stats_dir, fn))
     covered = set()
     for s in sidecars.values():
         covered.update(s.get("covers", []))
@@ -216,8 +216,7 @@ def append_bm25_index(spark, path: str, docs: DataFrame, id_col: str,
     (overwrite — replay-idempotent) + its stats sidecar. No corpus rescan,
     no df re-merge: df is recomputed exactly from the pruned read at
     query time."""
-    with open(os.path.join(path, "_BM25_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_BM25_INDEX.json"))
     post = bm25_postings(docs, id_col, text_col).withColumn(
         "_shard", F.pmod(F.xxhash64("term"), F.lit(meta["n_shards"])))
     write_batch(post, os.path.join(path, "postings"), batch_id, "_shard")
@@ -258,8 +257,7 @@ def bm25_topk_indexed(spark, path: str, queries: DataFrame, qid_col: str,
     query terms hash into (a partition-column predicate — directory
     pruning), across every batch subdirectory, so results after appends
     equal a one-shot index over the union (law-tested)."""
-    with open(os.path.join(path, "_BM25_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_BM25_INDEX.json"))
     n_docs, total_len, live = _load_stats(path)
     avgdl = total_len / n_docs if n_docs else 1.0
     # qt is the small side (query tokenize) — recomputing it for the shard
@@ -321,8 +319,7 @@ def compact_bm25_index(spark, path: str, upto_batch: int) -> dict:
     n_docs = total_len = 0
     covers = set()
     for i in merge:
-        with open(os.path.join(stats_dir, f"batch_{i}.json")) as f:
-            s = json.load(f)
+        s = read_sidecar(os.path.join(stats_dir, f"batch_{i}.json"))
         n_docs += s["n_docs"]
         total_len += s["total_len"]
         covers.update(s.get("covers", []))

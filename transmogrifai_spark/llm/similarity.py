@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.layout import (compact_batch_dirs, read_batches,
-                              stream_batches, write_atomic, write_batch)
+                              read_sidecar, stream_batches, write_atomic,
+                              write_batch)
 from ..util import bind_sql, cache_scope, cached, ensure_parallelism, vec_sql
 
 
@@ -949,8 +950,7 @@ def append_ivf_index(spark, path: str, new_vectors: DataFrame,
     (overwrite — replay-idempotent, the same guard as the LSH index and
     stream_rollup_partials). The standard IVF ingest path: centroids
     drift-check / refit is a periodic offline job, not per batch."""
-    with open(os.path.join(path, "_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_INDEX.json"))
     assigned = new_vectors.select(
         F.col(meta["id_col"]).alias("neighbor_id"),
         F.col(meta["vec_col"]).alias("_cv")) \
@@ -965,8 +965,7 @@ def ivf_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
     partition-column predicate, so only `_cell=N/` directories the query
     batch needs are read (verify with .inputFiles()); scoring/top-k is the
     same bucket equi-join + per-query window as the in-memory form."""
-    with open(os.path.join(path, "_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_INDEX.json"))
     assigned = read_batches(
         spark, os.path.join(path, "cells"),
         queries.select(F.col(id_col).alias("neighbor_id"),
@@ -1055,8 +1054,7 @@ def append_ivfpq_index(spark, path: str, new_vectors: DataFrame,
     (overwrite — replay-idempotent, the LSH/IVF-index guard). Periodic
     codebook refit on drifted corpora is an offline rebuild, not an
     append concern — the standard IVF-PQ ingest split."""
-    with open(os.path.join(path, "_IVFPQ_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_IVFPQ_INDEX.json"))
     encoded, _ = pq_encode(new_vectors, meta["id_col"], meta["vec_col"],
                            meta["dim"], m=meta["m"],
                            k_codes=meta["k_codes"],
@@ -1078,8 +1076,7 @@ def ivfpq_topk_indexed(spark, path: str, queries: DataFrame, id_col: str,
     for compaction's crash window matches ivf_topk_indexed: duplicates
     tie on (cosine, neighbor_id), so a lag() over the SAME rank window
     drops them with no extra Exchange."""
-    with open(os.path.join(path, "_IVFPQ_INDEX.json")) as f:
-        meta = json.load(f)
+    meta = read_sidecar(os.path.join(path, "_IVFPQ_INDEX.json"))
     model = {"centroids": meta["centroids"], "codebooks": meta["codebooks"]}
     enc = read_batches(
         spark, os.path.join(path, "cells"),

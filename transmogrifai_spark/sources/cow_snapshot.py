@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..util import cache_scope, cached
-from .layout import write_atomic
+from .layout import read_sidecar, write_atomic
 
 _MANIFEST = "_MANIFEST.json"
 
@@ -106,13 +106,7 @@ class CowSnapshot:
         if not os.path.exists(p):
             return {"buckets": {}, "last_batch_id": -1,
                     "n_buckets": self.n_buckets}
-        with open(p) as f:
-            m = json.load(f)
-        if m["n_buckets"] != self.n_buckets:
-            raise ValueError(
-                f"snapshot was written with n_buckets={m['n_buckets']}, "
-                f"reader configured {self.n_buckets}")
-        return m
+        return read_sidecar(p, n_buckets=self.n_buckets)
 
     def _commit(self, manifest: dict) -> None:
         write_atomic(os.path.join(self.path, _MANIFEST), json.dumps(manifest))

@@ -16,7 +16,8 @@ Morton-order construction).
 Per-batch index stores (the MinHash-LSH, SimHash, IVF, IVF-PQ and BM25
 indexes) share one layout, ``<root>/batch=<id>/<shard_col>=<s>/*.parquet``
 plus JSON sidecars, and this module is its one owner: ``write_atomic``
-(sidecars, stats, manifests, pointers), ``write_batch`` (one batch
+(sidecars, stats, manifests, pointers), ``read_sidecar`` (their read,
+with the parameter check), ``write_batch`` (one batch
 directory, replay-idempotent overwrite), ``read_batches`` (the probe read,
 tolerant of an index with no batch yet), ``stream_batches`` (one batch
 directory per micro-batch) and ``compact_batch_dirs`` / ``merge_batches``
@@ -24,6 +25,7 @@ directory per micro-batch) and ``compact_batch_dirs`` / ``merge_batches``
 """
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -32,8 +34,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_key", "write_optimized", "write_atomic", "write_batch",
-           "read_batches", "stream_batches", "merge_batches",
+__all__ = ["zorder_key", "write_optimized", "write_atomic", "read_sidecar",
+           "write_batch", "read_batches", "stream_batches", "merge_batches",
            "compact_batch_dirs"]
 
 # what a parquet read of a batch root raises while no batch has landed:
@@ -129,6 +131,22 @@ def write_atomic(path: str, text: str) -> None:
     with open(tmp, "w") as f:
         f.write(text)
     os.replace(tmp, path)
+
+
+def read_sidecar(path: str, **expected) -> dict:
+    """The JSON sidecar at ``path``. Every ``expected`` value that is not
+    None must equal the stored field of that name: an index read with
+    other parameters than it was built with (hash family, bucket count)
+    joins on misaligned keys and answers wrong without an error, so a
+    mismatch raises ``ValueError`` naming the field."""
+    with open(path) as f:
+        meta = json.load(f)
+    for name, want in expected.items():
+        if want is not None and want != meta.get(name):
+            raise ValueError(
+                f"{path} was written with {name}={meta.get(name)!r}, "
+                f"the caller expects {name}={want!r}")
+    return meta
 
 
 def write_batch(df: DataFrame, root: str, batch_id: int,

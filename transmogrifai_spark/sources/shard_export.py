@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..llm.curation import hash_bucket
-from .layout import write_atomic
+from .layout import read_sidecar, write_atomic
 
 MANIFEST = "_shard_manifest.json"
 
@@ -108,8 +108,7 @@ def read_shards(spark: SparkSession, path: str,
 
 
 def load_manifest(path: str) -> dict:
-    with open(os.path.join(path, MANIFEST)) as f:
-        return json.load(f)
+    return read_sidecar(os.path.join(path, MANIFEST))
 
 
 def verify_shards(spark: SparkSession, path: str) -> list[str]:

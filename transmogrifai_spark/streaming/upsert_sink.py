@@ -28,7 +28,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.layout import write_atomic
+from ..sources.layout import read_sidecar, write_atomic
 from ..sources.upsert import apply_changes
 
 _POINTER = "_CURRENT.json"
@@ -38,8 +38,7 @@ def _read_pointer(snapshot_dir: str) -> dict:
     p = os.path.join(snapshot_dir, _POINTER)
     if not os.path.exists(p):
         return {"version": 0, "last_batch_id": -1}
-    with open(p) as f:
-        return json.load(f)
+    return read_sidecar(p)
 
 
 def _write_pointer(snapshot_dir: str, meta: dict) -> None:
