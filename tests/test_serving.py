@@ -15,13 +15,15 @@ from transmogrifai_spark.serving.persistence import (_rebuild_stage, _stage_dict
 
 
 def triple_check(spark, df, stage, input_cols):
-    """Spark expr == local fn == rebuilt-from-manifest expr, row by row."""
-    spark_out = [r[stage.output_name] for r in df.select(stage.expr()).collect()]
-    local_fn = registry.local_for(stage.op_name, stage.params)
-    rows = df.select(*input_cols).collect()
-    local_out = [local_fn(*[r[c] for c in input_cols]) for r in rows]
+    """Spark expr == local fn == rebuilt-from-manifest expr, row by row (one
+    job: both expressions and the inputs in one select)."""
     rebuilt = _rebuild_stage(_stage_dict(stage))
-    rebuilt_out = [r[stage.output_name] for r in df.select(rebuilt.expr()).collect()]
+    rows = df.select(stage.expr().alias("_spark"), rebuilt.expr().alias("_rebuilt"),
+                     *input_cols).collect()
+    local_fn = registry.local_for(stage.op_name, stage.params)
+    spark_out = [r["_spark"] for r in rows]
+    local_out = [local_fn(*[r[c] for c in input_cols]) for r in rows]
+    rebuilt_out = [r["_rebuilt"] for r in rows]
     for s, l, rb in zip(spark_out, local_out, rebuilt_out):
         if isinstance(s, list):
             assert list(s) == pytest.approx(list(l)), (stage.op_name, s, l)
@@ -35,41 +37,109 @@ def triple_check(spark, df, stage, input_cols):
 
 
 def test_triple_equality_vectorizers(spark):
+    from transmogrifai_spark.operators.preparators import (min_variance_filter,
+                                                           sanity_checker)
     from transmogrifai_spark.operators.vectorizers import (binary_vectorizer,
+                                                           geolocation_vectorizer,
                                                            integral_vectorizer,
                                                            one_hot_estimator,
                                                            real_vectorizer)
+    # v: slot 0 constant (low variance), slot 1 == y (leakage), slot 2 kept
     df = spark.createDataFrame(
-        [("a", 1.0, 5, True), ("b", None, 7, None), (None, 3.0, None, False),
-         ("c", 2.0, 7, True)],
-        "cat string, real double, n bigint, b boolean")
-    feats = from_dataframe(df, overrides={"cat": "PickList"})
+        [("a", 1.0, 5, True, [37.7, -122.4, 5.0], [1.0, 0.0, 3.0], 0.0),
+         ("b", None, 7, None, None, [1.0, 1.0, 1.0], 1.0),
+         (None, 3.0, None, False, [40.7, -74.0], [1.0, 1.0, 4.0], 1.0),
+         ("c", 2.0, 7, True, [51.5, -0.1, 3.0], [1.0, 0.0, 2.0], 0.0)],
+        "cat string, real double, n bigint, b boolean, g array<double>, "
+        "v array<double>, y double")
+    feats = from_dataframe(df, response="y",
+                           overrides={"cat": "PickList", "g": "Geolocation",
+                                      "v": "OPVector"})
     triple_check(spark, df, one_hot_estimator(feats["cat"], top_k=2, min_support=1).fit(df), ["cat"])
     triple_check(spark, df, real_vectorizer(feats["real"]).fit(df), ["real"])
     triple_check(spark, df, integral_vectorizer(feats["n"]).fit(df), ["n"])
     triple_check(spark, df, binary_vectorizer(feats["b"]), ["b"])
+    triple_check(spark, df, geolocation_vectorizer(feats["g"]).fit(df), ["g"])
+    triple_check(spark, df, min_variance_filter(feats["v"]).fit(df), ["v"])
+    checked = sanity_checker(feats["v"], feats["y"]).fit(df)
+    assert checked.params["keep"] == [2]
+    triple_check(spark, df, checked, ["v", "y"])
 
 
 def test_triple_equality_numeric(spark):
     from transmogrifai_spark.operators.numeric import (ScalingArgs,
+                                                       decision_tree_bucketizer,
+                                                       descaler,
                                                        fill_missing_with_mean,
                                                        numeric_bucketizer,
                                                        percentile_calibrator,
                                                        scaler, standard_scaler)
-    df = spark.createDataFrame([(float(i),) for i in range(20)] + [(None,)], "x double")
-    f = from_dataframe(df)["x"]
+    df = spark.createDataFrame(
+        [(float(i), float(i >= 12)) for i in range(20)] + [(None, 0.0)],
+        "x double, y double")
+    feats = from_dataframe(df, response="y")
+    f = feats["x"]
     triple_check(spark, df, fill_missing_with_mean(f).fit(df), ["x"])
     triple_check(spark, df, standard_scaler(f).fit(df), ["x"])
+    triple_check(spark, df, standard_scaler(f, with_mean=False).fit(df), ["x"])
+    triple_check(spark, df, standard_scaler(f, with_std=False).fit(df), ["x"])
     triple_check(spark, df, numeric_bucketizer(f, [-math.inf, 5.0, 10.0, math.inf]), ["x"])
+    # one-hot form: out-of-range rows (x > 10) are all zeros, NULL fills the null slot
+    triple_check(spark, df, numeric_bucketizer(f, [0, 5, 10], as_onehot=True), ["x"])
+    triple_check(spark, df, numeric_bucketizer(f, [0, 5, 10], track_nulls=False,
+                                               as_onehot=True), ["x"])
     triple_check(spark, df, percentile_calibrator(f, buckets=4).fit(df), ["x"])
-    triple_check(spark, df, scaler(f, ScalingArgs("linear", 2.0, 1.0)), ["x"])
+    triple_check(spark, df, decision_tree_bucketizer(f, feats["y"]).fit(df), ["x"])
+    for args in (ScalingArgs("linear", 2.0, 1.0), ScalingArgs("log", log_base=10.0)):
+        triple_check(spark, df, scaler(f, args), ["x"])
+        triple_check(spark, df, descaler(f, args), ["x"])
+
+
+def test_bucketizer_manifest_without_onehot_keys_loads_as_index(spark, tmp_path):
+    """A manifest that does not record ``as_onehot`` (as written before the
+    one-hot form persisted) loads as the index form and scores like the
+    default-option fit."""
+    import json
+    from transmogrifai_spark.operators.numeric import numeric_bucketizer
+    from transmogrifai_spark.workflow import Workflow
+
+    df = spark.createDataFrame([(float(i),) for i in range(6)] + [(None,)], "x double")
+    f = from_dataframe(df)["x"]
+    splits = [0.0, 2.0, 4.0]
+    model = Workflow([numeric_bucketizer(f, splits, as_onehot=True).output]).fit(df)
+    path = str(tmp_path / "m")
+    save_model(model, path)
+    manifest = json.load(open(f"{path}/manifest.json"))
+    params = manifest["layers"][0][0]["params"]
+    assert params == {"splits": splits, "as_onehot": True, "track_nulls": True}
+    del params["as_onehot"], params["track_nulls"]
+    with open(f"{path}/manifest.json", "w") as fh:
+        json.dump(manifest, fh)
+    loaded = load_model(path)
+    default = numeric_bucketizer(f, splits)
+    want = [r[0] for r in df.select(default.expr()).collect()]
+    assert want == [0, 0, 1, 1, 1, None, None]
+    assert [r[0] for r in loaded.score(df).select(default.output_name).collect()] == want
+    local = compile_local(loaded)
+    assert [local({"x": r["x"]})["x_bucket"] for r in df.collect()] == want
+
+
+def test_load_rejects_other_format_version(tmp_path):
+    import json
+    (tmp_path / "manifest.json").write_text(json.dumps(
+        {"format_version": 2, "result_features": [], "layers": []}))
+    with pytest.raises(ValueError, match="format_version"):
+        load_model(str(tmp_path))
 
 
 def test_triple_equality_categorical(spark):
-    from transmogrifai_spark.operators.categorical import string_indexer
-    df = spark.createDataFrame([("a",), ("b",), ("b",), (None,)], "x string")
-    f = from_dataframe(df, overrides={"x": "PickList"})["x"]
-    triple_check(spark, df, string_indexer(f).fit(df), ["x"])
+    from transmogrifai_spark.operators.categorical import (index_to_string,
+                                                           string_indexer)
+    df = spark.createDataFrame([("a", 0), ("b", 1), ("b", 5), (None, None), ("c", -1)],
+                               "x string, i bigint")
+    feats = from_dataframe(df, overrides={"x": "PickList"})
+    triple_check(spark, df, string_indexer(feats["x"]).fit(df), ["x"])
+    triple_check(spark, df, index_to_string(feats["i"], ["b", "a"]), ["i"])
 
 
 def test_full_model_save_load_local(spark, tmp_path):
@@ -143,7 +213,8 @@ def test_xxhash64_bit_parity(spark):
 def test_triple_equality_map_and_smart_text(spark):
     from transmogrifai_spark.operators.categorical import smart_text_vectorizer
     from transmogrifai_spark.operators.map_vectorizers import (
-        binary_map_vectorizer, real_map_vectorizer, text_map_pivot_vectorizer)
+        binary_map_vectorizer, real_map_vectorizer, text_map_len_vectorizer,
+        text_map_null_vectorizer, text_map_pivot_vectorizer)
 
     mdf = spark.createDataFrame(
         [({"a": 1.0, "b": 2.0},), ({"a": 3.0},), (None,)], "m map<string,double>")
@@ -154,10 +225,13 @@ def test_triple_equality_map_and_smart_text(spark):
     fb = from_dataframe(bdf, overrides={"m": "BinaryMap"})["m"]
     triple_check(spark, bdf, binary_map_vectorizer(fb).fit(bdf), ["m"])
 
-    pdf = spark.createDataFrame([({"c": "red"},), ({"c": "blue"},), ({"c": "red"},)],
+    pdf = spark.createDataFrame([({"c": "red"},), ({"c": "blue", "d": "x"},),
+                                 ({"c": "red"},), (None,)],
                                 "m map<string,string>")
     fp = from_dataframe(pdf, overrides={"m": "PickListMap"})["m"]
     triple_check(spark, pdf, text_map_pivot_vectorizer(fp, top_k=1).fit(pdf), ["m"])
+    triple_check(spark, pdf, text_map_len_vectorizer(fp).fit(pdf), ["m"])
+    triple_check(spark, pdf, text_map_null_vectorizer(fp).fit(pdf), ["m"])
 
     tdf = spark.createDataFrame([("hello world",), ("hello spark engine",), (None,)],
                                 "t string")
@@ -169,6 +243,35 @@ def test_triple_equality_map_and_smart_text(spark):
     pivoted = smart_text_vectorizer(ft, max_cardinality=100).fit(tdf)
     assert pivoted.params["strategy"] == "pivot"
     triple_check(spark, tdf, pivoted, ["t"])
+
+
+def test_spark_only_stages_save_and_load(spark, tmp_path):
+    """smartTextMapVec and dropIndicesBy have no local form: they save, load
+    and score as fitted, and compile_local rejects them at compile time."""
+    from transmogrifai_spark.operators.map_vectorizers import smart_text_map_vectorizer
+    from transmogrifai_spark.operators.multilabel import drop_indices_by
+    from transmogrifai_spark.workflow import Workflow
+
+    df = spark.createDataFrame(
+        [({"c": "red", "t": "big red dog"},), ({"c": "blue", "t": "small cat"},),
+         ({"c": "red", "t": "tiny bird"},), (None,)], "m map<string,string>")
+    f = from_dataframe(df, overrides={"m": "TextMap"})["m"]
+    est = smart_text_map_vectorizer(f, max_cardinality=2, hash_features=4)
+    fitted = est.fit(df)
+    assert fitted.params["strategies"] == {"c": "pivot", "t": "hash"}
+    slots = fitted.slots
+    dropped = drop_indices_by(est.output, lambda s: s.indicator_value == "OTHER", slots)
+    model = Workflow([dropped.output]).fit(df)
+    path = str(tmp_path / "m")
+    save_model(model, path)
+    loaded = load_model(path)
+    cols = [est.output_name, dropped.output_name]
+    want = [tuple(r) for r in model.score(df, keep_intermediate=True).select(*cols).collect()]
+    assert len(want[0][1]) == len(want[0][0]) - 1  # the pivoted key's OTHER slot
+    assert [tuple(r) for r in
+            loaded.score(df, keep_intermediate=True).select(*cols).collect()] == want
+    with pytest.raises(NotImplementedError):
+        compile_local(loaded)
 
 
 def test_triple_equality_date_map(spark):

@@ -396,7 +396,7 @@ def model_selector_stage(features, label, key, candidates=None, k: int = 3,
     def fit(stage, df: DataFrame):
         from pyspark.ml.functions import array_to_vector
         from ..operators.numeric import FittedParamTransformer
-        from ..serving.ml_export import _ml_pred_expr, export_model_params
+        from ..serving.ml_export import export_model_params
         data = df.withColumn("_fv", array_to_vector(F.col(features.name)))
         if problem == "binary":
             sel = select_binary_model(data, "_fv", label.name, key.name,
@@ -414,8 +414,7 @@ def model_selector_stage(features, label, key, candidates=None, k: int = 3,
             "leaderboard": [{"name": c.name, "params": c.params,
                              "metric": c.metric, "fold_metrics": c.fold_metrics}
                             for c in sel.leaderboard]}
-        fitted = FittedParamTransformer("mlPredictor", [features], out, "RealNN",
-                                        _ml_pred_expr(params), params)
+        fitted = FittedParamTransformer("mlPredictor", [features], out, "RealNN", params)
         fitted.selected = sel  # full SelectedModel for insights at fit time
         return fitted
 

@@ -45,20 +45,8 @@ def string_indexer(feat: Feature, handle_invalid: str = "keep",
             .collect()
         )
         labels = [r[feat.name] for r in counts]
-        index = {v: i for i, v in enumerate(labels)}
-        unseen = len(labels) if handle_invalid == "keep" else None
-
-        def make_expr(c: Column) -> Column:
-            m = F.create_map(*[x for v, i in index.items()
-                               for x in (F.lit(v), F.lit(i))]) if index else None
-            looked = F.try_element_at(m, c) if m is not None else F.lit(None).cast("int")
-            if handle_invalid == "keep":
-                return F.coalesce(looked, F.lit(unseen)).cast("long")
-            return looked.cast("long")
-
         return FittedParamTransformer("stringIndexer", [feat], out, "Integral",
-                                      make_expr, {"labels": labels,
-                                                  "handle_invalid": handle_invalid})
+                                      {"labels": labels, "handle_invalid": handle_invalid})
 
     return Estimator("stringIndexer", [feat], out, "Integral", fit)
 
@@ -68,15 +56,8 @@ def index_to_string(idx_feat: Feature, labels: list[str], unseen: str = "UnseenL
     """OpIndexToString.scala:50 — inverse of string_indexer from its fitted
     labels."""
     out = output_name or f"{idx_feat.name}_label"
-
-    def make_expr(c: Column) -> Column:
-        arr = F.array(*[F.lit(v) for v in labels])
-        i = c.cast("int")
-        return F.when((i >= 0) & (i < len(labels)),
-                      F.try_element_at(arr, i + 1)).otherwise(F.lit(unseen))
-
     return FittedParamTransformer("indexToString", [idx_feat], out, "Text",
-                                  make_expr, {"labels": labels, "unseen": unseen})
+                                  {"labels": labels, "unseen": unseen})
 
 
 def smart_text_vectorizer(feat: Feature, max_cardinality: int = 30,
@@ -111,17 +92,11 @@ def smart_text_vectorizer(feat: Feature, max_cardinality: int = 30,
 
         if pivot:
             inner = one_hot_estimator(feat, top_k=top_k, min_support=min_support).fit(df)
-            fitted = FittedVectorizer(
-                "smartTextPivot", [feat], out, inner._make_expr, inner.slots,
-                {"strategy": "pivot", **inner.params})
-        else:
-            from ..functions.text import tokenize
-            hasher = hashing_vectorizer(feat, num_features=hash_features)
-            fitted = FittedVectorizer(
-                "smartTextHash", [feat], out,
-                lambda c2: hasher._make_expr(tokenize(c2)), hasher.slots,
-                {"strategy": "hash", **hasher.params})
-        return fitted
+            return FittedVectorizer("smartTextPivot", [feat], out, inner.slots,
+                                    {"strategy": "pivot", **inner.params})
+        hasher = hashing_vectorizer(feat, num_features=hash_features)
+        return FittedVectorizer("smartTextHash", [feat], out, hasher.slots,
+                                {"strategy": "hash", **hasher.params})
 
     return Estimator("smartText", [feat], out, "OPVector", fit)
 

@@ -39,7 +39,8 @@ def _mode_of_sorted(sorted_u: Column) -> Column:
 
 
 def date_list_expr_builder(reference_date: str, pivots):
-    """Expression factory shared by the stage and the serving registry."""
+    """Expression factory of op "dateListVec" (the serving registry builds
+    the stage's Column from it)."""
     ref = F.lit(reference_date).cast("timestamp")
 
     def since(ms: Column) -> Column:
@@ -78,8 +79,7 @@ def date_list_vectorizer(feat: Feature, reference_date: str,
     the reference's fill) and -1.0 for Mode* slots."""
     out = output_name or f"{feat.name}_vec"
     slots = [VectorSlot(feat.name, descriptor=p) for p in pivots]
-    return FittedVectorizer("dateListVec", [feat], out,
-                            date_list_expr_builder(reference_date, pivots), slots,
+    return FittedVectorizer("dateListVec", [feat], out, slots,
                             {"reference_date": reference_date, "pivots": list(pivots)})
 
 
@@ -135,8 +135,7 @@ def date_list_pivot_vectorizer(feat: Feature, pivot: str,
     slots = [VectorSlot(feat.name, indicator_value=v) for v in _PIVOT_SLOTS[pivot]]
     if track_nulls:
         slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-    return FittedVectorizer("dateListPivotVec", [feat], out,
-                            date_list_pivot_expr_builder(pivot, track_nulls), slots,
+    return FittedVectorizer("dateListPivotVec", [feat], out, slots,
                             {"pivot": pivot, "track_nulls": track_nulls})
 
 
@@ -145,15 +144,6 @@ def date_map_days_ago(feat: Feature, keys: list[str], reference_date: str,
     """DateMapVectorizer (OPMapVectorizer.scala:150): per fitted key, whole
     days between the map's epoch-ms value and the reference date."""
     out = output_name or f"{feat.name}_vec"
-    ref = F.lit(reference_date).cast("timestamp")
     slots = [VectorSlot(feat.name, group=k, descriptor="daysAgo") for k in keys]
-
-    def make_expr(m: Column) -> Column:
-        return F.array(*[
-            F.coalesce(
-                F.datediff(ref, millis_to_ts(F.try_element_at(m, F.lit(k)))).cast("double"),
-                F.lit(0.0))
-            for k in keys])
-
-    return FittedVectorizer("dateMapVec", [feat], out, make_expr, slots,
+    return FittedVectorizer("dateMapVec", [feat], out, slots,
                             {"keys": keys, "reference_date": reference_date})

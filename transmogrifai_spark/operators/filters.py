@@ -65,8 +65,7 @@ def substring_of(needle: Feature, haystack: Feature, output_name: str | None = N
 def alias(feat: Feature, new_name: str) -> Feature:
     """AliasTransformer.scala:51 — rename a feature (persistable identity)."""
     from ..operators.numeric import FittedParamTransformer
-    st = FittedParamTransformer("alias", [feat], new_name, feat.type_tag.name,
-                                lambda c: c, {})
+    st = FittedParamTransformer("alias", [feat], new_name, feat.type_tag.name, {})
     return st.output
 
 

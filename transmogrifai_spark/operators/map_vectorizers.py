@@ -19,7 +19,7 @@ explode in the hot path.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..feature import Feature
@@ -53,17 +53,7 @@ def real_map_vectorizer(feat: Feature, allow_keys: list[str] | None = None,
         if track_nulls:
             slots += [VectorSlot(feat.name, group=k, indicator_value="NullIndicatorValue")
                       for k in keys]
-
-        def make_expr(m: Column) -> Column:
-            vals = [F.coalesce(F.try_element_at(m, F.lit(k)).cast("double"),
-                               F.lit(fills[k])) for k in keys]
-            parts = list(vals)
-            if track_nulls:
-                parts += [F.when(F.try_element_at(m, F.lit(k)).isNull(), 1.0).otherwise(0.0)
-                          for k in keys]
-            return F.array(*parts)
-
-        return FittedVectorizer("realMapVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("realMapVec", [feat], out, slots,
                                 {"keys": keys, "fills": fills, "track_nulls": track_nulls})
 
     return Estimator("realMapVec", [feat], out, "OPVector", fit)
@@ -81,16 +71,7 @@ def binary_map_vectorizer(feat: Feature, track_nulls: bool = True,
         if track_nulls:
             slots += [VectorSlot(feat.name, group=k, indicator_value="NullIndicatorValue")
                       for k in keys]
-
-        def make_expr(m: Column) -> Column:
-            parts = [F.when(F.try_element_at(m, F.lit(k)).eqNullSafe(F.lit(True)), 1.0)
-                     .otherwise(0.0) for k in keys]
-            if track_nulls:
-                parts += [F.when(F.try_element_at(m, F.lit(k)).isNull(), 1.0).otherwise(0.0)
-                          for k in keys]
-            return F.array(*parts)
-
-        return FittedVectorizer("binaryMapVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("binaryMapVec", [feat], out, slots,
                                 {"keys": keys, "track_nulls": track_nulls})
 
     return Estimator("binaryMapVec", [feat], out, "OPVector", fit)
@@ -112,28 +93,14 @@ def text_map_pivot_vectorizer(feat: Feature, top_k: int = 20, min_support: int =
             by_key.setdefault(r["_k"], []).append((r["_v"], r["n"]))
         pivots = {k: [v for v, _ in sorted(vs, key=lambda t: (-t[1], t[0]))[:top_k]]
                   for k, vs in sorted(by_key.items())}
-        slots, parts_builders = [], []
+        slots = []
         for k in sorted(pivots):
             for v in pivots[k]:
                 slots.append(VectorSlot(feat.name, group=k, indicator_value=str(v)))
             slots.append(VectorSlot(feat.name, group=k, indicator_value="OTHER"))
             if track_nulls:
                 slots.append(VectorSlot(feat.name, group=k, indicator_value="NullIndicatorValue"))
-
-        def make_expr(m: Column) -> Column:
-            parts = []
-            for k in sorted(pivots):
-                val = F.try_element_at(m, F.lit(k))
-                known = F.lit(False)
-                for v in pivots[k]:
-                    parts.append(F.when(val.eqNullSafe(F.lit(v)), 1.0).otherwise(0.0))
-                    known = known | val.eqNullSafe(F.lit(v))
-                parts.append(F.when(val.isNotNull() & ~known, 1.0).otherwise(0.0))
-                if track_nulls:
-                    parts.append(F.when(val.isNull(), 1.0).otherwise(0.0))
-            return F.array(*parts)
-
-        return FittedVectorizer("textMapPivotVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("textMapPivotVec", [feat], out, slots,
                                 {"pivots": pivots, "track_nulls": track_nulls})
 
     return Estimator("textMapPivotVec", [feat], out, "OPVector", fit)
@@ -149,7 +116,6 @@ def smart_text_map_vectorizer(feat: Feature, max_cardinality: int = 30,
     topK discovers everything; high-cardinality keys fall back to the
     hashing trick over their tokenized values."""
     from pyspark.sql.window import Window
-    from ..functions.text import tokenize
 
     out = output_name or f"{feat.name}_vec"
 
@@ -177,33 +143,7 @@ def smart_text_map_vectorizer(feat: Feature, max_cardinality: int = 30,
                           for i in range(hash_features)]
             if track_nulls:
                 slots.append(VectorSlot(feat.name, group=k, indicator_value="NullIndicatorValue"))
-
-        def make_expr(m: Column) -> Column:
-            # segments: each either a 1-element array (scalar slot) or the
-            # hash-bucket array; one flatten assembles the vector
-            segments: list[Column] = []
-            for k in sorted(strategies):
-                val = F.try_element_at(m, F.lit(k))
-                if strategies[k] == "pivot":
-                    known = F.lit(False)
-                    for v in by_key.get(k, []):
-                        segments.append(F.array(
-                            F.when(val.eqNullSafe(F.lit(v)), 1.0).otherwise(0.0)))
-                        known = known | val.eqNullSafe(F.lit(v))
-                    segments.append(F.array(
-                        F.when(val.isNotNull() & ~known, 1.0).otherwise(0.0)))
-                else:
-                    idx = F.transform(tokenize(val),
-                                      lambda t: F.pmod(F.xxhash64(t, F.lit(42)),
-                                                       F.lit(hash_features)))
-                    buckets = F.sequence(F.lit(0), F.lit(hash_features - 1))
-                    segments.append(F.transform(buckets, lambda b: F.size(
-                        F.filter(idx, lambda i: i == b)).cast("double")))
-                if track_nulls:
-                    segments.append(F.array(F.when(val.isNull(), 1.0).otherwise(0.0)))
-            return F.flatten(F.array(*segments))
-
-        return FittedVectorizer("smartTextMapVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("smartTextMapVec", [feat], out, slots,
                                 {"strategies": strategies, "pivots": by_key,
                                  "hash_features": hash_features,
                                  "track_nulls": track_nulls})
@@ -229,13 +169,7 @@ def text_map_null_vectorizer(feat: Feature, output_name: str | None = None) -> E
                 .distinct().orderBy("_k").collect()]
         slots = [VectorSlot(feat.name, group=k, indicator_value="NullIndicatorValue")
                  for k in keys]
-
-        def make_expr(m: Column) -> Column:
-            return F.array(*[F.when(F.try_element_at(m, F.lit(k)).isNull(), 1.0)
-                             .otherwise(0.0) for k in keys])
-
-        return FittedVectorizer("textMapNullVec", [feat], out, make_expr, slots,
-                                {"keys": keys})
+        return FittedVectorizer("textMapNullVec", [feat], out, slots, {"keys": keys})
 
     return Estimator("textMapNullVec", [feat], out, "OPVector", fit)
 
@@ -248,14 +182,7 @@ def text_map_len_vectorizer(feat: Feature, output_name: str | None = None) -> Es
         keys = [r["_k"] for r in df.select(F.explode(F.map_keys(F.col(feat.name))).alias("_k"))
                 .distinct().orderBy("_k").collect()]
         slots = [VectorSlot(feat.name, group=k, descriptor="length") for k in keys]
-
-        def make_expr(m: Column) -> Column:
-            return F.array(*[
-                F.coalesce(F.length(F.try_element_at(m, F.lit(k))).cast("double"), F.lit(0.0))
-                for k in keys])
-
-        return FittedVectorizer("textMapLenVec", [feat], out, make_expr, slots,
-                                {"keys": keys})
+        return FittedVectorizer("textMapLenVec", [feat], out, slots, {"keys": keys})
 
     return Estimator("textMapLenVec", [feat], out, "OPVector", fit)
 
@@ -287,10 +214,8 @@ def geolocation_map_vectorizer(feat: Feature, allow_keys: list[str] | None = Non
             if track_nulls:
                 slots.append(VectorSlot(feat.name, group=k,
                                         indicator_value="NullIndicatorValue"))
-        params = {"keys": keys, "track_nulls": track_nulls,
-                  "default_value": [float(v) for v in default_value]}
-        from ..serving.registry import expr_for
-        return FittedVectorizer("geoMapVec", [feat], out,
-                                expr_for("geoMapVec", params), slots, params)
+        return FittedVectorizer("geoMapVec", [feat], out, slots,
+                                {"keys": keys, "track_nulls": track_nulls,
+                                 "default_value": [float(v) for v in default_value]})
 
     return Estimator("geoMapVec", [feat], out, "OPVector", fit)

@@ -54,12 +54,7 @@ def drop_indices_by(vec: Feature, predicate: Callable[[VectorSlot], bool],
     the predicate (e.g. all null-indicator slots)."""
     out = output_name or f"{vec.name}_dropped"
     keep = [i for i, s in enumerate(slots) if not predicate(s)]
-    kept_slots = [slots[i] for i in keep]
-
-    def make_expr(c: Column) -> Column:
-        return F.array(*[F.try_element_at(c, F.lit(i + 1)) for i in keep])
-
-    return FittedVectorizer("dropIndicesBy", [vec], out, make_expr, kept_slots,
+    return FittedVectorizer("dropIndicesBy", [vec], out, [slots[i] for i in keep],
                             {"keep": keep})
 
 

@@ -32,11 +32,15 @@ from ..util import cache_scope, cached
 
 
 class FittedParamTransformer(ColumnTransformer):
-    """ColumnTransformer carrying its fitted parameters as plain data
-    (params dict) — the contract the save/load and local-scoring paths use."""
+    """A fitted scalar stage: (op_name, params) with ``params`` as plain
+    data. Its Column comes from ``serving.registry.expr_for(op_name,
+    params)``, the builder that also sits beside the op's local fn, so a
+    fit, a reloaded manifest and local scoring share one expression source."""
 
-    def __init__(self, op_name, inputs, output_name, output_type, make_expr, params: dict):
-        super().__init__(op_name, inputs, output_name, output_type, make_expr)
+    def __init__(self, op_name, inputs, output_name, output_type, params: dict):
+        from ..serving.registry import expr_for
+        super().__init__(op_name, inputs, output_name, output_type,
+                         expr_for(op_name, params))
         self.params = params
 
 
@@ -50,10 +54,7 @@ def fill_missing_with_mean(feat: Feature, default: float = 0.0,
         mean = exact_mean(df, feat.name)
         if mean is None:
             mean = default
-        return FittedParamTransformer(
-            "fillMean", [feat], out, "RealNN",
-            lambda c: F.coalesce(c.cast("double"), F.lit(mean)),
-            {"mean": mean})
+        return FittedParamTransformer("fillMean", [feat], out, "RealNN", {"mean": mean})
 
     return Estimator("fillMean", [feat], out, "RealNN", fit)
 
@@ -97,17 +98,10 @@ def standard_scaler(feat: Feature, with_mean: bool = True, with_std: bool = True
         mean, std = mm if mm else (0.0, 1.0)
         if std == 0.0:
             std = 1.0
-
-        def make_expr(c: Column) -> Column:
-            x = c.cast("double")
-            if with_mean:
-                x = x - F.lit(mean)
-            if with_std:
-                x = x / F.lit(std)
-            return x
-
-        return FittedParamTransformer("stdScaler", [feat], out, "RealNN",
-                                      make_expr, {"mean": mean, "std": std})
+        params = {"mean": mean, "std": std}
+        if not (with_mean and with_std):  # default manifests keep their bytes
+            params.update(with_mean=with_mean, with_std=with_std)
+        return FittedParamTransformer("stdScaler", [feat], out, "RealNN", params)
 
     return Estimator("stdScaler", [feat], out, "RealNN", fit)
 
@@ -125,33 +119,24 @@ class ScalingArgs:
 
 def scaler(feat: Feature, args: ScalingArgs, output_name: str | None = None) -> ColumnTransformer:
     out = output_name or f"{feat.name}_scaled"
-    if args.family == "linear":
-        expr = lambda c: c * F.lit(args.slope) + F.lit(args.intercept)
-    elif args.family == "log":
-        expr = lambda c: F.log(args.log_base, c)
-    else:
+    if args.family not in ("linear", "log"):
         raise ValueError(f"unknown scaling family {args.family!r}")
-    return FittedParamTransformer(
-        "scaler", [feat], out, "Real", expr,
-        {"scaling": {"family": args.family, "slope": args.slope,
-                     "intercept": args.intercept, "log_base": args.log_base}})
+    return FittedParamTransformer("scaler", [feat], out, "Real", _scaling_params(args))
 
 
 def descaler(scaled: Feature, args: ScalingArgs, output_name: str | None = None) -> ColumnTransformer:
     """DescalerTransformer.scala:56 — inverse of scaler from its metadata."""
     out = output_name or f"{scaled.name}_descaled"
-    if args.family == "linear":
-        if args.slope == 0:
-            raise ValueError("cannot invert zero-slope linear scaling")
-        expr = lambda c: (c - F.lit(args.intercept)) / F.lit(args.slope)
-    elif args.family == "log":
-        expr = lambda c: F.pow(F.lit(args.log_base), c)
-    else:
+    if args.family not in ("linear", "log"):
         raise ValueError(f"unknown scaling family {args.family!r}")
-    return FittedParamTransformer(
-        "descaler", [scaled], out, "Real", expr,
-        {"scaling": {"family": args.family, "slope": args.slope,
-                     "intercept": args.intercept, "log_base": args.log_base}})
+    if args.family == "linear" and args.slope == 0:
+        raise ValueError("cannot invert zero-slope linear scaling")
+    return FittedParamTransformer("descaler", [scaled], out, "Real", _scaling_params(args))
+
+
+def _scaling_params(args: ScalingArgs) -> dict:
+    return {"scaling": {"family": args.family, "slope": args.slope,
+                        "intercept": args.intercept, "log_base": args.log_base}}
 
 
 def _bucket_expr(splits: list[float], right_inclusive_last: bool = True):
@@ -181,21 +166,12 @@ def numeric_bucketizer(feat: Feature, splits: list[float], track_nulls: bool = T
     """NumericBucketizer.scala:54 — explicit-split bucketing; optionally a
     one-hot vector with a null slot (the reference's vectorized form)."""
     out = output_name or f"{feat.name}_bucket"
-    idx_expr = _bucket_expr(splits)
     if not as_onehot:
         return FittedParamTransformer("numericBucketizer", [feat], out, "Integral",
-                                      idx_expr, {"splits": list(splits)})
-    n = len(splits) - 1
-
-    def make_onehot(c: Column) -> Column:
-        idx = idx_expr(c)
-        parts = [F.when(idx == i, 1.0).otherwise(0.0) for i in range(n)]
-        if track_nulls:
-            parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
-        return F.array(*parts)
-
+                                      {"splits": list(splits)})
     return FittedParamTransformer("numericBucketizer", [feat], out, "OPVector",
-                                  make_onehot, {"splits": splits})
+                                  {"splits": list(splits), "as_onehot": True,
+                                   "track_nulls": track_nulls})
 
 
 def percentile_calibrator(feat: Feature, buckets: int = 100,
@@ -232,7 +208,7 @@ def percentile_calibrator(feat: Feature, buckets: int = 100,
                 splits.append(q)
         splits.append(math.inf)
         return FittedParamTransformer("percentileCalibrator", [feat], out, "Integral",
-                                      _bucket_expr(splits), {"splits": list(splits)})
+                                      {"splits": list(splits)})
 
     return Estimator("percentileCalibrator", [feat], out, "Integral", fit)
 
@@ -260,7 +236,7 @@ def decision_tree_bucketizer(feat: Feature, label: Feature, max_depth: int = 2,
                       re.findall(r"feature 0 <= ([0-9eE.+-]+)", dt.toDebugString)}
         splits = [-math.inf] + sorted(thresholds) + [math.inf]
         return FittedParamTransformer("dtBucketizer", [feat], out, "Integral",
-                                      _bucket_expr(splits), {"splits": list(splits)})
+                                      {"splits": list(splits)})
 
     return Estimator("dtBucketizer", [feat, label], out, "Integral", fit)
 
@@ -317,8 +293,7 @@ def decision_tree_map_bucketizer(feat: Feature, label: Feature,
                       for i in range(nb)]
             if track_nulls:
                 slots.append(VectorSlot(feat.name, descriptor=f"{k}_null"))
-        return FittedVectorizer("dtMapBucketizer", [feat], out,
-                                _dt_map_bucket_expr(params), slots, params)
+        return FittedVectorizer("dtMapBucketizer", [feat], out, slots, params)
 
     return Estimator("dtMapBucketizer", [feat, label], out, "OPVector", fit)
 
@@ -357,27 +332,10 @@ def isotonic_calibrator(score: Feature, label: Feature,
         iso = IsotonicRegression(featuresCol="_v", labelCol="_y").fit(data)
         bounds = [float(b) for b in iso.boundaries.toArray()]
         preds = [float(p) for p in iso.predictions.toArray()]
-
-        def make_expr(c: Column) -> Column:
-            # piecewise-linear interpolation over (bounds, preds)
-            x = c.cast("double")
-            expr = F.lit(preds[0])
-            for i in range(1, len(bounds)):
-                x0, x1 = bounds[i - 1], bounds[i]
-                y0, y1 = preds[i - 1], preds[i]
-                if x1 == x0:
-                    seg = F.lit(y1)
-                else:
-                    seg = F.lit(y0) + (x - F.lit(x0)) * F.lit((y1 - y0) / (x1 - x0))
-                expr = F.when((x > F.lit(x0)) & (x <= F.lit(x1)), seg).otherwise(expr)
-            expr = F.when(x > F.lit(bounds[-1]), F.lit(preds[-1])).otherwise(expr)
-            return F.when(x.isNull(), F.lit(None).cast("double")).otherwise(expr)
-
         # the label is fit-time-only: the fitted stage takes [score] alone so
         # unlabeled data passes score-time schema validation (same shape as
         # decision_tree_bucketizer's fitted form)
         return FittedParamTransformer("isotonicCalibrator", [score], out, "Real",
-                                      make_expr,
                                       {"boundaries": bounds, "predictions": preds})
 
     return Estimator("isotonicCalibrator", [score, label], out, "Real", fit)

@@ -19,20 +19,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..feature import Feature
 from ..stages.base import ColumnTransformer, Estimator
 from ..util import cache_scope
 from .vectorizers import FittedVectorizer, VectorSlot
-
-
-def slice_slots_expr(keep: list[int]):
-    """Keep the given slot indices of an array<double> vector column."""
-    def make_expr(c: Column) -> Column:
-        return F.array(*[F.element_at(c, i + 1) for i in keep])
-    return make_expr
 
 
 def min_variance_filter(vec: Feature, min_variance: float = 1e-5,
@@ -48,7 +41,7 @@ def min_variance_filter(vec: Feature, min_variance: float = 1e-5,
         pos = df.select(F.posexplode(F.col(vec.name)).alias("_i", "_x"))
         stats = pos.groupBy("_i").agg(F.var_pop("_x").alias("v")).orderBy("_i").collect()
         keep = [int(r["_i"]) for r in stats if r["v"] is not None and r["v"] > min_variance]
-        return FittedVectorizer("minVariance", [vec], out, slice_slots_expr(keep),
+        return FittedVectorizer("minVariance", [vec], out,
                                 [VectorSlot(vec.name, descriptor=f"slot_{i}") for i in keep],
                                 {"keep": keep})
 
@@ -93,7 +86,6 @@ def sanity_checker(vec: Feature, label: Feature, max_correlation: float = 0.95,
             if dropped_reason is None:
                 keep.append(int(r["_i"]))
         return FittedVectorizer("sanityChecker", [vec, label], out,
-                                lambda c, _y: slice_slots_expr(keep)(c),
                                 [VectorSlot(vec.name, descriptor=f"slot_{i}") for i in keep],
                                 {"keep": keep, "slot_stats": slot_stats})
 

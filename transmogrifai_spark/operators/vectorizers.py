@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..feature import Feature
@@ -59,14 +59,18 @@ class VectorSlot:
 
 
 class FittedVectorizer(ColumnTransformer):
-    """A fitted vectorizer: a Column expression + slot metadata + the fitted
-    parameters as plain data (the save/load + local-scoring contract)."""
+    """A fitted vectorizer: (op_name, params) plus slot metadata. Its Column
+    comes from ``serving.registry.expr_for(op_name, params)``, the builder
+    that also sits beside the op's local fn, so a fit, a reloaded manifest
+    and local scoring share one expression source."""
 
-    def __init__(self, op_name, inputs, output_name, make_expr, slots: list[VectorSlot],
-                 params: dict | None = None):
-        super().__init__(op_name, inputs, output_name, "OPVector", make_expr)
+    def __init__(self, op_name, inputs, output_name, slots: list[VectorSlot],
+                 params: dict):
+        from ..serving.registry import expr_for
+        super().__init__(op_name, inputs, output_name, "OPVector",
+                         expr_for(op_name, params))
         self.slots = slots
-        self.params = params or {}
+        self.params = params
 
 
 def one_hot_estimator(feat: Feature, top_k: int = TOP_K, min_support: int = MIN_SUPPORT,
@@ -94,19 +98,7 @@ def one_hot_estimator(feat: Feature, top_k: int = TOP_K, min_support: int = MIN_
         slots.append(VectorSlot(feat.name, indicator_value="OTHER"))
         if track_nulls:
             slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-
-        def make_expr(c: Column) -> Column:
-            hot = [F.when(c.eqNullSafe(F.lit(v)), 1.0).otherwise(0.0) for v in values]
-            known = F.lit(False)
-            for v in values:
-                known = known | c.eqNullSafe(F.lit(v))
-            other = F.when(c.isNotNull() & ~known, 1.0).otherwise(0.0)
-            parts = hot + [other]
-            if track_nulls:
-                parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
-            return F.array(*parts)
-
-        return FittedVectorizer("oneHot", [feat], out, make_expr, slots,
+        return FittedVectorizer("oneHot", [feat], out, slots,
                                 {"values": values, "track_nulls": track_nulls})
 
     return Estimator("oneHot", [feat], out, "OPVector", fit)
@@ -126,14 +118,7 @@ def real_vectorizer(feat: Feature, fill_with_mean: bool = True,
         slots = [VectorSlot(feat.name, descriptor="value")]
         if track_nulls:
             slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-
-        def make_expr(c: Column) -> Column:
-            parts = [F.coalesce(c.cast("double"), F.lit(fill))]
-            if track_nulls:
-                parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
-            return F.array(*parts)
-
-        return FittedVectorizer("realVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("realVec", [feat], out, slots,
                                 {"fill": fill, "track_nulls": track_nulls})
 
     return Estimator("realVec", [feat], out, "OPVector", fit)
@@ -155,14 +140,7 @@ def integral_vectorizer(feat: Feature, track_nulls: bool = True,
         slots = [VectorSlot(feat.name, descriptor="value")]
         if track_nulls:
             slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-
-        def make_expr(c: Column) -> Column:
-            parts = [F.coalesce(c.cast("double"), F.lit(fill))]
-            if track_nulls:
-                parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
-            return F.array(*parts)
-
-        return FittedVectorizer("integralVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("integralVec", [feat], out, slots,
                                 {"fill": fill, "track_nulls": track_nulls})
 
     return Estimator("integralVec", [feat], out, "OPVector", fit)
@@ -172,17 +150,10 @@ def binary_vectorizer(feat: Feature, track_nulls: bool = True,
                       output_name: str | None = None) -> ColumnTransformer:
     """BinaryVectorizer.scala:57 — (value, isNull) slots; no fit needed."""
     out = output_name or f"{feat.name}_vec"
-
-    def make_expr(c: Column) -> Column:
-        parts = [F.when(c.eqNullSafe(F.lit(True)), 1.0).otherwise(0.0)]
-        if track_nulls:
-            parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
-        return F.array(*parts)
-
     slots = [VectorSlot(feat.name, descriptor="value")]
     if track_nulls:
         slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-    return FittedVectorizer("binaryVec", [feat], out, make_expr, slots,
+    return FittedVectorizer("binaryVec", [feat], out, slots,
                             {"track_nulls": track_nulls})
 
 
@@ -197,17 +168,7 @@ def hashing_vectorizer(feat: Feature, num_features: int = 512, seed: int = 42,
     """
     out = output_name or f"{feat.name}_vec"
     slots = [VectorSlot(feat.name, descriptor=f"hash_{i}") for i in range(num_features)]
-
-    def make_expr(tokens: Column) -> Column:
-        toks = F.coalesce(tokens, F.array().cast("array<string>"))  # null -> zero vector
-        idx = F.transform(toks, lambda t: F.pmod(F.xxhash64(t, F.lit(seed)), F.lit(num_features)))
-        buckets = F.sequence(F.lit(0), F.lit(num_features - 1))
-        return F.transform(
-            buckets,
-            lambda b: F.size(F.filter(idx, lambda i: i == b)).cast("double"),
-        )
-
-    return FittedVectorizer("hashingTF", [feat], out, make_expr, slots,
+    return FittedVectorizer("hashingTF", [feat], out, slots,
                             {"num_features": num_features, "seed": seed})
 
 
@@ -225,16 +186,7 @@ def geolocation_vectorizer(feat: Feature, track_nulls: bool = True,
         slots = [VectorSlot(feat.name, descriptor=d) for d in ("lat", "lon", "accuracy")]
         if track_nulls:
             slots.append(VectorSlot(feat.name, indicator_value="NullIndicatorValue"))
-
-        def make_expr(col: Column) -> Column:
-            ok = col.isNotNull() & (F.size(col) >= 3)
-            parts = [F.when(ok, F.element_at(col, i + 1)).otherwise(F.lit(fills[i]))
-                     for i in range(3)]
-            if track_nulls:
-                parts.append(F.when(ok, 0.0).otherwise(1.0))
-            return F.array(*parts)
-
-        return FittedVectorizer("geoVec", [feat], out, make_expr, slots,
+        return FittedVectorizer("geoVec", [feat], out, slots,
                                 {"fills": fills, "track_nulls": track_nulls})
 
     return Estimator("geoVec", [feat], out, "OPVector", fit)
@@ -242,10 +194,7 @@ def geolocation_vectorizer(feat: Feature, track_nulls: bool = True,
 
 def combine_vectors(vecs: list[Feature], output_name: str = "features") -> ColumnTransformer:
     """VectorsCombiner.scala:51 — concat array-vectors + merge slot metadata."""
-    def make_expr(*cols: Column) -> Column:
-        return F.concat(*cols)
-
-    st = FittedVectorizer("vectorsCombiner", list(vecs), output_name, make_expr, [])
+    st = FittedVectorizer("vectorsCombiner", list(vecs), output_name, [], {})
     # RFF: a combiner regenerates over the surviving vector inputs
     st.rebuilder = lambda survivors: combine_vectors(survivors, output_name)
     return st
@@ -345,7 +294,7 @@ def _fit_batched(stage, df: DataFrame, cat_cols, int_cols, real_cols, bin_cols,
             n = row[f"{f.name}__n"]
             real_fills[f.name] = float(row[f"{f.name}__s"]) / n if n else 0.0
 
-    # assemble the fused expression + slots + serializable params
+    # assemble the slots + serializable params (the registry builds the Column)
     slots: list[VectorSlot] = []
     col_specs: list[dict] = []
     for f in stage.inputs:
@@ -372,10 +321,8 @@ def _fit_batched(stage, df: DataFrame, cat_cols, int_cols, real_cols, bin_cols,
             if track_nulls:
                 slots.append(VectorSlot(f.name, indicator_value="NullIndicatorValue"))
 
-    params = {"columns": col_specs, "track_nulls": track_nulls}
-    from ..serving.registry import expr_for
-    return FittedVectorizer("transmogrify", list(stage.inputs), output_name,
-                            expr_for("transmogrify", params), slots, params)
+    return FittedVectorizer("transmogrify", list(stage.inputs), output_name, slots,
+                            {"columns": col_specs, "track_nulls": track_nulls})
 
 
 def transmogrify(features: list[Feature], top_k: int = TOP_K,

@@ -448,4 +448,4 @@ def predictor_stage(model, features, output_name: str = "score"):
                                                 "rf_multi", "nb_multi",
                                                 "mlp") else "RealNN"
     return FittedParamTransformer("mlPredictor", [features], output_name,
-                                  out_type, _ml_pred_expr(params), params)
+                                  out_type, params)

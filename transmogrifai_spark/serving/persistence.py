@@ -4,9 +4,11 @@ Re-expression of OpWorkflowModelWriter / Reader
 (core/.../OpWorkflowModelWriter.scala:56, OpWorkflowModelReader.scala:63) and
 the per-stage JSON read/write (features/.../stages/
 OpPipelineStageReaderWriter.scala): every fitted stage serializes to
-(op_name, inputs, output, output_type, params, slots) and is rebuilt through
-the serving registry — the same registry that powers local scoring, so a
-loaded model is guaranteed to carry only stages both paths support.
+(op_name, inputs, output, output_type, params, slots) and is rebuilt from
+(op_name, params) by the fitted-stage constructors, whose Column comes from
+the serving registry that also holds the local fns — a loaded stage scores
+exactly as it did when fitted. The manifest is written and read through
+``sources/layout.py`` (``write_atomic`` / ``read_sidecar``).
 """
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import os
 from typing import Any
 
 from ..feature import Feature
+from ..sources.layout import read_sidecar, write_atomic
 from ..stages.base import ColumnTransformer
 from ..types import tag
 from ..workflow import WorkflowModel
@@ -73,30 +76,23 @@ def save_model(model: WorkflowModel, path: str) -> None:
         from dataclasses import asdict, is_dataclass
         manifest["rff"] = asdict(model.rff) if is_dataclass(model.rff) \
             else model.rff
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=2, default=_json_default)
+    write_atomic(os.path.join(path, MANIFEST),
+                 json.dumps(manifest, indent=2, default=_json_default))
 
 
 def _rebuild_stage(d: dict) -> ColumnTransformer:
     feats = [Feature(name=n, type_tag=tag(t), source_expr=n)
              for n, t in zip(d["inputs"], d["input_types"])]
-    make_expr = registry.expr_for(d["op"], d["params"])
     slots = [VectorSlot(**s) for s in d["slots"]]
     if slots or d["output_type"] == "OPVector":
-        st = FittedVectorizer(d["op"], feats, d["output"], make_expr, slots,
-                              d["params"])
-    else:
-        from ..operators.numeric import FittedParamTransformer
-        st = FittedParamTransformer(d["op"], feats, d["output"],
-                                    d["output_type"], make_expr, d["params"])
-    return st
+        return FittedVectorizer(d["op"], feats, d["output"], slots, d["params"])
+    from ..operators.numeric import FittedParamTransformer
+    return FittedParamTransformer(d["op"], feats, d["output"], d["output_type"],
+                                  d["params"])
 
 
 def load_model(path: str) -> WorkflowModel:
-    with open(os.path.join(path, MANIFEST)) as f:
-        manifest = json.load(f)
-    if manifest.get("format_version") != FORMAT_VERSION:
-        raise ValueError(f"unsupported model format {manifest.get('format_version')}")
+    manifest = read_sidecar(os.path.join(path, MANIFEST), format_version=FORMAT_VERSION)
     layers = [[_rebuild_stage(d) for d in layer] for layer in manifest["layers"]]
     outputs = {s.output_name: s.output for layer in layers for s in layer}
     result_features = [outputs[n] for n in manifest["result_features"] if n in outputs]

@@ -1,16 +1,22 @@
-"""Stage builder registry: fitted params -> (Spark expression, local row fn).
+"""Stage builder registry: a fitted stage's (op_name, params) -> its Spark
+Column builder and its local row fn.
 
 This is the contract behind the reference's ``OpTransformer`` triple path
 (features/.../stages/OpPipelineStages.scala:526-550: ``transform`` /
 ``transformRow`` / ``transformKeyValue``) and its save/load machinery
-(OpPipelineStageReaderWriter.scala): every fitted stage is reducible to
-(op_name, params), from which BOTH the distributed Column expression and a
-pure-Python row function can be rebuilt. Spark path and local path are
-asserted equal in tests (the reference's OpTransformerSpec law,
-features/.../test/OpTransformerSpec.scala:53-91).
+(OpPipelineStageReaderWriter.scala). A fitted stage is (op_name, params):
+``FittedVectorizer`` and ``FittedParamTransformer`` take no expression, they
+build their Column here through ``expr_for``, at fit time and when a manifest
+is loaded alike. This module is the only place a fitted stage's Column is
+written, beside the op's local fn, so the fitted, reloaded and local forms
+cannot drift apart; a fit records in ``params`` every argument its
+expression reads. Spark path and local path are asserted equal in tests (the
+reference's OpTransformerSpec law, features/.../test/OpTransformerSpec.scala:53-91).
 
 Local fns receive the input values (already Python scalars) and return the
-output value; None propagates per the reference's null semantics.
+output value; None propagates per the reference's null semantics. An op
+registered without a local fn (``smartTextMapVec``, ``dropIndicesBy``) saves
+and loads; ``compile_local`` rejects it at compile time.
 """
 from __future__ import annotations
 
@@ -414,6 +420,39 @@ def _text_map_len_expr(p):
     return make_expr
 
 
+def _smart_text_map_expr(p):
+    from ..functions.text import tokenize
+    strategies, pivots = p["strategies"], p["pivots"]
+    n, track_nulls = p["hash_features"], p["track_nulls"]
+
+    def make_expr(m: Column) -> Column:
+        # segments: each either a 1-element array (scalar slot) or the
+        # hash-bucket array; one flatten assembles the vector
+        segments: list[Column] = []
+        for k in sorted(strategies):
+            val = F.try_element_at(m, F.lit(k))
+            if strategies[k] == "pivot":
+                known = F.lit(False)
+                for v in pivots.get(k, []):
+                    segments.append(F.array(
+                        F.when(val.eqNullSafe(F.lit(v)), 1.0).otherwise(0.0)))
+                    known = known | val.eqNullSafe(F.lit(v))
+                segments.append(F.array(
+                    F.when(val.isNotNull() & ~known, 1.0).otherwise(0.0)))
+            else:
+                idx = F.transform(tokenize(val),
+                                  lambda t: F.pmod(F.xxhash64(t, F.lit(42)), F.lit(n)))
+                buckets = F.sequence(F.lit(0), F.lit(n - 1))
+                segments.append(F.transform(buckets, lambda b: F.size(
+                    F.filter(idx, lambda i: i == b)).cast("double")))
+            if track_nulls:
+                segments.append(F.array(F.when(val.isNull(), 1.0).otherwise(0.0)))
+        return F.flatten(F.array(*segments))
+    return make_expr
+
+
+register("smartTextMapVec", _smart_text_map_expr, None)
+
 register("textMapLenVec", _text_map_len_expr,
          lambda p: (lambda m: [float(len((m or {}).get(k) or "")) for k in p["keys"]]))
 
@@ -585,12 +624,26 @@ register("fillMean",
 
 
 def _stdscaler_expr(p):
-    mean, std = p["mean"], p["std"]
-    return lambda c: (c.cast("double") - F.lit(mean)) / F.lit(std)
+    # absent flags mean on: manifests written before they were recorded
+    with_mean, with_std = p.get("with_mean", True), p.get("with_std", True)
+
+    def make_expr(c: Column) -> Column:
+        x = c.cast("double")
+        if with_mean:
+            x = x - F.lit(p["mean"])
+        if with_std:
+            x = x / F.lit(p["std"])
+        return x
+    return make_expr
 
 
-register("stdScaler", _stdscaler_expr,
-         lambda p: (lambda x: None if x is None else (float(x) - p["mean"]) / p["std"]))
+def _stdscaler_local(p):
+    mean = p["mean"] if p.get("with_mean", True) else 0.0
+    std = p["std"] if p.get("with_std", True) else 1.0
+    return lambda x: None if x is None else (float(x) - mean) / std
+
+
+register("stdScaler", _stdscaler_expr, _stdscaler_local)
 
 
 def _bucket_local(splits):
@@ -611,13 +664,46 @@ def _bucket_local(splits):
     return fn
 
 
+def _bucket_onehot_local(splits, track_nulls):
+    """Bucket one-hot (+ null slot); out-of-range values are all zeros."""
+    idx_fn, nb = _bucket_local(splits), len(splits) - 1
+
+    def fn(x):
+        idx = idx_fn(x)
+        out = [1.0 if idx == i else 0.0 for i in range(nb)]
+        if track_nulls:
+            out.append(1.0 if x is None else 0.0)
+        return out
+    return fn
+
+
 def _bucket_expr_from_params(p):
     from ..operators.numeric import _bucket_expr
     return _bucket_expr([float(v) for v in p["splits"]])
 
 
-register("numericBucketizer", _bucket_expr_from_params,
-         lambda p: _bucket_local(p["splits"]))
+def _numeric_bucketizer_expr(p):
+    idx_expr = _bucket_expr_from_params(p)
+    if not p.get("as_onehot"):  # absent: the index form
+        return idx_expr
+    nb = len(p["splits"]) - 1
+
+    def make_expr(c: Column) -> Column:
+        idx = idx_expr(c)
+        parts = [F.when(idx == i, 1.0).otherwise(0.0) for i in range(nb)]
+        if p["track_nulls"]:
+            parts.append(F.when(c.isNull(), 1.0).otherwise(0.0))
+        return F.array(*parts)
+    return make_expr
+
+
+def _numeric_bucketizer_local(p):
+    if not p.get("as_onehot"):
+        return _bucket_local(p["splits"])
+    return _bucket_onehot_local(p["splits"], p["track_nulls"])
+
+
+register("numericBucketizer", _numeric_bucketizer_expr, _numeric_bucketizer_local)
 register("percentileCalibrator", _bucket_expr_from_params,
          lambda p: _bucket_local(p["splits"]))
 register("dtBucketizer",
@@ -631,16 +717,14 @@ def _dt_map_bucket_expr_from_params(p):
 
 
 def _dt_map_bucket_local(p):
+    per_key = [(k, _bucket_onehot_local(p["splits"][k], p["track_nulls"]))
+               for k in p["keys"]]
+
     def fn(m, *_rest):
         out = []
-        for k in p["keys"]:
+        for k, onehot in per_key:
             v = None if m is None else m.get(k)
-            v = None if v is None else float(v)
-            idx = _bucket_local(p["splits"][k])(v)
-            nb = len(p["splits"][k]) - 1
-            out += [1.0 if idx == i else 0.0 for i in range(nb)]
-            if p["track_nulls"]:
-                out.append(1.0 if v is None else 0.0)
+            out += onehot(None if v is None else float(v))
         return out
     return fn
 
@@ -741,23 +825,15 @@ register("indexToString", _index_to_string_expr,
                     if x is not None and 0 <= int(x) < len(p["labels"]) else p["unseen"]))
 
 
-def _scaling_args(p):
-    a = p["scaling"]
-    if isinstance(a, dict):
-        return a
-    return {"family": a.family, "slope": a.slope, "intercept": a.intercept,
-            "log_base": a.log_base}
-
-
 def _scaler_expr(p):
-    a = _scaling_args(p)
+    a = p["scaling"]
     if a["family"] == "linear":
         return lambda c: c * F.lit(a["slope"]) + F.lit(a["intercept"])
     return lambda c: F.log(a["log_base"], c)
 
 
 def _scaler_local(p):
-    a = _scaling_args(p)
+    a = p["scaling"]
     if a["family"] == "linear":
         return lambda x: None if x is None else float(x) * a["slope"] + a["intercept"]
     return lambda x: (None if x is None or float(x) <= 0
@@ -765,19 +841,23 @@ def _scaler_local(p):
 
 
 def _descaler_expr(p):
-    a = _scaling_args(p)
+    a = p["scaling"]
     if a["family"] == "linear":
         return lambda c: (c - F.lit(a["intercept"])) / F.lit(a["slope"])
     return lambda c: F.pow(F.lit(a["log_base"]), c)
 
 
 def _descaler_local(p):
-    a = _scaling_args(p)
+    a = p["scaling"]
     if a["family"] == "linear":
         return lambda x: None if x is None else (float(x) - a["intercept"]) / a["slope"]
     return lambda x: None if x is None else a["log_base"] ** float(x)
 
 
 register("alias", lambda p: (lambda c: c), lambda p: (lambda x: x))
+register("dropIndicesBy",
+         lambda p: (lambda c: F.array(*[F.try_element_at(c, F.lit(i + 1))
+                                        for i in p["keep"]])),
+         None)
 register("scaler", _scaler_expr, _scaler_local)
 register("descaler", _descaler_expr, _descaler_local)

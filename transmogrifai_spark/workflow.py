@@ -141,6 +141,7 @@ class WorkflowModel:
         without the model object."""
         import json
         import os
+        from .sources.layout import write_atomic
         scores = self.score(df, keep_intermediate=keep_intermediate)
         scores.write.mode("overwrite").format(fmt).save(path)
         from .operators.vectorizers import collect_slots
@@ -152,8 +153,8 @@ class WorkflowModel:
                   "indicator_value": s.indicator_value, "descriptor": s.descriptor}
                  for s in collect_slots(self, f.name)]}
             for f in self.result_features]}
-        with open(os.path.join(path, "_feature_metadata.json"), "w") as fh:
-            json.dump(meta, fh, indent=2)
+        write_atomic(os.path.join(path, "_feature_metadata.json"),
+                     json.dumps(meta, indent=2))
 
 
 class Workflow:
